@@ -214,14 +214,14 @@ object Scale {
       // J8 early-exit decision: forced-segmented adaptive IM (the sp10
       // shape), exact union form vs RANK early-exit, same corpus
       run("seg_exact", 2) {
-        SpatialJoin.de9imAdaptive(triS, suppS, minPoints = 4).mcount() }
+        SpatialJoin.de9im(triS, suppS, minPoints = 4).mcount() }
       run("seg_earlyexit", 2) {
-        SpatialJoin.de9imAdaptive(triS, suppS, minPoints = 4,
+        SpatialJoin.de9im(triS, suppS, minPoints = 4,
           earlyExit = true).mcount() }
       val segDiff = if (!want("seg")) -1L else
-        SpatialJoin.de9imAdaptive(triS, suppS, minPoints = 4)
+        SpatialJoin.de9im(triS, suppS, minPoints = 4)
           .select(col("s_id"), col("t_id"), col("intersects"))
-          .exceptAll(SpatialJoin.de9imAdaptive(triS, suppS, minPoints = 4,
+          .exceptAll(SpatialJoin.de9im(triS, suppS, minPoints = 4,
             earlyExit = true)
             .select(col("s_id"), col("t_id"), col("intersects")))
           .mcount()

@@ -36,13 +36,18 @@ case class SpatialLink(source: DataFrame, target: DataFrame,
     * verified pair set is identical under every setting. */
   def thetaGranularity(g: String): SpatialLink = copy(granularity = g)
 
-  /** Full holistic DE-9IM interlinking. */
-  def de9im(): DataFrame =
+  /** Full holistic DE-9IM interlinking. The balanced and fine-grained
+    * paths are separate joins, so asking for both is rejected rather
+    * than silently running only one. */
+  def de9im(): DataFrame = {
+    require(!(useBalanced && useFineGrained),
+      "balanced() and fineGrained() cannot be combined in de9im()")
     if (useBalanced) SkewBalancing.balancedDe9im(source, target,
       granularity = granularity)
     else if (useFineGrained) SpatialJoin.de9imFineGrained(source, target,
       granularity = granularity)
     else SpatialJoin.de9im(source, target, granularity)
+  }
 
   /** Single-relation spatial join → (s_id, t_id). */
   def relate(relation: String): DataFrame =

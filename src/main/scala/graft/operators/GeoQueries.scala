@@ -104,10 +104,10 @@ object GeoQueries {
   // every per-partition-machinery consumer of the same memos SLOWER
   // (TypedGiant/Progressive/SkewBalancing build per-partition
   // indexes/budgets: sp13 0.66 -> 1.09 s, pr11 1.39 -> 2.58 s, sp12
-  // 1.32 -> 2.67 s fresh-JVM A/B). The verification parallelism fix
-  // lives where the cost is -- SpatialJoin.candidatePairs spreads the
-  // NARROW pair frame before the blob joins -- and the corpora keep
-  // their natural scan partitioning.
+  // 1.32 -> 2.67 s fresh-JVM A/B). The corpora keep their natural scan
+  // partitioning; SpatialJoin.candidatePairs spreads the NARROW pair
+  // frame before the blob joins whenever an input reads as fewer
+  // partitions than defaultParallelism, as these memos do at gate scale.
 
   private[graft] def partBoxes(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "partBoxes") {
@@ -326,11 +326,11 @@ object GeoQueries {
     * the line-dimension `touches`/`within`/`coveredby` semantics are
     * hash-checked (every prior gate relation was areal or 0-D). */
   def sp8LineBoxDe9im(s: SparkSession, dir: String): DataFrame =
-    // spreadVerify: the segment corpus is orders-sized, so the pair
-    // volume times per-pair interval IM is the gate's cost center
-    // (mid-r16 bench: 0.44 s with a spread exchange vs 1.50 without)
-    SpatialJoin.de9im(orderSegments(s, dir), supplierBoxes(s, dir),
-      spreadVerify = true)
+    // the segment corpus is orders-sized, so the pair volume times
+    // per-pair interval IM is the gate's cost center; the single-
+    // partition corpora make candidatePairs spread it (4 cores, sf0.1:
+    // 1.1 s spread vs 1.7 s in place)
+    SpatialJoin.de9im(orderSegments(s, dir), supplierBoxes(s, dir))
       .select(col("s_id"), col("t_id"), col("intersects"), col("crosses"),
         col("touches"), col("within"), col("coveredby"))
       .orderBy(col("s_id"), col("t_id"))
@@ -347,12 +347,12 @@ object GeoQueries {
     * exact union-of-partial-matrices algorithm is hash-checked against
     * the closed-form SAT oracle. */
   def sp10SegmentedIm(s: SparkSession, dir: String): DataFrame =
-    // spreadVerify: the forced segmented branch costs ~ms of JTS per
-    // pair, so the narrow pair frame spreads across cores before the
-    // blob joins (serial 3.75 s vs spread 1.04 s at sf0.1 — see
-    // SpatialJoin.candidatePairs)
-    SpatialJoin.de9imAdaptive(customerTriangles(s, dir), supplierBoxes(s, dir),
-      minPoints = 4, spreadVerify = true)
+    // the forced segmented branch costs ~ms of JTS per pair; the
+    // single-partition corpora make candidatePairs spread the narrow
+    // pair frame across cores before the blob joins (4 cores, sf0.1:
+    // 2.1 s spread vs 5.7 s in place)
+    SpatialJoin.de9im(customerTriangles(s, dir), supplierBoxes(s, dir),
+      minPoints = 4)
       .select(col("s_id"), col("t_id"), col("intersects"), col("contains"),
         col("within"), col("touches"), col("overlaps"))
       .orderBy(col("s_id"), col("t_id"))
@@ -364,10 +364,10 @@ object GeoQueries {
     * the verification are both hash-checked without modelling the slab
     * clipping in SQL. */
   def sp11FineGrainedIm(s: SparkSession, dir: String): DataFrame =
-    // spreadVerify: per-pair cost = the sub-envelope exists() filter
-    // plus JTS st_im on survivors (measured 1.10 s spread / 1.69 not)
-    SpatialJoin.de9imFineGrained(customerTriangles(s, dir), supplierBoxes(s, dir),
-      spreadVerify = true)
+    // per-pair cost = the sub-envelope exists() filter plus JTS st_im
+    // on survivors; spread by candidatePairs like sp10 (4 cores, sf0.1:
+    // 1.3 s spread vs 2.3 s in place)
+    SpatialJoin.de9imFineGrained(customerTriangles(s, dir), supplierBoxes(s, dir))
       .filter(col("intersects"))
       .select(col("s_id"), col("t_id"), col("contains"), col("within"),
         col("touches"), col("overlaps"))

@@ -21,8 +21,6 @@ import graft.functions.GeomFunctions._
   */
 object SkewBalancing {
 
-  /** Skewed-target id frame from the explicit cost model; empty when
-    * there are no candidates at all (avg/stddev aggregate NULLs). */
   /** Hot-target ids by z-scored verification cost. The stats pass runs
     * over NARROW candidates (ids + MBRs) with the point count joined
     * from the entity frame — the wide geometry-carrying join is never
@@ -46,6 +44,9 @@ object SkewBalancing {
       .select(col("t_id"))
   }
 
+  private def verify(pairs: DataFrame): DataFrame =
+    SpatialJoin.imRows(pairs, st_im(col("s_geom"), col("t_geom")))
+
   /** DE-9IM with cost-balanced verification placement. */
   def balancedDe9im(source: DataFrame, target: DataFrame,
                     zThreshold: Double = 3.0,
@@ -53,10 +54,6 @@ object SkewBalancing {
     val theta = SpatialJoin.computeTheta(source, granularity)
     val cands = SpatialJoin.candidatePairs(source, target, theta)
     val skewedIds = skewSplit(source, target, theta, zThreshold)
-
-    val verify = (df: DataFrame) => df
-      .withColumn("im", st_im(col("s_geom"), col("t_geom")))
-      .select(col("s_id"), col("t_id"), col("im.*"))
 
     // Broadcast membership split: cheap pairs stay put, skewed pairs
     // spread round-robin across all partitions.
@@ -127,10 +124,6 @@ object SkewBalancing {
     val tx = theta.x; val ty = theta.y
     val cands = SpatialJoin.candidatePairs(source, target, theta)
     val skewedIds = skewSplit(source, target, theta, zThreshold)
-
-    val verify = (df: DataFrame) => df
-      .withColumn("im", st_im(col("s_geom"), col("t_geom")))
-      .select(col("s_id"), col("t_id"), col("im.*"))
     val cheap = cands.join(broadcast(skewedIds), Seq("t_id"), "left_anti")
 
     // Hot-target geometries: few rows by construction → broadcast.

@@ -41,14 +41,7 @@ object SpatialJoin {
     * exactly once per row (see [[graft.functions.ExprBarrier]]). */
   def entities(df: DataFrame, id: Column, wkt: Column,
                extra: (String, Column)*): DataFrame =
-    df.select(id.cast("string").as("id") +: barrier(st_geomfromwkt(wkt)).as("geom") +:
-        extra.map { case (n, c) => c.as(n) }: _*)
-      .filter(col("geom").isNotNull)
-      .withColumn("env", barrier(st_envelope(col("geom"))))
-      .select(col("id") +: col("geom") +:
-        col("env.minx").as("minx") +: col("env.miny").as("miny") +:
-        col("env.maxx").as("maxx") +: col("env.maxy").as("maxy") +:
-        extra.map { case (n, _) => col(n) }: _*)
+    entitiesOf(df, id, st_geomfromwkt(wkt), extra)
 
   /** [[entities]] over parquet-native WKB geometry bytes
     * ([[graft.functions.StGeomFromWkb]]) — production geospatial
@@ -57,10 +50,13 @@ object SpatialJoin {
     * validity filter and canonical normalization. */
   def entitiesFromWkb(df: DataFrame, id: Column, wkb: Column,
                       extra: (String, Column)*): DataFrame =
-    df.select(id.cast("string").as("id") +:
-        // qualified: Spark 4.1's own functions._ also exports an
-        // st_geomfromwkb (its geospatial preview surface)
-        barrier(graft.functions.GeomFunctions.st_geomfromwkb(wkb)).as("geom") +:
+    // qualified: Spark 4.1's own functions._ also exports an
+    // st_geomfromwkb (its geospatial preview surface)
+    entitiesOf(df, id, graft.functions.GeomFunctions.st_geomfromwkb(wkb), extra)
+
+  private def entitiesOf(df: DataFrame, id: Column, geom: Column,
+                         extra: Seq[(String, Column)]): DataFrame =
+    df.select(id.cast("string").as("id") +: barrier(geom).as("geom") +:
         extra.map { case (n, c) => c.as(n) }: _*)
       .filter(col("geom").isNotNull)
       .withColumn("env", barrier(st_envelope(col("geom"))))
@@ -197,11 +193,8 @@ object SpatialJoin {
   def relateBloomPruned(source: DataFrame, target: DataFrame,
                         relation: String): DataFrame = {
     val theta = computeTheta(source)
-    candidatePairsNarrowPruned(source, target, theta)
-      .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
-      .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
-      .filter(st_predicate(col("s_geom"), col("t_geom"), relation))
-      .select(col("s_id"), col("t_id"))
+    qualifying(withGeoms(candidatePairsNarrowPruned(source, target, theta),
+      source, target), relation)
   }
 
   /** Candidate pairs after tile join + MBR filter + reference-point
@@ -209,69 +202,64 @@ object SpatialJoin {
     * Entity ids must be unique per side (the engine-wide contract,
     * like the reference's originalID).
     *
-    * `spreadVerify` (round 16, replacing r15's unconditional count-less
-    * repartition): when the caller's downstream verification is
-    * compute-dense (~ms of JTS per pair — the forced segmented-IM
-    * path), the NARROW pair frame is hash-spread on s_id over an
+    * Verification placement follows one observable rule: when an input
+    * reads as fewer than defaultParallelism partitions
+    * ([[graft.spark.Spread.isSpread]], the test Spread applies to
+    * scans), the NARROW pair frame is hash-spread on s_id over an
     * EXPLICIT defaultParallelism partition count before the blob
-    * joins. Explicit because the r15 count-less form was
-    * REPARTITION_BY_COL, which AQE coalesces by BYTES — ~50 B/pair
-    * kept the whole exchange under one 64 KiB floor partition, so the
-    * committed r15 bench still ran sp10's verification serially
-    * (executed plan: `AQEShuffleRead coalesced` to 1, 9 single-task
-    * stages, 4.3 s; 1.0 s spread). A user-specified count is exempt
-    * from AQE coalescing by contract, and it derives from cluster
-    * cores, not a constant: rows are narrow, so even billions of pairs
-    * over total-cores partitions stay ~100 MB-sized, and a production
-    * sort-merge blob join REUSES the s_id hash partitioning. Default
-    * OFF because cheap-verification consumers measurably pay for the
-    * extra exchange + task count (paired A/B at sf0.1: sp11 1.26 →
-    * 1.61, sp12 1.39 → 1.84, sp4 0.36 → 0.63 with the spread forced
-    * on them, while sp10 goes 3.75 → 1.04 with it). */
-  def candidatePairs(source: DataFrame, target: DataFrame, theta: Theta,
-                     spreadVerify: Boolean = false): DataFrame = {
+    * joins; otherwise verification stays in place. Explicit because a
+    * count-less repartition is REPARTITION_BY_COL, which AQE coalesces
+    * by BYTES — ~50 B/pair kept the whole exchange under one 64 KiB
+    * floor partition and ran verification serially. A user-specified
+    * count is exempt from AQE coalescing, rows are narrow (billions of
+    * pairs over total-cores partitions stay ~100 MB-sized), and a
+    * sort-merge blob join REUSES the s_id hash partitioning.
+    *
+    * Measured with the spread forced on every call (4 cores, sf0.1
+    * gate corpora read as 1 partition, the linkbench inputs as 4):
+    * sp10 5.7 → 2.1 s, sp8 1.7 → 1.1 s, sp11 2.3 → 1.3 s; the cheap
+    * single-partition gates (sp1–sp7, sp12, sp18, sp19) within noise;
+    * linkbench gia_giant warm_s 1.34 → 1.85 s (verification already
+    * ran on every core, the extra exchange only cost) and gia_boxes
+    * within noise. The partition count separates every case that
+    * gained from every case that lost. */
+  def candidatePairs(source: DataFrame, target: DataFrame,
+                     theta: Theta): DataFrame = {
     val narrow = candidatePairsNarrow(source, target, theta)
-    val spread =
-      if (spreadVerify)
-        narrow.repartition(
-          source.sparkSession.sparkContext.defaultParallelism, col("s_id"))
-      else narrow
-    spread
+    val placed =
+      if (Seq(source, target).forall(graft.spark.Spread.isSpread)) narrow
+      else narrow.repartition(
+        source.sparkSession.sparkContext.defaultParallelism, col("s_id"))
+    withGeoms(placed, source, target)
+  }
+
+  /** Join the WKB blobs back onto narrow (s_id, t_id, ...) pairs. */
+  private def withGeoms(pairs: DataFrame, source: DataFrame,
+                        target: DataFrame): DataFrame =
+    pairs
       .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
       .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
-  }
+
+  /** (s_id, t_id) of the pairs whose geometries satisfy `relation`. */
+  private def qualifying(pairs: DataFrame, relation: String): DataFrame =
+    pairs.filter(st_predicate(col("s_geom"), col("t_geom"), relation))
+      .select(col("s_id"), col("t_id"))
+
+  /** Ids plus the DE-9IM struct `im` (string + relation booleans)
+    * flattened into columns. */
+  private[operators] def imRows(pairs: DataFrame, im: Column): DataFrame =
+    pairs.withColumn("im", im).select(col("s_id"), col("t_id"), col("im.*"))
 
   /** Holistic DE-9IM: verify every candidate pair once; emit ids, the
     * DE-9IM string, and the ten relation booleans. Matches GIA.nt
     * semantics: only MBR-intersecting pairs are verified
     * (`linkers/GIAnt.scala:32-37`).
     *
-    * Verification is ADAPTIVE by default (identical results, spec-
-    * asserted): analytic interval IM for rectangle pairs, exact
-    * segmented IM above the point cutoff, plain JTS relate otherwise —
-    * rectangle-heavy workloads skip JTS entirely. */
-  def de9im(source: DataFrame, target: DataFrame, theta: Theta,
-            spreadVerify: Boolean = false): DataFrame =
-    candidatePairs(source, target, theta, spreadVerify = spreadVerify)
-      .withColumn("im", st_im_adaptive(col("s_geom"), col("t_geom"),
-        theta.x, theta.y))
-      .select(col("s_id"), col("t_id"), col("im.*"))
-
-  def de9im(source: DataFrame, target: DataFrame): DataFrame =
-    de9im(source, target, computeTheta(source))
-
-  def de9im(source: DataFrame, target: DataFrame,
-            spreadVerify: Boolean): DataFrame =
-    de9im(source, target, computeTheta(source), spreadVerify = spreadVerify)
-
-  def de9im(source: DataFrame, target: DataFrame,
-            granularity: String): DataFrame =
-    de9im(source, target, computeTheta(source, granularity))
-
-  /** DE-9IM with adaptive verification: analytic IM for rectangles,
-    * exact segmented IM for large polygon pairs (interaction-
-    * neighbourhood cost), plain relate otherwise. Results identical to
-    * [[de9im]]; use when operand size varies wildly.
+    * Verification is ADAPTIVE (identical results, spec-asserted):
+    * analytic interval IM for rectangle pairs, exact segmented IM for
+    * pairs above `minPoints` (interaction-neighbourhood cost), plain
+    * JTS relate otherwise — rectangle-heavy workloads skip JTS
+    * entirely. `granularity` is [[computeTheta]]'s statistic.
     *
     * `earlyExit = true` switches the segmented branch to the
     * reference's RANK-ordered early-exit accumulation (J8,
@@ -279,15 +267,11 @@ object SpatialJoin {
     * intersects decision is contractual (partial accumulation may
     * under-set exterior entries), so it is opt-in and default-off;
     * the exact union form stays the default. */
-  def de9imAdaptive(source: DataFrame, target: DataFrame,
-                    minPoints: Int = 64,
-                    earlyExit: Boolean = false,
-                    spreadVerify: Boolean = false): DataFrame = {
-    val theta = computeTheta(source)
-    candidatePairs(source, target, theta, spreadVerify = spreadVerify)
-      .withColumn("im", st_im_adaptive(col("s_geom"), col("t_geom"),
-        theta.x, theta.y, minPoints, earlyExit))
-      .select(col("s_id"), col("t_id"), col("im.*"))
+  def de9im(source: DataFrame, target: DataFrame, granularity: String = "avg",
+            minPoints: Int = 64, earlyExit: Boolean = false): DataFrame = {
+    val theta = computeTheta(source, granularity)
+    imRows(candidatePairs(source, target, theta), st_im_adaptive(
+      col("s_geom"), col("t_geom"), theta.x, theta.y, minPoints, earlyExit))
   }
 
   /** Single-relation spatial join (DS-JedAI `SpatialJoinExp`): emit
@@ -295,9 +279,7 @@ object SpatialJoin {
   def relate(source: DataFrame, target: DataFrame, relation: String,
              granularity: String = "avg"): DataFrame = {
     val theta = computeTheta(source, granularity)
-    candidatePairs(source, target, theta)
-      .filter(st_predicate(col("s_geom"), col("t_geom"), relation))
-      .select(col("s_id"), col("t_id"))
+    qualifying(candidatePairs(source, target, theta), relation)
   }
 
   /** Overlay MEASURE aggregation: per target entity, the number of
@@ -338,8 +320,7 @@ object SpatialJoin {
     * preserved (sub-envelopes cover the geometry). */
   def de9imFineGrained(source: DataFrame, target: DataFrame,
                        maxEnvs: Int = 16,
-                       granularity: String = "avg",
-                       spreadVerify: Boolean = false): DataFrame = {
+                       granularity: String = "avg"): DataFrame = {
     val theta = computeTheta(source, granularity)
     val s = source.withColumn("envs",
       barrier(st_fine_envelopes(col("geom"), theta.x, maxEnvs)))
@@ -351,10 +332,8 @@ object SpatialJoin {
         se.getField("maxx") >= te.getField("minx") &&
         se.getField("miny") <= te.getField("maxy") &&
         se.getField("maxy") >= te.getField("miny")))
-    candidatePairs(s, t, theta, spreadVerify = spreadVerify)
-      .filter(anySubEnvIntersects)
-      .withColumn("im", st_im(col("s_geom"), col("t_geom")))
-      .select(col("s_id"), col("t_id"), col("im.*"))
+    imRows(candidatePairs(s, t, theta).filter(anySubEnvIntersects),
+      st_im(col("s_geom"), col("t_geom")))
   }
 
   /** Segmented single-relation join for `intersects` (reference J8
@@ -431,7 +410,6 @@ object SpatialJoin {
     val acc = source.sparkSession.sparkContext
       .collectionAccumulator[(Int, Long, Double, Int)]("graft.partitionStats")
     val cands = candidatePairs(source, target, theta)
-    val spark = cands.sparkSession
     val counted = cands.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val t0 = System.nanoTime()
@@ -459,9 +437,7 @@ object SpatialJoin {
         }
       }
     }(org.apache.spark.sql.Encoders.row(cands.schema))
-    val result = counted
-      .withColumn("im", st_im(col("s_geom"), col("t_geom")))
-      .select(col("s_id"), col("t_id"), col("im.*"))
+    val result = imRows(counted, st_im(col("s_geom"), col("t_geom")))
     result.count() // materialize so the accumulator is populated
     import scala.jdk.CollectionConverters._
     val stats = acc.value.asScala.groupBy(_._1).view.mapValues { rows =>
@@ -483,10 +459,8 @@ object SpatialJoin {
                      maxDays: Int = 2,
                      granularity: String = "avg"): DataFrame = {
     val theta = computeTheta(source, granularity)
-    candidatePairs(source, target, theta)
-      .filter(abs(datediff(col("s_ts"), col("t_ts"))) < maxDays)
-      .filter(st_predicate(col("s_geom"), col("t_geom"), relation))
-      .select(col("s_id"), col("t_id"))
+    qualifying(candidatePairs(source, target, theta)
+      .filter(abs(datediff(col("s_ts"), col("t_ts"))) < maxDays), relation)
   }
 
   /** The reference's headline output: total verifications, qualifying

@@ -1,6 +1,9 @@
 package graft.spark
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Site-selective parallelism repair for UNSPLITTABLE small inputs
   * (round 15; guide §2.5's repartition-after-read): the gate-scale
@@ -13,7 +16,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Applied ONLY where the downstream per-row cost dominates that move
   * (measured, fresh-JVM A/B at sf0.1): the brute-force cosine arms
-  * (dd7 2.43 s → 0.71 s) and the spatial verification pair path. A
+  * (dd7 2.43 s → 0.71 s) and, through [[isSpread]], the spatial
+  * verification pair path (`SpatialJoin.candidatePairs`). A
   * blanket spread in Tables.table was measured and REVERTED: agg-first
   * scans get slower (q1 0.46 s → 1.02 s — the exchange costs more than
   * the serial partial agg it parallelizes), and cheap per-row maps
@@ -22,16 +26,29 @@ import org.apache.spark.sql.DataFrame
   * No-op when the input already carries >= defaultParallelism
   * partitions, so production-scale scans (many splits) never pay it —
   * the knob derives from core count, nothing is tuned to local mode.
-  * `GRAFT_SPREAD=0` disables for A/B experiments.
   */
 object Spread {
-  def apply(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (sys.env.getOrElse("GRAFT_SPREAD", "1") == "0") df
-    // toRdd reads the planned partition count without appending the
-    // row-deserializer conversion that `.rdd` plans (r15 verdict: the
-    // `.rdd` form planned a conversion frame once per call)
-    else if (df.queryExecution.toRdd.getNumPartitions >= p) df
-    else df.repartition(p)
+  def apply(df: DataFrame): DataFrame =
+    if (isSpread(df)) df
+    else df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** Whether `df` already runs wide enough that a spread would only
+    * move rows: its physical plan has an exchange, or it reads as at
+    * least defaultParallelism partitions. A plan with an exchange counts
+    * as spread without reading its partition count, because under AQE
+    * that read (`toRdd`) finalizes the plan and so eagerly runs every
+    * upstream shuffle and broadcast as Spark jobs. Only exchange-free
+    * plans have their count read; building their RDD runs no job.
+    * `toRdd` rather than `.rdd`, which would plan a row-deserializer
+    * conversion on every call. */
+  def isSpread(df: DataFrame): Boolean =
+    hasExchange(df.queryExecution.executedPlan) ||
+      df.queryExecution.toRdd.getNumPartitions >=
+        df.sparkSession.sparkContext.defaultParallelism
+
+  private def hasExchange(plan: SparkPlan): Boolean = plan.exists {
+    case _: Exchange | _: QueryStageExec => true
+    case a: AdaptiveSparkPlanExec => hasExchange(a.executedPlan)
+    case _ => false
   }
 }

@@ -50,7 +50,7 @@ class SegmentedIMSpec extends AnyFunSuite {
     val plain = SpatialJoin.de9im(entities(src), entities(tgt))
       .select("s_id", "t_id", "de9im").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    val adaptive = SpatialJoin.de9imAdaptive(entities(src), entities(tgt),
+    val adaptive = SpatialJoin.de9im(entities(src), entities(tgt),
       minPoints = 16)
       .select("s_id", "t_id", "de9im").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
@@ -92,9 +92,9 @@ class SegmentedIMSpec extends AnyFunSuite {
       df.select("s_id", "t_id", "intersects").collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     val exact = intersectsOf(
-      SpatialJoin.de9imAdaptive(entities(src), entities(tgt), minPoints = 16))
+      SpatialJoin.de9im(entities(src), entities(tgt), minPoints = 16))
     val early = intersectsOf(
-      SpatialJoin.de9imAdaptive(entities(src), entities(tgt), minPoints = 16,
+      SpatialJoin.de9im(entities(src), entities(tgt), minPoints = 16,
         earlyExit = true))
     assert(early.keySet === exact.keySet)
     exact.foreach { case (pair, v) =>
@@ -103,7 +103,7 @@ class SegmentedIMSpec extends AnyFunSuite {
     // Non-contractual columns are NULL on the early-exit segmented
     // branch (never a silently under-set false), and the branch must
     // actually fire on this corpus for the check to prove anything.
-    val earlyRows = SpatialJoin.de9imAdaptive(entities(src), entities(tgt),
+    val earlyRows = SpatialJoin.de9im(entities(src), entities(tgt),
         minPoints = 16, earlyExit = true)
       .select("de9im", "intersects", "contains", "touches").collect()
     val partials = earlyRows.filter(_.isNullAt(0))

@@ -118,16 +118,107 @@ class SpatialJoinSpec extends AnyFunSuite {
     } yield (sid, tid) -> sg.relate(tg).toString).toMap
   }
 
+  /** Every node of a physical plan, through AQE wrappers and stages. */
+  private def walk(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: kids.flatMap(walk)
+  }
+
+  /** Input layouts on both sides of candidatePairs' placement rule:
+    * as built (a local scan over defaultParallelism slices: in place),
+    * one partition (spread), and repartitioned to defaultParallelism
+    * (in place). */
+  private def layouts: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "as built" -> identity,
+    "one partition" -> (_.coalesce(1)),
+    "spread" -> (_.repartition(spark.sparkContext.defaultParallelism)))
+
   test("de9im matches brute-force JTS oracle on arbitrary geometries") {
-    val got = SpatialJoin.de9im(entitiesDf(source), entitiesDf(target))
-      .select("s_id", "t_id", "de9im").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     val expected = bruteForce()
     assert(expected.nonEmpty, "oracle should produce candidate pairs")
-    assert(got.keySet === expected.keySet,
-      s"pair sets differ: missing=${(expected.keySet -- got.keySet).take(5)} " +
-      s"extra=${(got.keySet -- expected.keySet).take(5)}")
-    got.foreach { case (k, im) => assert(im === expected(k), s"DE-9IM differs for $k") }
+    val rows = layouts.map { case (layout, shape) =>
+      val out = SpatialJoin.de9im(shape(entitiesDf(source)), shape(entitiesDf(target)))
+        .collect()
+      val got = out.map(r => (r.getString(0), r.getString(1)) -> r.getAs[String]("de9im")).toMap
+      assert(got.keySet === expected.keySet,
+        s"$layout: pair sets differ: missing=${(expected.keySet -- got.keySet).take(5)} " +
+        s"extra=${(got.keySet -- expected.keySet).take(5)}")
+      got.foreach { case (k, im) =>
+        assert(im === expected(k), s"$layout: DE-9IM differs for $k") }
+      out.toSet
+    }
+    assert(rows.distinct.size === 1, "de9im rows depend on the input layout")
+  }
+
+  test("candidatePairs spreads the narrow pairs on s_id only when an input " +
+       "reads as fewer than defaultParallelism partitions") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val p = spark.sparkContext.defaultParallelism
+    def sIdSpreads(shape: DataFrame => DataFrame): Seq[ShuffleExchangeExec] = {
+      val s = shape(entitiesDf(source))
+      val pairs = SpatialJoin.candidatePairs(s, shape(entitiesDf(target)),
+        SpatialJoin.computeTheta(s))
+      pairs.collect()
+      walk(pairs.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM &&
+            (e.outputPartitioning match {
+              case h: HashPartitioning => h.references.map(_.name).toSet == Set("s_id")
+              case _ => false
+            }) => e
+      }
+    }
+    val spread = layouts.map { case (layout, shape) => layout -> sIdSpreads(shape) }.toMap
+    assert(spread("one partition").size === 1)
+    val e = spread("one partition").head
+    assert(e.outputPartitioning.numPartitions === p)
+    assert(!e.output.exists(a => a.name == "s_geom" || a.name == "t_geom"),
+      "the spread must sit before the blob joins")
+    assert(spread("spread").isEmpty)
+    assert(spread("as built").isEmpty)
+  }
+
+  test("Spread runs no Spark job on a frame whose plan has a shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "spread-no-job"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val shuffled = spark.range(0, 1000, 1, 2).groupBy((col("id") % 7).as("k")).count()
+      sc.setJobGroup(group, "spread")
+      val out = graft.spark.Spread(shuffled)
+      // listener events arrive in order: once this job is seen, so is
+      // every job the Spread call started
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      assert(jobs.asScala.toList === List("sentinel"))
+      assert(out eq shuffled)
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("SpatialLink.de9im rejects balanced() combined with fineGrained()") {
+    val link = graft.api.SpatialLink(entitiesDf(source), entitiesDf(target))
+      .balanced().fineGrained()
+    intercept[IllegalArgumentException](link.de9im())
   }
 
   test("replication produces no duplicate pairs (reference-point dedup)") {
@@ -173,16 +264,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     // the bloom predicate must pass strictly fewer rows than the
     // target side's exploded tile count — i.e. the exchange input was
     // actually cut, not just wrapped
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(walk)
-    }
+    import org.apache.spark.sql.execution.FilterExec
     val metricsDf = SpatialJoin.candidatePairsNarrowPruned(s, t, theta)
     metricsDf.collect()
     val bloomFilters = walk(metricsDf.queryExecution.executedPlan).collect {

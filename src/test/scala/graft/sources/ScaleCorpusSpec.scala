@@ -59,7 +59,7 @@ class ScaleCorpusSpec extends AnyFunSuite {
     val domain = Some((b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3)))
     def scaled(e: DataFrame) = SpatialJoin.entities(
       ScaleCorpus.scaledWkt(e, n = 5, domain = domain), col("id"), col("wkt"))
-    val pairs = SpatialJoin.de9imAdaptive(scaled(src), scaled(tgt))
+    val pairs = SpatialJoin.de9im(scaled(src), scaled(tgt))
       .filter(col("intersects"))
       .select("s_id", "t_id").collect()
     assert(pairs.nonEmpty, "corpus too sparse — the isolation check is vacuous")
