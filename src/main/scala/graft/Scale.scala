@@ -211,8 +211,8 @@ object Scale {
         ProgressiveTyped.earlyStopping(partS, suppS, "w_js",
           relation = "contains", batchSize = 100,
           precisionLevel = 0.0, maxViolations = 1).toDF().mcount() }
-      // J8 early-exit decision: forced-segmented adaptive IM (the sp10
-      // shape), exact union form vs RANK early-exit, same corpus
+      // J8 early-exit decision: forced heavy-branch adaptive IM (the
+      // sp10 shape), exact prepared matrix vs RANK early-exit, same corpus
       run("seg_exact", 2) {
         SpatialJoin.de9im(triS, suppS, minPoints = 4).mcount() }
       run("seg_earlyexit", 2) {

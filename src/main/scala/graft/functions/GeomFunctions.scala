@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.{Geometry, GeometryFactory, GeometryCollection, Polygon, Point, LineString, MultiPolygon, MultiPoint, MultiLineString}
+import org.locationtech.jts.geom.{Geometry, GeometryFactory, GeometryCollection, IntersectionMatrix, Polygon, Point, LineString, MultiPolygon, MultiPoint, MultiLineString}
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
 
 /** JTS plumbing shared by the geometry expressions.
@@ -31,17 +31,19 @@ object Jts {
   @inline def encodeTile(tx: Long, ty: Long): Long = (tx << 32) | (ty & 0xFFFFFFFFL)
 }
 
-/** Per-thread LRU caches for verification: WKB → parsed Geometry and
-  * WKB → PreparedGeometry. After the tile join, a hot build-side
-  * geometry participates in many pairs within a partition; caching by
-  * WKB content (ByteBuffer keys hash by content) removes the repeated
-  * parse and lets JTS prepared predicates reuse their internal index —
-  * the declarative-path equivalent of the reference's per-partition
-  * prepared entities (`model/entities/PreparedEntity.scala`).
+/** Per-thread LRU caches for verification: WKB → parsed Geometry,
+  * WKB → PreparedGeometry and WKB → prepared RelateNG. After the tile
+  * join, a hot build-side geometry participates in many pairs within a
+  * partition; caching by WKB content (ByteBuffer keys hash by content)
+  * removes the repeated parse and lets JTS prepared operations reuse
+  * their internal index — the declarative-path equivalent of the
+  * reference's per-partition prepared entities
+  * (`model/entities/PreparedEntity.scala`).
   */
 object GeomCache {
   import java.nio.ByteBuffer
   import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
+  import org.locationtech.jts.operation.relateng.RelateNG
   private val MAX = 8192
   private final class Lru[K, V](max: Int)
       extends java.util.LinkedHashMap[K, V](64, 0.75f, true) {
@@ -76,6 +78,24 @@ object GeomCache {
     var p = c.get(k)
     if (p == null) { p = PreparedGeometryFactory.prepare(geometry(wkb)); c.put(k, p) }
     p
+  }
+  private val relates = ThreadLocal.withInitial[Lru[ByteBuffer, RelateNG]](
+    () => new Lru(256)) // edge indexes of large operands: same budget as segments
+  /** Full DE-9IM of (g1, g2), parsed from (wkb1, wkb2), through a
+    * prepared JTS RelateNG: the operand with more points is prepared
+    * once per thread (keyed by its WKB) and its edge index reused by
+    * every later pair it joins; the matrix is transposed back when that
+    * operand is the right-hand one. */
+  def relatePrepared(wkb1: Array[Byte], g1: Geometry,
+                     wkb2: Array[Byte], g2: Geometry): IntersectionMatrix = {
+    val swap = g2.getNumPoints > g1.getNumPoints
+    val (wkb, g, other) = if (swap) (wkb2, g2, g1) else (wkb1, g1, g2)
+    val k = ByteBuffer.wrap(wkb)
+    val c = relates.get()
+    var p = c.get(k)
+    if (p == null) { p = RelateNG.prepare(g); c.put(k, p) }
+    val im = p.evaluate(other)
+    if (swap) im.transpose() else im
   }
 }
 
@@ -171,8 +191,8 @@ case class StIntersectionArea(left: Expression, right: Expression)
     copy(l, r)
 }
 
-/** Full DE-9IM verification: one JTS `relate` per pair, all ten
-  * topological booleans extracted from the single IntersectionMatrix
+/** Full DE-9IM verification: one IntersectionMatrix per pair from
+  * [[StIm.matrix]], all ten topological booleans extracted from it
   * (mirrors DS-JedAI `model/IM.scala:6-39`). Emitting them all at once
   * means downstream relation-count aggregation is plain sum(when(..)).
   */
@@ -180,35 +200,53 @@ case class StIm(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = StIm.schema
   override def nullable: Boolean = true
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val g1 = GeomCache.geometry(l.asInstanceOf[Array[Byte]])
-    val g2 = GeomCache.geometry(r.asInstanceOf[Array[Byte]])
-    // rectangle-rectangle pairs take the analytic interval-arithmetic
-    // path (~ns) instead of JTS topology-graph relate (~100s of µs)
-    val im = if (g1.isRectangle && g2.isRectangle) {
-      val e1 = g1.getEnvelopeInternal; val e2 = g2.getEnvelopeInternal
-      new org.locationtech.jts.geom.IntersectionMatrix(
-        graft.geometry.RectIM.matrix(
-          e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
-          e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
-    } else g1.relate(g2)
-    val d1 = g1.getDimension; val d2 = g2.getDimension
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(im.toString),
-      !im.isDisjoint,
-      im.isContains,
-      im.isWithin,
-      im.isCovers,
-      im.isCoveredBy,
-      im.isCrosses(d1, d2),
-      im.isOverlaps(d1, d2),
-      im.isTouches(d1, d2),
-      im.isEquals(d1, d2)))
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    StIm.row(l.asInstanceOf[Array[Byte]], r.asInstanceOf[Array[Byte]], StIm.MinPoints)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
 object StIm {
+  /** Point-count cutoff of the prepared branch (sum over both operands). */
+  val MinPoints = 64
+
+  /** True when the pair is polygonal and heavy enough for the prepared
+    * branch of [[matrix]]. */
+  def heavy(g1: Geometry, g2: Geometry, minPoints: Int): Boolean =
+    g1.getDimension == 2 && g2.getDimension == 2 &&
+      g1.getNumPoints + g2.getNumPoints >= minPoints
+
+  /** The one DE-9IM kernel: rectangle pairs take the analytic interval
+    * IM (~ns); polygonal pairs of at least `minPoints` points relate
+    * through the per-thread prepared RelateNG of the larger operand
+    * ([[GeomCache.relatePrepared]]); everything else is plain JTS
+    * `relate`. All three return JTS `relate`'s matrix. */
+  def matrix(wkb1: Array[Byte], wkb2: Array[Byte], minPoints: Int): IntersectionMatrix =
+    matrix(wkb1, GeomCache.geometry(wkb1), wkb2, GeomCache.geometry(wkb2), minPoints)
+
+  private def matrix(wkb1: Array[Byte], g1: Geometry, wkb2: Array[Byte], g2: Geometry,
+                     minPoints: Int): IntersectionMatrix =
+    if (g1.isRectangle && g2.isRectangle) {
+      val e1 = g1.getEnvelopeInternal; val e2 = g2.getEnvelopeInternal
+      new IntersectionMatrix(
+        graft.geometry.RectIM.matrix(
+          e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
+          e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
+    } else if (heavy(g1, g2, minPoints)) GeomCache.relatePrepared(wkb1, g1, wkb2, g2)
+    else g1.relate(g2)
+
+  /** [[matrix]] as a [[schema]] row. */
+  def row(wkb1: Array[Byte], wkb2: Array[Byte], minPoints: Int): InternalRow = {
+    val g1 = GeomCache.geometry(wkb1); val g2 = GeomCache.geometry(wkb2)
+    val im = matrix(wkb1, g1, wkb2, g2, minPoints)
+    val d1 = g1.getDimension; val d2 = g2.getDimension
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(im.toString),
+      !im.isDisjoint,
+      im.isContains, im.isWithin, im.isCovers, im.isCoveredBy,
+      im.isCrosses(d1, d2), im.isOverlaps(d1, d2), im.isTouches(d1, d2),
+      im.isEquals(d1, d2)))
+  }
+
   // nullable: StImAdaptive's early-exit branch emits NULL for every
   // column except `intersects` (partial accumulation — see there); the
   // exact paths never produce nulls
@@ -225,16 +263,19 @@ object StIm {
     StructField("equals", BooleanType, nullable = true)))
 }
 
-/** Adaptive DE-9IM verification: rectangles → analytic interval IM;
-  * large polygon pairs → exact segmented IM over cached θ-grid
-  * segments (cost bounded by the interaction neighbourhood); everything
-  * else → plain JTS relate. children: wkb1, wkb2, θx, θy, minPoints,
-  * earlyExit (literals). With earlyExit=true the segmented branch uses
-  * the reference's RANK-ordered early-exit accumulation
-  * ([[graft.geometry.SegmentedIM.imEarlyExit]]) — only the intersects
-  * decision is contractual there, so it stays default-off AND every
-  * other output column is emitted as NULL on that branch (never a
-  * silently under-set false). Output schema identical to [[StIm]].
+/** Adaptive DE-9IM verification: [[StIm.matrix]] with a settable
+  * `minPoints` cutoff — rectangles → analytic interval IM; polygon
+  * pairs of at least `minPoints` points → the larger operand's cached
+  * prepared RelateNG (its edge index is built once per thread and
+  * reused across every pair it joins); everything else → plain JTS
+  * relate. children: wkb1, wkb2, θx, θy, minPoints, earlyExit
+  * (literals). With earlyExit=true the heavy polygon branch instead
+  * runs the reference's RANK-ordered early-exit accumulation over
+  * cached θ-grid segments ([[graft.geometry.SegmentedIM.imEarlyExit]])
+  * — only the intersects decision is contractual there, so it stays
+  * default-off AND every other output column is emitted as NULL on
+  * that branch (never a silently under-set false). Output schema
+  * identical to [[StIm]].
   */
 case class StImAdaptive(children: Seq[Expression]) extends Expression with CodegenFallback {
   override def dataType: DataType = StIm.schema
@@ -242,48 +283,27 @@ case class StImAdaptive(children: Seq[Expression]) extends Expression with Codeg
   override def eval(input: InternalRow): Any = {
     val l = children(0).eval(input); val r = children(1).eval(input)
     if (l == null || r == null) return null
-    val thetaX = children(2).eval(input).asInstanceOf[Double]
-    val thetaY = children(3).eval(input).asInstanceOf[Double]
     val minPts = children(4).eval(input).asInstanceOf[Int]
     val earlyExit =
       children.length > 5 && children(5).eval(input).asInstanceOf[Boolean]
     val wkb1 = l.asInstanceOf[Array[Byte]]; val wkb2 = r.asInstanceOf[Array[Byte]]
-    val g1 = GeomCache.geometry(wkb1); val g2 = GeomCache.geometry(wkb2)
-    var partialIm = false // early-exit branch: only `intersects` is contractual
-    val im =
-      if (g1.isRectangle && g2.isRectangle) {
-        val e1 = g1.getEnvelopeInternal; val e2 = g2.getEnvelopeInternal
-        new org.locationtech.jts.geom.IntersectionMatrix(
-          graft.geometry.RectIM.matrix(
-            e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
-            e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
-      } else if (g1.getDimension == 2 && g2.getDimension == 2 &&
-                 g1.getNumPoints + g2.getNumPoints >= minPts) {
-        if (earlyExit) {
-          partialIm = true
-          graft.geometry.SegmentedIM.imEarlyExit(g1, g2,
-            GeomCache.segments(wkb1, thetaX, thetaY),
-            GeomCache.segments(wkb2, thetaX, thetaY))
-        } else
-          graft.geometry.SegmentedIM.im(g1, g2,
-            GeomCache.segments(wkb1, thetaX, thetaY),
-            GeomCache.segments(wkb2, thetaX, thetaY))
-      } else g1.relate(g2)
-    val d1 = g1.getDimension; val d2 = g2.getDimension
-    if (partialIm)
-      // The accumulation stopped at the intersects decision, so every
-      // other entry may be under-set; emit NULL there rather than a
-      // silently wrong false (a disjoint result is complete: the
-      // canonical FF2FF1212 came back and nulls stay correct-by-vacuity)
-      new GenericInternalRow(Array[Any](
-        null, !im.isDisjoint, null, null, null, null, null, null, null, null))
-    else
-      new GenericInternalRow(Array[Any](
-        UTF8String.fromString(im.toString),
-        !im.isDisjoint,
-        im.isContains, im.isWithin, im.isCovers, im.isCoveredBy,
-        im.isCrosses(d1, d2), im.isOverlaps(d1, d2), im.isTouches(d1, d2),
-        im.isEquals(d1, d2)))
+    if (earlyExit) {
+      val g1 = GeomCache.geometry(wkb1); val g2 = GeomCache.geometry(wkb2)
+      if (!(g1.isRectangle && g2.isRectangle) && StIm.heavy(g1, g2, minPts)) {
+        val thetaX = children(2).eval(input).asInstanceOf[Double]
+        val thetaY = children(3).eval(input).asInstanceOf[Double]
+        val im = graft.geometry.SegmentedIM.imEarlyExit(g1, g2,
+          GeomCache.segments(wkb1, thetaX, thetaY),
+          GeomCache.segments(wkb2, thetaX, thetaY))
+        // The accumulation stopped at the intersects decision, so every
+        // other entry may be under-set; emit NULL there rather than a
+        // silently wrong false (a disjoint result is complete: the
+        // canonical FF2FF1212 came back and nulls stay correct-by-vacuity)
+        return new GenericInternalRow(Array[Any](
+          null, !im.isDisjoint, null, null, null, null, null, null, null, null))
+      }
+    }
+    StIm.row(wkb1, wkb2, minPts)
   }
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
     copy(cs)
@@ -464,29 +484,8 @@ case class ExprBarrier(child: Expression) extends UnaryExpression {
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    if (ExprBarrier.codegen) child.genCode(ctx)
-    // interpreted escape hatch (A/B measurements): the pre-round-15
-    // CodegenFallback behavior via a fallback twin
-    else ExprBarrierInterp(child).genCode(ctx)
+    child.genCode(ctx)
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Interpreted twin of [[ExprBarrier]] — only instantiated inside the
-  * generated code path when `GRAFT_BARRIER_CODEGEN=0`. */
-case class ExprBarrierInterp(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override lazy val deterministic: Boolean = false
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override def eval(input: InternalRow): Any = child.eval(input)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-object ExprBarrier {
-  /** `GRAFT_BARRIER_CODEGEN=0` restores the interpreted barrier for
-    * A/B measurements. */
-  val codegen: Boolean =
-    sys.env.getOrElse("GRAFT_BARRIER_CODEGEN", "1") != "0"
 }
 
 /** Column-API wrappers. */
@@ -502,7 +501,7 @@ object GeomFunctions {
     mk(StIntersectionArea(ex(l), ex(r)))
   def st_im(l: Column, r: Column): Column = mk(StIm(ex(l), ex(r)))
   def st_im_adaptive(l: Column, r: Column, thetaX: Double, thetaY: Double,
-                     minPoints: Int = 64, earlyExit: Boolean = false): Column =
+                     minPoints: Int = StIm.MinPoints, earlyExit: Boolean = false): Column =
     mk(StImAdaptive(Seq(ex(l), ex(r),
       org.apache.spark.sql.catalyst.expressions.Literal(thetaX),
       org.apache.spark.sql.catalyst.expressions.Literal(thetaY),

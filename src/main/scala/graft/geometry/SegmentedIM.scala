@@ -1,121 +1,15 @@
 package graft.geometry
 
-import org.locationtech.jts.geom.{Envelope, Geometry, IntersectionMatrix}
-import org.locationtech.jts.operation.union.UnaryUnionOp
-import scala.jdk.CollectionConverters._
+import org.locationtech.jts.geom.{Geometry, IntersectionMatrix}
 
-/** Exact DE-9IM via θ-grid segments for POLYGONAL operands — the full
-  * form of DS-JedAI's segmented verification (J8,
-  * `model/entities/segmented/DecomposedEntity.scala`), derived here
-  * with an exactness argument instead of the reference's heuristic
-  * accumulation:
-  *
-  *  - Candidate segments = those whose envelope intersects the OTHER
-  *    geometry's envelope. Every point of A inside env(B) lies in a
-  *    candidate segment, so A is fully represented there.
-  *  - A' = union(candidate segments of A) dissolves cut edges between
-  *    included segments; its only fake boundary is the frontier
-  *    against non-candidate segments — and every non-candidate
-  *    segment is disjoint from env(B), so fake boundary cannot touch
-  *    closed B. Hence the II/IB/BI/BB entries of relate(A', B') are
-  *    those of relate(A, B), exactly.
-  *  - Non-candidate segments of A exist only if env(A) ⊄ env(B), and
-  *    then some of A's interior AND boundary provably lie outside
-  *    env(B) ⊇ B (a polygon's boundary touches every side of its own
-  *    envelope), fixing the exterior-column entries: IE=2, BE=1.
-  *    Symmetrically for B's exterior row. EE is always 2.
-  *
-  * The win: relate cost drops from O(|A|+|B|) to O(neighbourhood of
-  * the smaller operand), which is the point when one geometry is
-  * enormous (coastlines, admin regions) and the other is local.
+/** DE-9IM over θ-grid segments for POLYGONAL operands — DS-JedAI's
+  * segmented verification (J8,
+  * `model/entities/segmented/DecomposedEntity.scala`). Only the
+  * reference's early-exit accumulation lives here: the exact full
+  * matrix of a heavy polygon pair comes from the larger operand's
+  * prepared RelateNG instead ([[graft.functions.GeomCache.relatePrepared]]).
   */
 object SegmentedIM {
-
-  /** Exact DE-9IM; falls back to plain relate for non-polygonal
-    * operands or when segmentation cannot save work. */
-  def im(a: Geometry, b: Geometry, thetaX: Double, thetaY: Double): IntersectionMatrix =
-    im(a, b,
-      Decompose.gridSegments(a, thetaX, thetaY),
-      Decompose.gridSegments(b, thetaX, thetaY))
-
-  /** Variant with pre-computed (cached) segment lists — decomposition
-    * amortizes across the many pairs a geometry participates in.
-    *
-    * Candidate selection is a two-stage screen, per segment:
-    *  1. envelope test against the OTHER geometry's envelope;
-    *  2. tile-ADJACENCY test against the other's occupied tile set
-    *     (the per-entity segment index of the reference's
-    *     IndexedDecomposedEntity, `segmented/IndexedDecomposedEntity
-    *     .scala:14-34`): keep a segment only if its tile is within
-    *     Chebyshev distance 1 of a tile the other geometry occupies.
-    * An excluded segment is then ≥ 1 full tile away from every point
-    * of the other geometry — strictly disjoint from it — which is
-    * exactly the condition the exactness argument above needs (the
-    * plain envelope test proves the same via env(B) ⊇ B). The
-    * adjacency screen is much tighter when the bodies do not approach
-    * each other even though their MBRs overlap (L-shapes, diagonal
-    * neighbours), often emptying a candidate set entirely → the
-    * disjoint matrix is returned with NO JTS relate at all. */
-  def im(a: Geometry, b: Geometry,
-         segsAIn: => Seq[(Long, Long, Geometry)],
-         segsBIn: => Seq[(Long, Long, Geometry)]): IntersectionMatrix = {
-    if (a.getDimension != 2 || b.getDimension != 2) return a.relate(b)
-    val envA = a.getEnvelopeInternal
-    val envB = b.getEnvelopeInternal
-    if (!envA.intersects(envB)) return a.relate(b) // disjoint: cheap anyway
-
-    val segsA = segsAIn
-    val segsB = segsBIn
-    def tileSet(segs: Seq[(Long, Long, Geometry)]): java.util.HashSet[Long] = {
-      val s = new java.util.HashSet[Long](segs.size * 2)
-      segs.foreach { case (sx, sy, _) => s.add((sx << 32) | (sy & 0xFFFFFFFFL)) }
-      s
-    }
-    val tilesA = tileSet(segsA)
-    val tilesB = tileSet(segsB)
-    def nearOther(sx: Long, sy: Long, other: java.util.HashSet[Long]): Boolean = {
-      var dx = -1L
-      while (dx <= 1) {
-        var dy = -1L
-        while (dy <= 1) {
-          if (other.contains(((sx + dx) << 32) | ((sy + dy) & 0xFFFFFFFFL))) return true
-          dy += 1
-        }
-        dx += 1
-      }
-      false
-    }
-    val candA = segsA.collect {
-      case (sx, sy, g)
-        if g.getEnvelopeInternal.intersects(envB) && nearOther(sx, sy, tilesB) => g
-    }
-    val candB = segsB.collect {
-      case (sx, sy, g)
-        if g.getEnvelopeInternal.intersects(envA) && nearOther(sx, sy, tilesA) => g
-    }
-    val aTrimmed = candA.size < segsA.size
-    val bTrimmed = candB.size < segsB.size
-    if (!aTrimmed && !bTrimmed) return a.relate(b) // no savings possible
-
-    if (candA.isEmpty || candB.isEmpty) {
-      // geometries cannot touch: both polygonal → canonical disjoint
-      return new IntersectionMatrix("FF2FF1212")
-    }
-
-    val aPart = if (aTrimmed) UnaryUnionOp.union(candA.asJava) else a
-    val bPart = if (bTrimmed) UnaryUnionOp.union(candB.asJava) else b
-    val im = aPart.relate(bPart)
-    if (aTrimmed) {
-      im.set(0, 2, 2) // Interior(A) ∩ Exterior(B)
-      im.set(1, 2, 1) // Boundary(A) ∩ Exterior(B)
-    }
-    if (bTrimmed) {
-      im.set(2, 0, 2) // Exterior(A) ∩ Interior(B)
-      im.set(2, 1, 1) // Exterior(A) ∩ Boundary(B)
-    }
-    im.set(2, 2, 2)
-    im
-  }
 
   /** The reference's RANK-ordered EARLY-EXIT accumulation (J8,
     * `model/entities/segmented/IndexedDecomposedEntity.scala:36-96` +
@@ -133,19 +27,19 @@ object SegmentedIM {
     * of the segment polygons — the reference's own WARNING at
     * `IndexedDecomposedEntity.scala:57-59` — and pairs after the exit
     * point never contribute), so only the intersects DECISION is
-    * contractual; [[im]] keeps the provably exact full matrix. The
-    * differential spec pins intersects-equivalence against [[im]]. */
+    * contractual. The differential spec pins intersects-equivalence
+    * against plain JTS `relate`. */
   def imEarlyExit(a: Geometry, b: Geometry,
                   segsAIn: => Seq[(Long, Long, Geometry)],
                   segsBIn: => Seq[(Long, Long, Geometry)]): IntersectionMatrix = {
     if (a.getDimension != 2 || b.getDimension != 2) return a.relate(b)
     if (!a.getEnvelopeInternal.intersects(b.getEnvelopeInternal))
       return new IntersectionMatrix("FF2FF1212")
-    // Pair segments within a Chebyshev-distance-1 tile neighbourhood —
-    // same screen as [[im]]. Exact-tile-only pairing would miss two
-    // polygons touching exactly ON a θ-grid line: each side's
-    // degenerate clip is dropped in the neighbouring column, so their
-    // segments never share a tile even though the bodies touch.
+    // Pair segments within a Chebyshev-distance-1 tile neighbourhood.
+    // Exact-tile-only pairing would miss two polygons touching exactly
+    // ON a θ-grid line: each side's degenerate clip is dropped in the
+    // neighbouring column, so their segments never share a tile even
+    // though the bodies touch.
     val segsA = segsAIn.toIndexedSeq
     val segsB = segsBIn.toIndexedSeq
     val byTileB = new java.util.HashMap[Long, java.util.ArrayList[Int]]()

@@ -342,15 +342,14 @@ object GeoQueries {
     SpatialJoin.relateSegmented(customerTriangles(s, dir), supplierBoxes(s, dir))
       .orderBy(col("s_id"), col("t_id"))
 
-  /** Adaptive DE-9IM with the segmented-IM branch FORCED (minPoints=4,
-    * so every triangle-box pair is over the cutoff): `SegmentedIM`'s
-    * exact union-of-partial-matrices algorithm is hash-checked against
-    * the closed-form SAT oracle. */
+  /** Adaptive DE-9IM with the heavy polygon branch FORCED (minPoints=4,
+    * so every triangle-box pair is over the cutoff): the prepared
+    * RelateNG kernel (the larger operand prepared once per thread, the
+    * matrix transposed back when that is the right-hand one) is
+    * hash-checked against the closed-form SAT oracle. */
   def sp10SegmentedIm(s: SparkSession, dir: String): DataFrame =
-    // the forced segmented branch costs ~ms of JTS per pair; the
-    // single-partition corpora make candidatePairs spread the narrow
-    // pair frame across cores before the blob joins (4 cores, sf0.1:
-    // 2.1 s spread vs 5.7 s in place)
+    // the single-partition corpora make candidatePairs spread the
+    // narrow pair frame across cores before the blob joins
     SpatialJoin.de9im(customerTriangles(s, dir), supplierBoxes(s, dir),
       minPoints = 4)
       .select(col("s_id"), col("t_id"), col("intersects"), col("contains"),

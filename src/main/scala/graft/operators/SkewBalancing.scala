@@ -100,10 +100,15 @@ object SkewBalancing {
     *
     *   rect(pair) = tileRange(target) ∩ (tileRange(source) ± 1 ring)
     *
-    * The ±1 ring keeps the SegmentedIM exactness argument intact even
-    * when a source envelope sits exactly on a grid line (an excluded
-    * segment is then ≥ 1 full tile away, hence strictly disjoint from
-    * the source's envelope).
+    * Exactness: every excluded segment is ≥ 1 full tile away from the
+    * source's envelope (the ±1 ring covers a source envelope sitting
+    * exactly on a grid line), hence strictly disjoint from the source.
+    * So the union of the kept segments has its only cut edges where no
+    * source point lies, and relate(S, union) gives relate(S, T)'s
+    * interior and boundary entries. When segments were dropped, part of
+    * T's interior and boundary lies outside env(S) ⊇ S (a polygon's
+    * boundary touches every side of its envelope), which fixes S's
+    * exterior row: EI = 2, EB = 1, EE = 2.
     *
     * Placement mirrors the reference exactly: SCHEDULING (decompose +
     * per-rect unions + batching, cap 256 like the trie node cap) runs
@@ -112,9 +117,8 @@ object SkewBalancing {
     * receiving executors do NO decomposition at all — that is the L3
     * win over L2, which re-decomposes the hot target on every executor
     * its pairs land on. Verification relates each source against the
-    * batch union with the trimmed-exterior fixups of
-    * [[graft.geometry.SegmentedIM]] — results are bit-equal to plain
-    * `st_im` (both are exactly JTS `relate`). */
+    * batch union with those exterior-row fixups — results are
+    * bit-equal to plain `st_im` (both are exactly JTS `relate`). */
   def rebalancedSegmentedDe9im(source: DataFrame, target: DataFrame,
                                zThreshold: Double = 3.0,
                                batchCap: Int = 256): DataFrame = {

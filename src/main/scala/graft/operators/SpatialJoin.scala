@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GeomFunctions._
+import graft.functions.StIm
 
 /** Spark-native holistic spatial interlinking — the capability of
   * DS-JedAI's GIA.nt batch algorithm (`linkers/GIAnt.scala`,
@@ -256,19 +257,20 @@ object SpatialJoin {
     * (`linkers/GIAnt.scala:32-37`).
     *
     * Verification is ADAPTIVE (identical results, spec-asserted):
-    * analytic interval IM for rectangle pairs, exact segmented IM for
-    * pairs above `minPoints` (interaction-neighbourhood cost), plain
-    * JTS relate otherwise — rectangle-heavy workloads skip JTS
-    * entirely. `granularity` is [[computeTheta]]'s statistic.
+    * analytic interval IM for rectangle pairs, the larger operand's
+    * per-thread prepared RelateNG for polygon pairs of at least
+    * `minPoints` points, plain JTS relate otherwise — rectangle-heavy
+    * workloads skip JTS entirely. `granularity` is [[computeTheta]]'s
+    * statistic.
     *
-    * `earlyExit = true` switches the segmented branch to the
-    * reference's RANK-ordered early-exit accumulation (J8,
-    * `IndexedDecomposedEntity.scala:36-96`) — on that path only the
-    * intersects decision is contractual (partial accumulation may
-    * under-set exterior entries), so it is opt-in and default-off;
-    * the exact union form stays the default. */
+    * `earlyExit = true` switches the heavy polygon branch to the
+    * reference's RANK-ordered early-exit accumulation over θ-grid
+    * segments (J8, `IndexedDecomposedEntity.scala:36-96`) — on that
+    * path only the intersects decision is contractual (partial
+    * accumulation may under-set exterior entries), so it is opt-in and
+    * default-off; the exact prepared matrix stays the default. */
   def de9im(source: DataFrame, target: DataFrame, granularity: String = "avg",
-            minPoints: Int = 64, earlyExit: Boolean = false): DataFrame = {
+            minPoints: Int = StIm.MinPoints, earlyExit: Boolean = false): DataFrame = {
     val theta = computeTheta(source, granularity)
     imRows(candidatePairs(source, target, theta), st_im_adaptive(
       col("s_geom"), col("t_geom"), theta.x, theta.y, minPoints, earlyExit))

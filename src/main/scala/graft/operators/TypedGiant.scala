@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.functions.Jts
+import graft.functions.{Jts, StIm}
 import graft.operators.SpatialJoin.Theta
 
 /** The typed per-partition execution shape of the reference's GIA.nt
@@ -76,7 +76,6 @@ object TypedGiant {
             val y1 = math.floor(t.maxy / theta.y).toLong
             val seen = new java.util.HashSet[Int]()
             val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-            val tg = Jts.fromWkb(t.geom)
             for (x <- x0 to x1; y <- y0 to y1
                  if x / coarsen == (key >> 32) && y / coarsen == key.toInt) {
               val l = index.get(Jts.encodeTile(x, y))
@@ -94,18 +93,10 @@ object TypedGiant {
                       val ry = math.max(s.miny, t.miny)
                       val rcx = math.floor(rx / theta.x).toLong / coarsen
                       val rcy = math.floor(ry / theta.y).toLong / coarsen
-                      if (Jts.encodeTile(rcx, rcy) == key) {
-                        val sg = Jts.fromWkb(s.geom)
-                        // same analytic shortcut as the expression path
-                        val im = if (sg.isRectangle && tg.isRectangle) {
-                          val e1 = sg.getEnvelopeInternal
-                          val e2 = tg.getEnvelopeInternal
-                          graft.geometry.RectIM.matrix(
-                            e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
-                            e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY)
-                        } else sg.relate(tg).toString
-                        out += ((s.id, t.id, im))
-                      }
+                      if (Jts.encodeTile(rcx, rcy) == key)
+                        // the expression path's DE-9IM kernel
+                        out += ((s.id, t.id,
+                          StIm.matrix(s.geom, t.geom, StIm.MinPoints).toString))
                     }
                   }
                 }

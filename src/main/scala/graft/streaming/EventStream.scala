@@ -480,7 +480,7 @@ object EventStream {
       val flushUs = rows.map(_._3).max + (4L * 3600L + 1800L + 60L) * 1000000L
       val day = 24L * 3600L * 1000000L
       for (i <- 0 to 1) {
-        mem.addData((-1L, -1L - i, flushUs + i * day))
+        mem.addData((-1L - i, -1L - i, flushUs + i * day))
         q.processAllAvailable()
       }
       recordState(q, stats)
@@ -882,7 +882,7 @@ object EventStream {
       val flushUs = rows.iterator.map(_._4).max + (2L * 3600L + 60L) * 1000000L
       val day = 24L * 3600L * 1000000L
       for (i <- 0 to 1) {
-        mem.addData((-1L, -1L - i, "view", flushUs + i * day))
+        mem.addData((-1L - i, -1L - i, "view", flushUs + i * day))
         q.processAllAvailable()
       }
       recordState(q, stats)
@@ -955,7 +955,7 @@ object EventStream {
       val maxUs = rows.iterator.map(_._3).max
       val day = 24L * 3600L * 1000000L
       for (i <- 1 to 2) {
-        mem.addData((-1L, -i.toLong, maxUs + i * day))
+        mem.addData((-i.toLong, -i.toLong, maxUs + i * day))
         q.processAllAvailable()
       }
       recordState(q, stats)

@@ -2,16 +2,29 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.io.WKTReader
+import org.locationtech.jts.geom.{Geometry, IntersectionMatrix}
+import graft.functions.{Jts, StIm}
 import graft.geometry.SegmentedIM
 
-/** Differential test of the exact segmented DE-9IM against plain JTS
-  * relate: random star polygons of wildly different sizes (the huge ×
-  * local case is the one the optimization exists for), at several θ
-  * granularities, plus containment/touch fixtures.
+/** Differential tests of the heavy polygon branch of the adaptive
+  * DE-9IM against plain JTS relate: random star polygons of wildly
+  * different sizes (the huge × local case is the one the branch exists
+  * for), plus containment/touch/hole fixtures; and of the opt-in RANK
+  * early-exit form (J8) on the intersects decision. The exact heavy
+  * branch is the prepared RelateNG kernel (`StIm.matrix`, every
+  * polygon pair forced onto it with minPoints = 0); the "segmented IM"
+  * test names date from the segment-union form it replaced. θ no
+  * longer enters the exact kernel, so the θ loops re-run each pair
+  * against the warm prepared cache.
   */
 class SegmentedIMSpec extends AnyFunSuite {
   private val rd = new WKTReader()
   private val rnd = new scala.util.Random(97)
+
+  /** The heavy-branch kernel on (a, b), every polygon pair forced onto
+    * the prepared branch. */
+  private def kernel(a: Geometry, b: Geometry): IntersectionMatrix =
+    StIm.matrix(Jts.toWkb(a), Jts.toWkb(b), 0)
 
   private def star(cx: Double, cy: Double, r: Double) =
     rd.read(TestGeoms.starPolygon(rnd, cx, cy, r))
@@ -27,7 +40,7 @@ class SegmentedIMSpec extends AnyFunSuite {
       a <- geoms; b <- geoms
     } {
       val expected = a.relate(b).toString
-      val got = SegmentedIM.im(a, b, theta, theta).toString
+      val got = kernel(a, b).toString
       assert(got === expected, s"theta=$theta a=${a.getNumPoints}pts b=${b.getNumPoints}pts")
     }
   }
@@ -71,7 +84,7 @@ class SegmentedIMSpec extends AnyFunSuite {
       theta <- Seq(4.0, 9.0, 25.0)
       (a, b) <- Seq((l, boxFar), (boxFar, l), (l, boxTouch), (boxTouch, l),
                     (l, boxOverlap), (boxOverlap, l))
-    } assert(SegmentedIM.im(a, b, theta, theta).toString === a.relate(b).toString,
+    } assert(kernel(a, b).toString === a.relate(b).toString,
       s"theta=$theta")
   }
 
@@ -128,7 +141,7 @@ class SegmentedIMSpec extends AnyFunSuite {
       a <- geoms; b <- geoms
     } {
       import graft.geometry.Decompose.gridSegments
-      val exact = SegmentedIM.im(a, b, theta, theta)
+      val exact = a.relate(b)
       val early = SegmentedIM.imEarlyExit(a, b,
         gridSegments(a, theta, theta), gridSegments(b, theta, theta))
       // only the intersects DECISION is contractual for the early-exit
@@ -186,7 +199,7 @@ class SegmentedIMSpec extends AnyFunSuite {
       theta <- Seq(5.0, 13.0, 30.0)
       b <- others
       (x, y) <- Seq((donut, b), (b, donut))
-    } assert(SegmentedIM.im(x, y, theta, theta).toString === x.relate(y).toString,
+    } assert(kernel(x, y).toString === x.relate(y).toString,
       s"theta=$theta b=${b.toText.take(40)}")
   }
 
@@ -197,7 +210,7 @@ class SegmentedIMSpec extends AnyFunSuite {
     val far   = rd.read("POLYGON((300 300, 310 300, 310 310, 300 310, 300 300))")
     Seq((outer, inner), (inner, outer), (outer, edge), (edge, outer),
         (outer, far), (inner, inner)).foreach { case (a, b) =>
-      assert(SegmentedIM.im(a, b, 9.0, 9.0).toString === a.relate(b).toString)
+      assert(kernel(a, b).toString === a.relate(b).toString)
     }
   }
 }
