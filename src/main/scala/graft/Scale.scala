@@ -14,13 +14,12 @@ import graft.sources.ScaleCorpus
   * per-partition stats (hot-spot proof) for the batch join.
   *
   * Queries: sp3 batch IM counts, sp12 balanced, pr1/pr10 progressive,
-  * seg exact vs early-exit (the J8 flag decision, measured), dd5/dd8/
-  * dd11 dedup, ann5/ann8 ANN.
+  * dd5/dd8/dd11 dedup, ann5/ann8 ANN.
   *
   * Usage: runMain graft.Scale [baseSfDir] [mults] [outBase] [onlyPrefixes]
   *   e.g.  runMain graft.Scale /root/testdata/sf0.01 1,10,100 /root/repo/scale
   *   The optional 4th arg is a comma list of result-key PREFIXES — only
-  *   matching experiments run (special sections: `seg`, `cc`, `stream`,
+  *   matching experiments run (special sections: `cc`, `stream`,
   *   `replay`, `a6`). For fast single-curve re-measurement while
   *   iterating; the committed SCALING artifact always comes from an
   *   unfiltered run.
@@ -184,7 +183,7 @@ object Scale {
       // spatial frames only materialize when a spatial/progressive/a6
       // experiment is actually selected — a filtered text-only run
       // must not pay the WKT parse+persist of 2M+ geometries.
-      val wantSpatial = Seq("sp", "pr", "seg", "a6").exists(p =>
+      val wantSpatial = Seq("sp", "pr", "a6").exists(p =>
         only.forall(_.exists(_.startsWith(p))))
       val corpus = (if (wantSpatial) Map(
           "part" -> partS.count(), "supp" -> suppS.count(),
@@ -211,20 +210,6 @@ object Scale {
         ProgressiveTyped.earlyStopping(partS, suppS, "w_js",
           relation = "contains", batchSize = 100,
           precisionLevel = 0.0, maxViolations = 1).toDF().mcount() }
-      // J8 early-exit decision: forced heavy-branch adaptive IM (the
-      // sp10 shape), exact prepared matrix vs RANK early-exit, same corpus
-      run("seg_exact", 2) {
-        SpatialJoin.de9im(triS, suppS, minPoints = 4).mcount() }
-      run("seg_earlyexit", 2) {
-        SpatialJoin.de9im(triS, suppS, minPoints = 4,
-          earlyExit = true).mcount() }
-      val segDiff = if (!want("seg")) -1L else
-        SpatialJoin.de9im(triS, suppS, minPoints = 4)
-          .select(col("s_id"), col("t_id"), col("intersects"))
-          .exceptAll(SpatialJoin.de9im(triS, suppS, minPoints = 4,
-            earlyExit = true)
-            .select(col("s_id"), col("t_id"), col("intersects")))
-          .mcount()
       // sp15's kNN at scale: supplier-box centroids probing the part
       // corpus (100k queries vs 2M targets at 100x) — the measured
       // curve for the grid+certificate+residual operator whose
@@ -674,7 +659,6 @@ object Scale {
       // across an hour on this box).
       val (probe, load) = (graft.Bench.contentionProbe(), graft.Bench.loadavg())
       println(s"""{"scale":$n,"kind":"batch","base":"$baseDir",""" +
-        s""""seg_intersects_diff":$segDiff,""" +
         s""""cc_rounds":$ccRounds,"cc_alt_rounds":$ccAltRounds,"events":$events,""" +
         f""""probe_sec":$probe%.4f,"loadavg":$load%.2f,""" +
         driftJson +

@@ -6,14 +6,16 @@ import graft.operators.{SkewBalancing, SpatialJoin}
 
 /** Skew stress (dev tool): a handful of giant many-vertex polygons in a
   * dense world of small boxes — every hot target collects thousands of
-  * candidates, each costing a multi-millisecond JTS relate. Compares:
+  * candidates, each costing a multi-millisecond JTS relate. Times L2
+  * (balancedDe9im: round-robin the hot pairs; every executor relates
+  * against the full hot geometry), then the typed progressive paths
+  * over the same dense corpus.
   *
-  *   L2 (balancedDe9im)           — round-robin the hot pairs; every
-  *                                  executor relates against the full
-  *                                  hot geometry.
-  *   L3 (rebalancedSegmentedDe9im) — decompose + union once per batch
-  *                                  during scheduling; executors relate
-  *                                  against the small shipped unions.
+  * L3 segment-batched re-batching (decompose the hot geometry and union
+  * the candidate segments once per batch during scheduling) was
+  * measured here at sf0.1 (4 cores, z = 0, 7 warm alternations): L2
+  * 3.0–3.6 s, L3 4.1–5.4 s, equal rows; L2 won every time and L3 was
+  * deleted.
   *
   * Usage: runMain graft.StressSkew [sfDir]
   */
@@ -79,15 +81,10 @@ object StressSkew {
 
     val l2 = time("hot-target verify, L2 round-robin")(
       SkewBalancing.balancedDe9im(src, tgt, 0.0).count())
-    val l3 = time("hot-target verify, L3 segment-batched")(
-      SkewBalancing.rebalancedSegmentedDe9im(src, tgt, 0.0).count())
-    println(s"[skew] rows l2=$l2 l3=$l3 equal=${l2 == l3}")
-    // run each twice: second run has warm geometry/segment caches
+    // second run has warm geometry/prepared caches
     val l2b = time("L2 again (warm)")(
       SkewBalancing.balancedDe9im(src, tgt, 0.0).count())
-    val l3b = time("L3 again (warm)")(
-      SkewBalancing.rebalancedSegmentedDe9im(src, tgt, 0.0).count())
-    println(s"[skew] warm rows l2=$l2b l3=$l3b")
+    println(s"[skew] rows l2=$l2 warm=$l2b")
 
     // Dense-partition dynamic PQ: hot targets collect thousands of
     // candidates per partition, but the typed drain holds only

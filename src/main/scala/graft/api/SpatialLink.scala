@@ -53,10 +53,6 @@ case class SpatialLink(source: DataFrame, target: DataFrame,
   def relate(relation: String): DataFrame =
     SpatialJoin.relate(source, target, relation, granularity)
 
-  /** Segmented intersects join (decomposed verification). */
-  def relateSegmented(): DataFrame =
-    SpatialJoin.relateSegmented(source, target, granularity = granularity)
-
   /** Spatio-temporal join (entities must carry a ts column). */
   def relateTemporal(relation: String, maxDays: Int = 2): DataFrame =
     SpatialJoin.temporalRelate(source, target, relation, maxDays, granularity)

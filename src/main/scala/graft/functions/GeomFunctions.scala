@@ -60,18 +60,6 @@ object GeomCache {
     if (g == null) { g = Jts.fromWkb(wkb); c.put(k, g) }
     g
   }
-  private val segs = ThreadLocal.withInitial[Lru[(ByteBuffer, Double, Double), Seq[(Long, Long, Geometry)]]](
-    () => new Lru(256)) // segments are bulky; smaller budget
-  def segments(wkb: Array[Byte], thetaX: Double, thetaY: Double): Seq[(Long, Long, Geometry)] = {
-    val k = (ByteBuffer.wrap(wkb), thetaX, thetaY)
-    val c = segs.get()
-    var s = c.get(k)
-    if (s == null) {
-      s = graft.geometry.Decompose.gridSegments(geometry(wkb), thetaX, thetaY)
-      c.put(k, s)
-    }
-    s
-  }
   def prepared(wkb: Array[Byte]): PreparedGeometry = {
     val k = ByteBuffer.wrap(wkb)
     val c = preps.get()
@@ -80,7 +68,7 @@ object GeomCache {
     p
   }
   private val relates = ThreadLocal.withInitial[Lru[ByteBuffer, RelateNG]](
-    () => new Lru(256)) // edge indexes of large operands: same budget as segments
+    () => new Lru(256)) // edge indexes of large operands are bulky; smaller budget
   /** Full DE-9IM of (g1, g2), parsed from (wkb1, wkb2), through a
     * prepared JTS RelateNG: the operand with more points is prepared
     * once per thread (keyed by its WKB) and its edge index reused by
@@ -192,28 +180,22 @@ case class StIntersectionArea(left: Expression, right: Expression)
 }
 
 /** Full DE-9IM verification: one IntersectionMatrix per pair from
-  * [[StIm.matrix]], all ten topological booleans extracted from it
-  * (mirrors DS-JedAI `model/IM.scala:6-39`). Emitting them all at once
-  * means downstream relation-count aggregation is plain sum(when(..)).
+  * [[StIm.matrix]] (`minPoints` is its prepared-branch cutoff), all ten
+  * topological booleans extracted from it (mirrors DS-JedAI
+  * `model/IM.scala:6-39`). Emitting them all at once means downstream
+  * relation-count aggregation is plain sum(when(..)).
   */
-case class StIm(left: Expression, right: Expression)
+case class StIm(left: Expression, right: Expression, minPoints: Int = StIm.MinPoints)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = StIm.schema
-  override def nullable: Boolean = true
   override def nullSafeEval(l: Any, r: Any): Any =
-    StIm.row(l.asInstanceOf[Array[Byte]], r.asInstanceOf[Array[Byte]], StIm.MinPoints)
+    StIm.row(l.asInstanceOf[Array[Byte]], r.asInstanceOf[Array[Byte]], minPoints)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
 object StIm {
   /** Point-count cutoff of the prepared branch (sum over both operands). */
   val MinPoints = 64
-
-  /** True when the pair is polygonal and heavy enough for the prepared
-    * branch of [[matrix]]. */
-  def heavy(g1: Geometry, g2: Geometry, minPoints: Int): Boolean =
-    g1.getDimension == 2 && g2.getDimension == 2 &&
-      g1.getNumPoints + g2.getNumPoints >= minPoints
 
   /** The one DE-9IM kernel: rectangle pairs take the analytic interval
     * IM (~ns); polygonal pairs of at least `minPoints` points relate
@@ -231,7 +213,9 @@ object StIm {
         graft.geometry.RectIM.matrix(
           e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
           e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
-    } else if (heavy(g1, g2, minPoints)) GeomCache.relatePrepared(wkb1, g1, wkb2, g2)
+    } else if (g1.getDimension == 2 && g2.getDimension == 2 &&
+               g1.getNumPoints + g2.getNumPoints >= minPoints)
+      GeomCache.relatePrepared(wkb1, g1, wkb2, g2)
     else g1.relate(g2)
 
   /** [[matrix]] as a [[schema]] row. */
@@ -247,66 +231,17 @@ object StIm {
       im.isEquals(d1, d2)))
   }
 
-  // nullable: StImAdaptive's early-exit branch emits NULL for every
-  // column except `intersects` (partial accumulation — see there); the
-  // exact paths never produce nulls
   val schema: StructType = StructType(Seq(
-    StructField("de9im", StringType, nullable = true),
+    StructField("de9im", StringType, nullable = false),
     StructField("intersects", BooleanType, nullable = false),
-    StructField("contains", BooleanType, nullable = true),
-    StructField("within", BooleanType, nullable = true),
-    StructField("covers", BooleanType, nullable = true),
-    StructField("coveredby", BooleanType, nullable = true),
-    StructField("crosses", BooleanType, nullable = true),
-    StructField("overlaps", BooleanType, nullable = true),
-    StructField("touches", BooleanType, nullable = true),
-    StructField("equals", BooleanType, nullable = true)))
-}
-
-/** Adaptive DE-9IM verification: [[StIm.matrix]] with a settable
-  * `minPoints` cutoff — rectangles → analytic interval IM; polygon
-  * pairs of at least `minPoints` points → the larger operand's cached
-  * prepared RelateNG (its edge index is built once per thread and
-  * reused across every pair it joins); everything else → plain JTS
-  * relate. children: wkb1, wkb2, θx, θy, minPoints, earlyExit
-  * (literals). With earlyExit=true the heavy polygon branch instead
-  * runs the reference's RANK-ordered early-exit accumulation over
-  * cached θ-grid segments ([[graft.geometry.SegmentedIM.imEarlyExit]])
-  * — only the intersects decision is contractual there, so it stays
-  * default-off AND every other output column is emitted as NULL on
-  * that branch (never a silently under-set false). Output schema
-  * identical to [[StIm]].
-  */
-case class StImAdaptive(children: Seq[Expression]) extends Expression with CodegenFallback {
-  override def dataType: DataType = StIm.schema
-  override def nullable: Boolean = children.take(2).exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val l = children(0).eval(input); val r = children(1).eval(input)
-    if (l == null || r == null) return null
-    val minPts = children(4).eval(input).asInstanceOf[Int]
-    val earlyExit =
-      children.length > 5 && children(5).eval(input).asInstanceOf[Boolean]
-    val wkb1 = l.asInstanceOf[Array[Byte]]; val wkb2 = r.asInstanceOf[Array[Byte]]
-    if (earlyExit) {
-      val g1 = GeomCache.geometry(wkb1); val g2 = GeomCache.geometry(wkb2)
-      if (!(g1.isRectangle && g2.isRectangle) && StIm.heavy(g1, g2, minPts)) {
-        val thetaX = children(2).eval(input).asInstanceOf[Double]
-        val thetaY = children(3).eval(input).asInstanceOf[Double]
-        val im = graft.geometry.SegmentedIM.imEarlyExit(g1, g2,
-          GeomCache.segments(wkb1, thetaX, thetaY),
-          GeomCache.segments(wkb2, thetaX, thetaY))
-        // The accumulation stopped at the intersects decision, so every
-        // other entry may be under-set; emit NULL there rather than a
-        // silently wrong false (a disjoint result is complete: the
-        // canonical FF2FF1212 came back and nulls stay correct-by-vacuity)
-        return new GenericInternalRow(Array[Any](
-          null, !im.isDisjoint, null, null, null, null, null, null, null, null))
-      }
-    }
-    StIm.row(wkb1, wkb2, minPts)
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(cs)
+    StructField("contains", BooleanType, nullable = false),
+    StructField("within", BooleanType, nullable = false),
+    StructField("covers", BooleanType, nullable = false),
+    StructField("coveredby", BooleanType, nullable = false),
+    StructField("crosses", BooleanType, nullable = false),
+    StructField("overlaps", BooleanType, nullable = false),
+    StructField("touches", BooleanType, nullable = false),
+    StructField("equals", BooleanType, nullable = false)))
 }
 
 /** Single-relation verification (DS-JedAI `linkers/GIAnt.scala:19-25`).
@@ -415,29 +350,6 @@ case class StFineEnvelopes(children: Seq[Expression]) extends Expression with Co
     copy(cs)
 }
 
-/** θ-grid decomposition (DS-JedAI GridDecomposer semantics): the
-  * geometry split along grid lines into per-tile segments.
-  * children: wkb, θx (lit), θy (lit). Output rows: (tile, seg wkb). */
-case class StGridSegments(children: Seq[Expression]) extends Expression with CodegenFallback {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("tile", LongType, nullable = false),
-    StructField("seg", BinaryType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = children.head.nullable
-  override def eval(input: InternalRow): Any = {
-    val wkb = children(0).eval(input)
-    if (wkb == null) return null
-    val tx = children(1).eval(input).asInstanceOf[Double]
-    val ty = children(2).eval(input).asInstanceOf[Double]
-    val g = Jts.fromWkb(wkb.asInstanceOf[Array[Byte]])
-    val segs = graft.geometry.Decompose.gridSegments(g, tx, ty)
-    new GenericArrayData(segs.map { case (x, y, seg) =>
-      new GenericInternalRow(Array[Any](Jts.encodeTile(x, y), Jts.toWkb(seg)))
-    }.toArray[Any])
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(cs)
-}
-
 /** Coordinate precision reduction (DS-JedAI D6,
   * `utils/geometryUtils/GeometryUtils.scala:18-24`): snap coordinates
   * to a fixed decimal grid via JTS's precision reducer — the loader
@@ -499,14 +411,8 @@ object GeomFunctions {
   def st_area(geom: Column): Column = mk(StArea(ex(geom)))
   def st_intersection_area(l: Column, r: Column): Column =
     mk(StIntersectionArea(ex(l), ex(r)))
-  def st_im(l: Column, r: Column): Column = mk(StIm(ex(l), ex(r)))
-  def st_im_adaptive(l: Column, r: Column, thetaX: Double, thetaY: Double,
-                     minPoints: Int = StIm.MinPoints, earlyExit: Boolean = false): Column =
-    mk(StImAdaptive(Seq(ex(l), ex(r),
-      org.apache.spark.sql.catalyst.expressions.Literal(thetaX),
-      org.apache.spark.sql.catalyst.expressions.Literal(thetaY),
-      org.apache.spark.sql.catalyst.expressions.Literal(minPoints),
-      org.apache.spark.sql.catalyst.expressions.Literal(earlyExit))))
+  def st_im(l: Column, r: Column, minPoints: Int = StIm.MinPoints): Column =
+    mk(StIm(ex(l), ex(r), minPoints))
   def st_predicate(l: Column, r: Column, relation: String): Column =
     mk(StPredicate(ex(l), ex(r), relation))
   def tile_cover(minx: Column, miny: Column, maxx: Column, maxy: Column,
@@ -521,8 +427,4 @@ object GeomFunctions {
     mk(StFineEnvelopes(Seq(ex(geom),
       org.apache.spark.sql.catalyst.expressions.Literal(thetaX),
       org.apache.spark.sql.catalyst.expressions.Literal(maxEnvs))))
-  def st_grid_segments(geom: Column, thetaX: Double, thetaY: Double): Column =
-    mk(StGridSegments(Seq(ex(geom),
-      org.apache.spark.sql.catalyst.expressions.Literal(thetaX),
-      org.apache.spark.sql.catalyst.expressions.Literal(thetaY))))
 }

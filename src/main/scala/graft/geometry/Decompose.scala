@@ -4,13 +4,15 @@ import org.locationtech.jts.geom.{Envelope, Geometry, GeometryFactory}
 import graft.functions.Jts
 
 /** Geometry decomposition — the capability of DS-JedAI's decompose
-  * package (D1 `RecursiveDecomposer`, D2 `GridDecomposer`,
-  * D3 `EnvelopeRefiner`), re-implemented on JTS set operations instead
-  * of the reference's hand-rolled blade/edge-walk math: a segment is
-  * the JTS intersection of the geometry with a clip rectangle. This
-  * trades a little CPU for far less code and inherits JTS's robustness
-  * fixes; invariants (area/length preservation, one-tile alignment,
-  * envelope tightening) are property-tested.
+  * package (D1 `RecursiveDecomposer`, D3 `EnvelopeRefiner`),
+  * re-implemented on JTS set operations instead of the reference's
+  * hand-rolled blade/edge-walk math: a piece is the JTS intersection of
+  * the geometry with a clip rectangle. This trades a little CPU for far
+  * less code and inherits JTS's robustness fixes; invariants (area
+  * preservation, piece size, envelope tightening) are property-tested.
+  * D2 `GridDecomposer` (per-θ-tile segments) is not kept: it served
+  * only segment-wise verification, which exact whole-geometry relate
+  * replaced (clipping at grid lines lost point touches).
   */
 object Decompose {
 
@@ -24,10 +26,10 @@ object Decompose {
     val c = g.intersection(clipRect(minx, miny, maxx, maxy))
     if (c.isEmpty) return None
     // Keep only components of g's own dimension. A lower-dimensional
-    // piece (edge/corner sliver) lies on the tile border and is covered
-    // by the neighbouring tile's CLOSED intersection, so dropping it
+    // piece (edge/corner sliver) lies on the clip border and is covered
+    // by the neighbouring piece's CLOSED intersection, so dropping it
     // loses nothing — while a mixed GeometryCollection would poison
-    // downstream UnaryUnionOp/relate (JTS rejects GC arguments).
+    // downstream JTS operations (they reject GC arguments).
     val dim = g.getDimension
     if (c.getGeometryType != "GeometryCollection") {
       if (c.getDimension == dim) Some(c) else None
@@ -38,47 +40,6 @@ object Decompose {
       else if (parts.size == 1) Some(parts.head)
       else Some(f.buildGeometry(java.util.Arrays.asList(parts: _*)))
     }
-  }
-
-  /** D2: split along every θ-grid line — each output segment lies in
-    * exactly one tile. Returns (tileX, tileY, segment).
-    *
-    * Implemented by RECURSIVE BISECTION at midpoint grid lines (the
-    * reference RecursiveDecomposer's blade strategy,
-    * `decompose/RecursiveDecomposer.scala:12-249`): each cut halves the
-    * remaining piece, so total work is O(n log tiles) instead of the
-    * naive per-tile clip's O(n x tiles) — the difference between
-    * milliseconds and minutes for a many-vertex geometry spanning
-    * hundreds of tiles. Tile assignment is identical because
-    * intersection with nested rectangles composes:
-    * (g ∩ half) ∩ tile = g ∩ tile when tile ⊆ half. */
-  def gridSegments(g: Geometry, thetaX: Double, thetaY: Double): Seq[(Long, Long, Geometry)] = {
-    val env = g.getEnvelopeInternal
-    val x0 = math.floor(env.getMinX / thetaX).toLong
-    val x1 = math.floor(env.getMaxX / thetaX).toLong
-    val y0 = math.floor(env.getMinY / thetaY).toLong
-    val y1 = math.floor(env.getMaxY / thetaY).toLong
-    def rec(p: Geometry, ax0: Long, ax1: Long, ay0: Long, ay1: Long): Seq[(Long, Long, Geometry)] = {
-      if (p.isEmpty) Nil
-      else if (ax0 == ax1 && ay0 == ay1) Seq((ax0, ay0, p))
-      else if (ax1 - ax0 >= ay1 - ay0) {
-        val xm = (ax0 + ax1) >> 1 // left tiles ax0..xm, right xm+1..ax1
-        val cut = (xm + 1) * thetaX
-        val l = clip(p, ax0 * thetaX, ay0 * thetaY, cut, (ay1 + 1) * thetaY)
-        val r = clip(p, cut, ay0 * thetaY, (ax1 + 1) * thetaX, (ay1 + 1) * thetaY)
-        l.toSeq.flatMap(rec(_, ax0, xm, ay0, ay1)) ++
-          r.toSeq.flatMap(rec(_, xm + 1, ax1, ay0, ay1))
-      } else {
-        val ym = (ay0 + ay1) >> 1
-        val cut = (ym + 1) * thetaY
-        val b = clip(p, ax0 * thetaX, ay0 * thetaY, (ax1 + 1) * thetaX, cut)
-        val t = clip(p, ax0 * thetaX, cut, (ax1 + 1) * thetaX, (ay1 + 1) * thetaY)
-        b.toSeq.flatMap(rec(_, ax0, ax1, ay0, ym)) ++
-          t.toSeq.flatMap(rec(_, ax0, ax1, ym + 1, ay1))
-      }
-    }
-    if (x0 == x1 && y0 == y1) Seq((x0, y0, g)) // fits one tile
-    else rec(g, x0, x1, y0, y1)
   }
 
   /** D1: recursively bisect (midpoint of the longer θ-relative axis)

@@ -45,7 +45,7 @@ object GeoQueries {
     * CCW, integer coordinates. The horizontal base edge makes one SAT
     * axis collapse into the y-axis, so the DuckDB oracle needs only two
     * extra separating axes per pair (see [[TriangleSql]]). These put
-    * the NON-rectangle verification path (JTS relate / segmented IM)
+    * the NON-rectangle verification path (JTS relate / prepared RelateNG)
     * through the hash-checked driver gate. */
   private def customerTriangleWkt(df: DataFrame): DataFrame = {
     val ax = (col("c_custkey") * 19) % 970
@@ -310,8 +310,8 @@ object GeoQueries {
   /** Triangle ∩ box single-relation join — the general-polygon (non-
     * rectangle) verification path through the hash-checked gate: every
     * source geometry is a triangle, so NO pair can take the analytic
-    * rectangle-pair fast path; verification is genuine JTS relate /
-    * segmented IM. */
+    * rectangle-pair fast path; verification is the triangle's JTS
+    * PreparedGeometry intersects against the whole box. */
   def sp6TriangleBoxIntersects(s: SparkSession, dir: String): DataFrame =
     SpatialJoin.relate(customerTriangles(s, dir), supplierBoxes(s, dir), "intersects")
       .orderBy(col("s_id"), col("t_id"))
@@ -335,18 +335,23 @@ object GeoQueries {
         col("touches"), col("within"), col("coveredby"))
       .orderBy(col("s_id"), col("t_id"))
 
-  /** Segmented (decompose-join-verify) intersects join on the triangle
-    * corpus — the J8 grid-segment path through the hash gate; must
-    * equal sp6 exactly (same oracle SQL). */
+  /** sp6 with the operands swapped: supplier boxes are the source, so
+    * θ comes from the box extents and the box is the prepared operand
+    * of every intersects check; the ids are swapped back so the rows
+    * equal sp6's exactly (same oracle SQL). The gate name is part of
+    * the driver contract; no θ-grid segments are involved. */
   def sp9SegmentedTriangle(s: SparkSession, dir: String): DataFrame =
-    SpatialJoin.relateSegmented(customerTriangles(s, dir), supplierBoxes(s, dir))
+    SpatialJoin.relate(supplierBoxes(s, dir), customerTriangles(s, dir), "intersects")
+      .select(col("t_id").as("s_id"), col("s_id").as("t_id"))
       .orderBy(col("s_id"), col("t_id"))
 
-  /** Adaptive DE-9IM with the heavy polygon branch FORCED (minPoints=4,
-    * so every triangle-box pair is over the cutoff): the prepared
-    * RelateNG kernel (the larger operand prepared once per thread, the
-    * matrix transposed back when that is the right-hand one) is
-    * hash-checked against the closed-form SAT oracle. */
+  /** DE-9IM with the prepared branch of [[graft.functions.StIm.matrix]]
+    * FORCED (minPoints=4, so every triangle-box pair is over the
+    * cutoff): the prepared RelateNG kernel (the larger operand prepared
+    * once per thread, the matrix transposed back when that is the
+    * right-hand one) is hash-checked against the closed-form SAT
+    * oracle. The gate name is part of the driver contract; no θ-grid
+    * segments are involved. */
   def sp10SegmentedIm(s: SparkSession, dir: String): DataFrame =
     // the single-partition corpora make candidatePairs spread the
     // narrow pair frame across cores before the blob joins
@@ -710,7 +715,7 @@ object GeoQueries {
          SELECT CAST(s.id AS VARCHAR) AS s_id, CAST(t.id AS VARCHAR) AS t_id
          FROM trie s, tb t WHERE ${TriangleSql.intersects}
          ORDER BY 1, 2""",
-    // identical semantics to sp6 via the segmented join path
+    // identical semantics to sp6, operands swapped
     "sp9_segmented_triangle" ->
       s"""$geomCtes, $triCte
          SELECT CAST(s.id AS VARCHAR) AS s_id, CAST(t.id AS VARCHAR) AS t_id

@@ -59,21 +59,29 @@ object Progressive {
       broadcast(df)
     else df
 
-  /** Tile-range helpers over candidate-pair columns. */
-  private def tmin(c: Column, theta: Double) = floor(c / theta)
-  private def tmax(c: Column, theta: Double) = floor(c / theta)
+  /** Broadcast the budget-bounded narrow frame when the budget is
+    * broadcast-sized (see [[progressiveVerify]]). */
+  private def hinted(df: DataFrame, budget: Int): DataFrame =
+    if (budget <= BroadcastableBudget) broadcast(df) else df
+
+  /** θ-tile counts of a candidate pair's MBRs: (common tiles CF, the
+    * source's tiles, the target's tiles). */
+  private def tileCounts(theta: Theta): (Column, Column, Column) = {
+    def tile(c: String, th: Double) = floor(col(c) / th)
+    val sx0 = tile("s_minx", theta.x); val sx1 = tile("s_maxx", theta.x)
+    val sy0 = tile("s_miny", theta.y); val sy1 = tile("s_maxy", theta.y)
+    val tx0 = tile("t_minx", theta.x); val tx1 = tile("t_maxx", theta.x)
+    val ty0 = tile("t_miny", theta.y); val ty1 = tile("t_maxy", theta.y)
+    ((least(sx1, tx1) - greatest(sx0, tx0) + 1) *
+       (least(sy1, ty1) - greatest(sy0, ty0) + 1),
+     (sx1 - sx0 + 1) * (sy1 - sy0 + 1),
+     (tx1 - tx0 + 1) * (ty1 - ty0 + 1))
+  }
 
   /** Add weight columns to a `SpatialJoin.candidatePairs` output.
     * CF = common θ-tiles; JS = tile Jaccard; MBRO = MBR IoU. */
   def withWeights(pairs: DataFrame, theta: Theta): DataFrame = {
-    val sx0 = tmin(col("s_minx"), theta.x); val sx1 = tmax(col("s_maxx"), theta.x)
-    val sy0 = tmin(col("s_miny"), theta.y); val sy1 = tmax(col("s_maxy"), theta.y)
-    val tx0 = tmin(col("t_minx"), theta.x); val tx1 = tmax(col("t_maxx"), theta.x)
-    val ty0 = tmin(col("t_miny"), theta.y); val ty1 = tmax(col("t_maxy"), theta.y)
-    val cf = (least(sx1, tx1) - greatest(sx0, tx0) + 1) *
-             (least(sy1, ty1) - greatest(sy0, ty0) + 1)
-    val tilesS = (sx1 - sx0 + 1) * (sy1 - sy0 + 1)
-    val tilesT = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
+    val (cf, tilesS, tilesT) = tileCounts(theta)
     val ix = least(col("s_maxx"), col("t_maxx")) - greatest(col("s_minx"), col("t_minx"))
     val iy = least(col("s_maxy"), col("t_maxy")) - greatest(col("s_miny"), col("t_miny"))
     val ia = ix * iy
@@ -96,14 +104,7 @@ object Progressive {
     * `WeightedPairFactory.scala:112`) needs `s_npoints`/`t_npoints`
     * columns (see [[withPointCounts]]). */
   def withChi2Weight(pairs: DataFrame, theta: Theta, totalTiles: Double): DataFrame = {
-    val sx0 = tmin(col("s_minx"), theta.x); val sx1 = tmax(col("s_maxx"), theta.x)
-    val sy0 = tmin(col("s_miny"), theta.y); val sy1 = tmax(col("s_maxy"), theta.y)
-    val tx0 = tmin(col("t_minx"), theta.x); val tx1 = tmax(col("t_maxx"), theta.x)
-    val ty0 = tmin(col("t_miny"), theta.y); val ty1 = tmax(col("t_maxy"), theta.y)
-    val cf = (least(sx1, tx1) - greatest(sx0, tx0) + 1) *
-             (least(sy1, ty1) - greatest(sy0, ty0) + 1)
-    val tilesS = (sx1 - sx0 + 1) * (sy1 - sy0 + 1)
-    val tilesT = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
+    val (cf, tilesS, tilesT) = tileCounts(theta)
     val n = lit(totalTiles)
     val o11 = cf
     val o12 = tilesS - cf
@@ -147,16 +148,6 @@ object Progressive {
       case other => throw new IllegalArgumentException(s"unknown scheme: $other")
     }
 
-  /** ProgressiveGIAnt: global budget top-k by weight, then verify in
-    * weight order (reference `ProgressiveGIAnt.scala:25-42`).
-    * Deterministic ties via the id pair.
-    *
-    * Scale shape: ranking goes through [[Ranks.withGlobalRank]]
-    * (range-exchange + per-partition offsets) — no single-partition
-    * window, no `TakeOrdered` driver collect of budget rows — and the
-    * JTS predicate runs only on the `rank <= budget` survivors, so
-    * geometry work is budget-bounded exactly like the reference's
-    * prorated per-partition PQs. */
   /** Provision entity frames / candidate columns for any of the five
     * reference weighting functions: CF/JS/MBRO come from the MBR tile
     * closed forms, X2 additionally needs the global tile count, ISP
@@ -181,6 +172,16 @@ object Progressive {
     out
   }
 
+  /** ProgressiveGIAnt: global budget top-k by weight, then verify in
+    * weight order (reference `ProgressiveGIAnt.scala:25-42`).
+    * Deterministic ties via the id pair.
+    *
+    * Scale shape: ranking goes through [[Ranks.withGlobalRank]]
+    * (range-exchange + per-partition offsets) — no single-partition
+    * window, no `TakeOrdered` driver collect of budget rows — and the
+    * JTS predicate runs only on the `rank <= budget` survivors, so
+    * geometry work is budget-bounded exactly like the reference's
+    * prorated per-partition PQs. */
   def progressiveVerify(source0: DataFrame, target0: DataFrame, weight: String,
                         budget: Int, relation: String = "intersects",
                         granularity: String = "avg"): DataFrame = {
@@ -206,11 +207,9 @@ object Progressive {
     // the row gate (a huge budget — ConfigRunner defaults to 10M, the
     // exhaustive tests use MaxValue — must take the plain shuffled-join
     // plan instead of collecting geometry to the driver).
-    def hinted(df: DataFrame): DataFrame =
-      if (budget <= Progressive.BroadcastableBudget) broadcast(df) else df
-    val withS = hinted(bounded)
+    val withS = hinted(bounded, budget)
       .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
-    Progressive.geomHinted(withS, budget, source)
+    geomHinted(withS, budget, source)
       .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
       .withColumn("qualifies",
         graft.functions.GeomFunctions.st_predicate(col("s_geom"), col("t_geom"), relation))
@@ -290,9 +289,7 @@ object Progressive {
     // when the budget is broadcast-sized (see progressiveVerify — the
     // default budget here is unbounded; the geometry-carrying second
     // frame additionally passes the byte-estimate gate)
-    def hinted(df: DataFrame): DataFrame =
-      if (budget <= Progressive.BroadcastableBudget) broadcast(df) else df
-    val bounded = Progressive.geomHinted(hinted(ranked)
+    val bounded = geomHinted(hinted(ranked, budget)
         .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id"),
         budget, source)
       .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")

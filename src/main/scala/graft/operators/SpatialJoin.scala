@@ -24,8 +24,11 @@ import graft.functions.StIm
   *      the top-left corner of the MBR intersection — replicated pairs
   *      survive exactly once WITHOUT any dropDuplicates shuffle
   *      (reference: `linkers/LinkerT.scala:30-41`).
-  *   6. Verification — a single JTS relate per surviving pair via the
-  *      `st_im` expression (DE-9IM) or `st_predicate` (single relation).
+  *   6. Verification — one exact DE-9IM per surviving pair via the
+  *      `st_im` expression ([[graft.functions.StIm.matrix]]: analytic
+  *      rectangle IM, prepared RelateNG for heavy polygon pairs, plain
+  *      JTS relate otherwise) or `st_predicate` (single relation). Every
+  *      verifier relates whole geometries; none decomposes them.
   *
   * Scale: both sides shuffle once on the tile id; everything after is
   * pipelined map-side. Verification cost is proportional to surviving
@@ -87,9 +90,7 @@ object SpatialJoin {
     * candidate replication; reference-point dedup removes duplicates),
     * so granularity is a performance dial, never a semantics dial —
     * ConfigRunnerSpec asserts result equality across all five. */
-  def computeTheta(source: DataFrame): Theta = computeTheta(source, "avg")
-
-  def computeTheta(source: DataFrame, granularity: String): Theta = {
+  def computeTheta(source: DataFrame, granularity: String = "avg"): Theta = {
     val ex = col("maxx") - col("minx")
     val ey = col("maxy") - col("miny")
     val (ax, ay) = granularity.toLowerCase match {
@@ -261,19 +262,12 @@ object SpatialJoin {
     * per-thread prepared RelateNG for polygon pairs of at least
     * `minPoints` points, plain JTS relate otherwise — rectangle-heavy
     * workloads skip JTS entirely. `granularity` is [[computeTheta]]'s
-    * statistic.
-    *
-    * `earlyExit = true` switches the heavy polygon branch to the
-    * reference's RANK-ordered early-exit accumulation over θ-grid
-    * segments (J8, `IndexedDecomposedEntity.scala:36-96`) — on that
-    * path only the intersects decision is contractual (partial
-    * accumulation may under-set exterior entries), so it is opt-in and
-    * default-off; the exact prepared matrix stays the default. */
+    * statistic. */
   def de9im(source: DataFrame, target: DataFrame, granularity: String = "avg",
-            minPoints: Int = StIm.MinPoints, earlyExit: Boolean = false): DataFrame = {
+            minPoints: Int = StIm.MinPoints): DataFrame = {
     val theta = computeTheta(source, granularity)
-    imRows(candidatePairs(source, target, theta), st_im_adaptive(
-      col("s_geom"), col("t_geom"), theta.x, theta.y, minPoints, earlyExit))
+    imRows(candidatePairs(source, target, theta),
+      st_im(col("s_geom"), col("t_geom"), minPoints))
   }
 
   /** Single-relation spatial join (DS-JedAI `SpatialJoinExp`): emit
@@ -336,49 +330,6 @@ object SpatialJoin {
         se.getField("maxy") >= te.getField("miny")))
     imRows(candidatePairs(s, t, theta).filter(anySubEnvIntersects),
       st_im(col("s_geom"), col("t_geom")))
-  }
-
-  /** Segmented single-relation join for `intersects` (reference J8
-    * segmented verification, exact for intersection): decompose both
-    * sides along the θ-grid, join per-tile segments, verify the small
-    * segments instead of whole geometries — the win is on huge
-    * geometries where whole-geometry JTS evaluation dominates.
-    * intersects(A,B) <=> some co-tiled segment pair intersects.
-    *
-    * The per-side decomposition (st_grid_segments explode) is session-
-    * cached like the entity frames, keyed by a 128-bit md5 of the input
-    * plan's CANONICALIZED string *combined with* `semanticHash()` + θ.
-    * Neither alone suffices: the 32-bit semanticHash has real
-    * birthday-collision odds across a long session, while the
-    * canonicalized STRING of a LocalRelation omits its rows (two
-    * in-memory corpora with the same schema print identically). A
-    * collision now needs both to match at once. Callers with a natural
-    * corpus identity (a source dir) can pass `corpusKey` to make the
-    * key self-describing, as the other DfCache.memo sites do.
-    * Decompose-cost dominates this join, and repeated invocations over
-    * the same corpus (warm bench runs, multi-query sessions) would
-    * otherwise re-segment both sides every time. */
-  def relateSegmented(source: DataFrame, target: DataFrame,
-                      corpusKey: String = "",
-                      granularity: String = "avg"): DataFrame = {
-    val theta = computeTheta(source, granularity)
-    def planFp(df: DataFrame): String = {
-      val canon = df.queryExecution.analyzed.canonicalized.toString +
-        "#" + df.semanticHash()
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(canon.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    def segmentSide(df: DataFrame, p: String): DataFrame =
-      graft.spark.DfCache.memo(df.sparkSession,
-        s"segments#$corpusKey#${planFp(df)}#${theta.x}x${theta.y}") {
-        df.select(col("id"),
-            explode(barrier(st_grid_segments(col("geom"), theta.x, theta.y))).as("sg"))
-          .select(col("id"), col("sg.tile").as("tile"), col("sg.seg").as("seg"))
-      }.select(col("id").as(s"${p}id"), col("tile"), col("seg").as(s"${p}seg"))
-    segmentSide(source, "s_").join(segmentSide(target, "t_"), "tile")
-      .filter(st_predicate(col("s_seg"), col("t_seg"), "intersects"))
-      .select(col("s_id"), col("t_id"))
-      .distinct()
   }
 
   /** Count candidate pairs without verifying (reference J9). A count

@@ -9,7 +9,7 @@ import graft.operators.SpatialJoin
 
 /** Decomposition invariants (ported policy from the reference's
   * DecompositionTest ideas, new corpus) + end-to-end equivalence of
-  * the fine-grained-envelope and segmented join paths.
+  * the fine-grained-envelope join path.
   */
 class DecomposeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,32 +24,6 @@ class DecomposeSpec extends AnyFunSuite {
   private val polys = (0 until 25).map { i =>
     rd.read(TestGeoms.starPolygon(rnd, 10 + rnd.nextDouble() * 40,
       10 + rnd.nextDouble() * 40, 3 + rnd.nextDouble() * 10))
-  }
-  private val lines = (0 until 15).map { i =>
-    rd.read(TestGeoms.lineString(rnd, 10 + rnd.nextDouble() * 40,
-      10 + rnd.nextDouble() * 40, 12))
-  }
-
-  test("grid decomposition preserves area and length") {
-    polys.foreach { g =>
-      val segs = Decompose.gridSegments(g, 5.0, 5.0).map(_._3)
-      assert(math.abs(segs.map(_.getArea).sum - g.getArea) < 1e-6)
-    }
-    lines.foreach { g =>
-      val segs = Decompose.gridSegments(g, 5.0, 5.0).map(_._3)
-      assert(math.abs(segs.map(_.getLength).sum - g.getLength) < 1e-6)
-    }
-  }
-
-  test("every grid segment lies within its tile") {
-    polys.foreach { g =>
-      Decompose.gridSegments(g, 5.0, 5.0).foreach { case (tx, ty, seg) =>
-        val e = seg.getEnvelopeInternal
-        val eps = 1e-9
-        assert(e.getMinX >= tx * 5.0 - eps && e.getMaxX <= (tx + 1) * 5.0 + eps)
-        assert(e.getMinY >= ty * 5.0 - eps && e.getMaxY <= (ty + 1) * 5.0 + eps)
-      }
-    }
   }
 
   test("recursive decomposition preserves area and bounds piece size") {
@@ -118,14 +92,6 @@ class DecomposeSpec extends AnyFunSuite {
     assert(stats.nonEmpty)
     assert(stats.values.forall(s => s.wallMillis > 0.0))
     assert(stats.values.filter(_.verifications > 0).forall(_.maxGeomBytes > 0))
-  }
-
-  test("segmented intersects join equals the whole-geometry join") {
-    val plain = SpatialJoin.relate(entitiesDf(source), entitiesDf(target), "intersects")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val seg = SpatialJoin.relateSegmented(entitiesDf(source), entitiesDf(target))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(seg === plain)
   }
 
   test("flatten explodes collections into members and keeps atoms intact") {

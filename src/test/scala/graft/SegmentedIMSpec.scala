@@ -4,18 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.io.WKTReader
 import org.locationtech.jts.geom.{Geometry, IntersectionMatrix}
 import graft.functions.{Jts, StIm}
-import graft.geometry.SegmentedIM
 
-/** Differential tests of the heavy polygon branch of the adaptive
-  * DE-9IM against plain JTS relate: random star polygons of wildly
+/** Differential tests of the heavy polygon branch of the DE-9IM
+  * kernel against plain JTS relate: random star polygons of wildly
   * different sizes (the huge × local case is the one the branch exists
-  * for), plus containment/touch/hole fixtures; and of the opt-in RANK
-  * early-exit form (J8) on the intersects decision. The exact heavy
-  * branch is the prepared RelateNG kernel (`StIm.matrix`, every
-  * polygon pair forced onto it with minPoints = 0); the "segmented IM"
-  * test names date from the segment-union form it replaced. θ no
-  * longer enters the exact kernel, so the θ loops re-run each pair
-  * against the warm prepared cache.
+  * for), plus containment/touch/hole fixtures. The heavy branch is the
+  * prepared RelateNG kernel (`StIm.matrix`, every polygon pair forced
+  * onto it with minPoints = 0); the "segmented IM" names date from the
+  * θ-grid segment forms it replaced. θ does not enter the kernel, so
+  * the θ loops re-run each pair against the warm prepared cache.
   */
 class SegmentedIMSpec extends AnyFunSuite {
   private val rd = new WKTReader()
@@ -86,102 +83,6 @@ class SegmentedIMSpec extends AnyFunSuite {
                     (l, boxOverlap), (boxOverlap, l))
     } assert(kernel(a, b).toString === a.relate(b).toString,
       s"theta=$theta")
-  }
-
-  test("adaptive join with earlyExit=true agrees with the exact join " +
-       "on the intersects decision, pair for pair") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.operators.SpatialJoin
-    def entities(rows: Seq[(String, String)]) =
-      SpatialJoin.entities(rows.toDF("id", "wkt"), col("id"), col("wkt"))
-    val src = TestGeoms.corpus(seed = 71, n = 50, world = 60)
-    val tgt = TestGeoms.corpus(seed = 72, n = 40, world = 60)
-    def intersectsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select("s_id", "t_id", "intersects").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
-    val exact = intersectsOf(
-      SpatialJoin.de9im(entities(src), entities(tgt), minPoints = 16))
-    val early = intersectsOf(
-      SpatialJoin.de9im(entities(src), entities(tgt), minPoints = 16,
-        earlyExit = true))
-    assert(early.keySet === exact.keySet)
-    exact.foreach { case (pair, v) =>
-      assert(early(pair) === v, s"intersects mismatch for $pair")
-    }
-    // Non-contractual columns are NULL on the early-exit segmented
-    // branch (never a silently under-set false), and the branch must
-    // actually fire on this corpus for the check to prove anything.
-    val earlyRows = SpatialJoin.de9im(entities(src), entities(tgt),
-        minPoints = 16, earlyExit = true)
-      .select("de9im", "intersects", "contains", "touches").collect()
-    val partials = earlyRows.filter(_.isNullAt(0))
-    assert(partials.nonEmpty, "early-exit branch never fired")
-    partials.foreach { r =>
-      assert(!r.isNullAt(1), "intersects must always be set")
-      assert(r.isNullAt(2) && r.isNullAt(3),
-        "non-contractual predicates must be NULL on the early-exit branch")
-    }
-  }
-
-  test("RANK early-exit form (flag-gated J8 variant) always agrees with " +
-       "the exact union form on the intersects decision") {
-    val big = (0 until 8).map(_ => star(50 + rnd.nextDouble() * 20,
-      50 + rnd.nextDouble() * 20, 35 + rnd.nextDouble() * 15))
-    val small = (0 until 30).map(_ => star(rnd.nextDouble() * 100,
-      rnd.nextDouble() * 100, 2 + rnd.nextDouble() * 6))
-    val geoms = big ++ small
-    var exits = 0
-    for {
-      theta <- Seq(3.0, 7.0, 15.0)
-      a <- geoms; b <- geoms
-    } {
-      import graft.geometry.Decompose.gridSegments
-      val exact = a.relate(b)
-      val early = SegmentedIM.imEarlyExit(a, b,
-        gridSegments(a, theta, theta), gridSegments(b, theta, theta))
-      // only the intersects DECISION is contractual for the early-exit
-      // form (exterior entries may be under-set by design)
-      assert(early.isIntersects === exact.isIntersects,
-        s"theta=$theta a=${a.getNumPoints}pts b=${b.getNumPoints}pts")
-      if (early.toString != exact.toString) exits += 1
-    }
-    // the early exit / partial accumulation must actually fire on this
-    // corpus, otherwise the test proves nothing
-    assert(exits > 0, "early-exit path never diverged — corpus too easy")
-  }
-
-  test("RANK early-exit finds polygons touching exactly ON a θ-grid " +
-       "line (adjacency pairing, not exact-tile)") {
-    import graft.geometry.Decompose.gridSegments
-    // boundary at x = 12 with θ = 4: exactly a grid multiple, so each
-    // side's segments live in different tile columns
-    val left = rd.read("POLYGON((0 0, 12 0, 12 9, 0 9, 0 0))")
-    val right = rd.read("POLYGON((12 0, 24 0, 24 9, 12 9, 12 0))")
-    val theta = 4.0
-    val got = SegmentedIM.imEarlyExit(left, right,
-      gridSegments(left, theta, theta), gridSegments(right, theta, theta))
-    assert(got.isIntersects === left.relate(right).isIntersects)
-    assert(got.isIntersects, "touching polygons must be intersecting")
-  }
-
-  test("early-exit returns the canonical disjoint matrix when paired " +
-       "segments exist but none intersect (not all-'F')") {
-    import graft.geometry.Decompose.gridSegments
-    // θ larger than the world: both polygons are single segments in
-    // tile (0,0), so the pair IS relate-checked and found disjoint —
-    // the loop must end with FF2FF1212, not FFFFFFFFF
-    val l = rd.read("POLYGON((0 0, 100 0, 100 10, 10 10, 10 100, 0 100, 0 0))")
-    val boxFar = rd.read("POLYGON((80 80, 95 80, 95 95, 80 95, 80 80))")
-    val theta = 200.0
-    val got = SegmentedIM.imEarlyExit(l, boxFar,
-      gridSegments(l, theta, theta), gridSegments(boxFar, theta, theta))
-    assert(got.toString === "FF2FF1212")
-    assert(got.toString === l.relate(boxFar).toString)
   }
 
   test("segmented IM equals relate when operands have holes (real " +

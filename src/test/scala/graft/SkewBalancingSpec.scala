@@ -39,34 +39,9 @@ class SkewBalancingSpec extends AnyFunSuite {
     assert(plain.keys.exists(_._2.startsWith("huge")), "hot targets must appear")
   }
 
-  test("segment-batched redistribution (L3/L4) returns identical results " +
-       "to the plain join for hot decomposed targets") {
-    val source = TestGeoms.corpus(seed = 41, n = 150, world = 50)
-    val rnd = new scala.util.Random(78)
-    // hot targets: giant many-vertex polygons spanning many θ-tiles,
-    // so their grid decomposition has many segments and each source
-    // pair only touches a small tile rectangle of them
-    val big = (0 until 2).map { i =>
-      (s"huge$i", TestGeoms.starPolygon(rnd, 25, 25, 40))
-    }
-    val target = TestGeoms.corpus(seed = 42, n = 100, world = 50) ++ big
-
-    val plain = SpatialJoin.de9im(entitiesDf(source), entitiesDf(target))
-      .select("s_id", "t_id", "de9im").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    val rebatched = SkewBalancing
-      .rebalancedSegmentedDe9im(entitiesDf(source), entitiesDf(target),
-        zThreshold = 1.0, batchCap = 8) // low threshold/cap: exercise batching
-      .select("s_id", "t_id", "de9im").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    assert(rebatched === plain)
-    assert(plain.keys.exists(_._2.startsWith("huge")), "hot targets must appear")
-  }
-
   test("segment-batched redistribution with zero candidates is empty, not NPE") {
     val source = entitiesDf(Seq(("a", "POLYGON((0 0, 1 0, 1 1, 0 1, 0 0))")))
     val target = entitiesDf(Seq(("b", "POLYGON((50 50, 51 50, 51 51, 50 51, 50 50))")))
     assert(SkewBalancing.balancedDe9im(source, target).count() === 0)
-    assert(SkewBalancing.rebalancedSegmentedDe9im(source, target).count() === 0)
   }
 }

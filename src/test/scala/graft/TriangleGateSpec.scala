@@ -12,9 +12,11 @@ import graft.operators.{GeoQueries, SpatialJoin}
   *   (b) the engine's output on the gate corpus equals whole-pair JTS
   *       relate, and
   *   (c) the A6 per-partition stats hook counts every triangle-source
-  *       verification.
+  *       verification, and
+  *   (d) sp9 (boxes as source) returns exactly sp6's rows.
   * Runs at the driver's own gate scale (sf0.01) so the asserted pairs
-  * are exactly the hash-checked ones.
+  * are exactly the hash-checked ones; (d) runs at sf0.1, where point
+  * touches exist that the sf0.01 hash gate does not exercise.
   */
 class TriangleGateSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -96,5 +98,23 @@ class TriangleGateSpec extends AnyFunSuite {
       GeoQueries.supplierBoxes(spark, dir))
     assert(stats.values.map(_.verifications).sum === result.count())
     assert(stats.values.map(_.verifications).sum > 0)
+  }
+
+  test("sp9 equals sp6 row for row at sf0.1, point touches included") {
+    // sf0.1 holds triangle × box pairs that touch in a single point
+    // (DE-9IM FF2F01212, e.g. customer 554 × supplier 208) that a verifier
+    // clipping geometries at θ-grid lines lost (9 of them); at sf0.01 it
+    // lost none, so the sf0.01 hash gate cannot catch that loss
+    val sf01 = "/root/testdata/sf0.1"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val sp6 = rows(GeoQueries.sp6TriangleBoxIntersects(spark, sf01))
+    val sp9 = rows(GeoQueries.sp9SegmentedTriangle(spark, sf01))
+    assert(sp6.contains(("554", "208")))
+    val (missing, extra) = (sp6.diff(sp9), sp9.diff(sp6))
+    assert(missing.isEmpty && extra.isEmpty,
+      s"sp9 misses ${missing.size} pairs ${missing.take(20)}, " +
+      s"adds ${extra.size} pairs ${extra.take(20)}")
+    assert(sp9 === sp6) // and in the same order
   }
 }

@@ -7,10 +7,10 @@ with accumulated cache/GC load — gr1 measured 75.5 s in-Scale vs
 18.6 s isolated at 100x). Each family run emits the same one-line-per-
 scale JSON with a subset of `sec`/`rows`/`corpus`; this merges them
 key-wise (disjoint keys by construction — the prefix filters do not
-overlap) and keeps the spatial run's seg/cc/a6 sections.
+overlap) and keeps the spatial run's cc/a6 sections.
 
 Usage: merge_scale.py out.jsonl in_A.log in_B.log ...
-(The first input that carries a non-empty `a6`/non-(-1) seg/cc wins
+(The first input that carries a non-empty `a6`/non-(-1) cc wins
 those sections.)
 """
 import sys, json
@@ -39,7 +39,7 @@ def main():
                 continue
             if base is None:
                 base = {k: d[k] for k in
-                        ("scale", "kind", "base", "seg_intersects_diff",
+                        ("scale", "kind", "base",
                          "cc_rounds", "cc_alt_rounds", "events")}
                 base["corpus"], base["sec"], base["rows"], base["a6"] = \
                     {}, {}, {}, {"parts": 0}
@@ -62,8 +62,6 @@ def main():
                 base[k].update(d.get(k, {}))
             if d.get("a6", {}).get("parts", 0) > 0:
                 base["a6"] = d["a6"]
-            if d.get("seg_intersects_diff", -1) != -1:
-                base["seg_intersects_diff"] = d["seg_intersects_diff"]
             if d.get("cc_rounds", -1) != -1:
                 base["cc_rounds"] = d["cc_rounds"]
                 base["cc_alt_rounds"] = d["cc_alt_rounds"]
