@@ -35,7 +35,8 @@ class PreparedRelateSpec extends AnyFunSuite {
     Seq((wa, ga, wb, gb, a, b), (wb, gb, wa, ga, b, a)).map {
       case (w1, g1, w2, g2, x, y) =>
         val expected = x.relate(y).toString
-        assert(GeomCache.relatePrepared(w1, g1, w2, g2).toString === expected,
+        assert(GeomCache.relatePrepared(GeomCache.Key(w1), g1, GeomCache.Key(w2), g2)
+            .toString === expected,
           s"relatePrepared: $what (${x.getNumPoints} × ${y.getNumPoints} pts)")
         assert(StIm.matrix(w1, w2, 0).toString === expected,
           s"StIm.matrix: $what (${x.getNumPoints} × ${y.getNumPoints} pts)")
