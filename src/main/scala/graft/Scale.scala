@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{DistanceJoin, GeoQueries, KnnJoin, Progressive, ProgressiveTyped, SkewBalancing, SpatialJoin}
+import graft.operators.{DistanceJoin, GeoQueries, KnnJoin, Progressive, ProgressiveTyped, SpatialJoin}
 import graft.sources.ScaleCorpus
 
 /** Measured scale-up experiment (the reference's own evaluation shape,
@@ -13,7 +13,7 @@ import graft.sources.ScaleCorpus
   * line per N with per-query seconds, output rows, and the A6
   * per-partition stats (hot-spot proof) for the batch join.
   *
-  * Queries: sp3 batch IM counts, sp12 balanced, pr1/pr10 progressive,
+  * Queries: sp3 batch IM counts, sp12 DE-9IM, pr1/pr10 progressive,
   * dd5/dd8/dd11 dedup, ann5/ann8 ANN.
   *
   * Usage: runMain graft.Scale [baseSfDir] [mults] [outBase] [onlyPrefixes]
@@ -202,7 +202,7 @@ object Scale {
       run("sp3_relation_counts", 2) {
         SpatialJoin.relationCounts(partS, suppS).mcount() }
       run("sp12_balanced_im", 2) {
-        SkewBalancing.balancedDe9im(triS, suppS, zThreshold = 0.0).mcount() }
+        SpatialJoin.de9im(triS, suppS).mcount() }
       run("pr1_progressive_mbro", 2) {
         Progressive.progressiveVerify(partS, suppS, "w_mbro",
           budget = 200 * n, relation = "contains").mcount() }

@@ -2,20 +2,19 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{SkewBalancing, SpatialJoin}
+import graft.operators.SpatialJoin
 
 /** Skew stress (dev tool): a handful of giant many-vertex polygons in a
   * dense world of small boxes — every hot target collects thousands of
-  * candidates, each costing a multi-millisecond JTS relate. Times L2
-  * (balancedDe9im: round-robin the hot pairs; every executor relates
-  * against the full hot geometry), then the typed progressive paths
+  * candidates, each costing a prepared JTS relate. Times the plain
+  * DE-9IM join over this hot corpus, then the typed progressive paths
   * over the same dense corpus.
   *
-  * L3 segment-batched re-batching (decompose the hot geometry and union
-  * the candidate segments once per batch during scheduling) was
-  * measured here at sf0.1 (4 cores, z = 0, 7 warm alternations): L2
-  * 3.0–3.6 s, L3 4.1–5.4 s, equal rows; L2 won every time and L3 was
-  * deleted.
+  * The reference's skew handling was measured here and deleted
+  * (COVERAGE §2.8; sf0.1, 4 cores, one JVM, rotated order): L3
+  * segment-batched re-batching lost to the L2 z-score split + round-
+  * robin redistribution, and L2 in turn lost to the plain join at both
+  * z = 0 and the reference's z = 3, with identical rows.
   *
   * Usage: runMain graft.StressSkew [sfDir]
   */
@@ -79,12 +78,14 @@ object StressSkew {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[skew] src=${src.count()} tgt=${tgt.count()}")
 
-    val l2 = time("hot-target verify, L2 round-robin")(
-      SkewBalancing.balancedDe9im(src, tgt, 0.0).count())
+    // materializedCount, not count(): column pruning would drop the
+    // DE-9IM column and with it every verification
+    val plain = time("hot-target verify, plain de9im")(
+      Bench.materializedCount(SpatialJoin.de9im(src, tgt)))
     // second run has warm geometry/prepared caches
-    val l2b = time("L2 again (warm)")(
-      SkewBalancing.balancedDe9im(src, tgt, 0.0).count())
-    println(s"[skew] rows l2=$l2 warm=$l2b")
+    val plainWarm = time("plain de9im again (warm)")(
+      Bench.materializedCount(SpatialJoin.de9im(src, tgt)))
+    println(s"[skew] rows plain=$plain warm=$plainWarm")
 
     // Dense-partition dynamic PQ: hot targets collect thousands of
     // candidates per partition, but the typed drain holds only

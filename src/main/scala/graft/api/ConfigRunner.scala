@@ -118,11 +118,14 @@ object ConfigRunner {
     * RANDOM, budget, exportPath — and gridType KDBTREE/QUADTREE →
     * the corresponding sample-region join) or REJECTED with an
     * explicit message (gridType with DE9IM / progressive jobs, where
-    * the region path would change the output contract silently). The θ statistic is a
-    * tiling-performance dial only — the verified pair set is
-    * θ-invariant (ConfigRunnerSpec proves result equality across all
-    * five) — and the gridType region path does not tile by θ at all,
-    * so granularity is a no-op there. */
+    * the region path would change the output contract silently). For
+    * GIANT jobs the θ statistic is a tiling-performance dial only —
+    * the verified pair set is θ-invariant (ConfigRunnerSpec proves
+    * result equality across all five) — and the gridType region path
+    * does not tile by θ at all, so granularity is a no-op there. The
+    * weighted algorithms are not θ-invariant: `CF`, `JS` and `PEARSONS_X2`
+    * count θ-tiles (`Progressive.tileCounts`), so progressive, early
+    * stopping and top-k rankings follow the chosen statistic. */
   def run(spark: SparkSession, conf: JobConf): DataFrame = {
     require(Set("avg", "avg2", "min", "max", "none")(
         conf.thetaGranularity.toLowerCase),

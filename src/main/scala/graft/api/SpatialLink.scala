@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import graft.operators.{Progressive, ProgressiveTyped, SkewBalancing, SpatialJoin, VerifiedPair}
+import graft.operators.{Progressive, ProgressiveTyped, SpatialJoin, VerifiedPair}
 
 /** The user-facing surface of the engine — everything a DS-JedAI user
   * runs today, as a fluent builder over DataFrames:
@@ -14,7 +14,6 @@ import graft.operators.{Progressive, ProgressiveTyped, SkewBalancing, SpatialJoi
   * SpatialLink(src, tgt).de9im()                       // GIA.nt batch
   * SpatialLink(src, tgt).relate("contains")            // spatial join
   * SpatialLink(src, tgt).relationCounts()              // headline tuple
-  * SpatialLink(src, tgt).balanced().de9im()            // skew-aware
   * SpatialLink(src, tgt).fineGrained().de9im()         // tighter filter
   * SpatialLink(src, tgt)
   *   .progressive(budget = 5000000, weight = "w_js")   // budgeted
@@ -24,30 +23,26 @@ import graft.operators.{Progressive, ProgressiveTyped, SkewBalancing, SpatialJoi
   */
 case class SpatialLink(source: DataFrame, target: DataFrame,
                        useFineGrained: Boolean = false,
-                       useBalanced: Boolean = false,
                        granularity: String = "avg") {
 
   def fineGrained(): SpatialLink = copy(useFineGrained = true)
-  def balanced(): SpatialLink = copy(useBalanced = true)
 
   /** Select the reference's θ tile-granularity statistic
     * (avg | avg2 | min | max | none — see
-    * [[SpatialJoin.computeTheta]]). A performance dial only: the
-    * verified pair set is identical under every setting. */
+    * [[SpatialJoin.computeTheta]]). For the batch joins (`de9im`,
+    * `relate`, `relationCounts`, …) it is a performance dial only: the
+    * verified pair set is identical under every setting. The weighted
+    * calls are different: `w_cf`, `w_js` and `w_x2` count θ-tiles, so
+    * the rankings of `progressive`, `topK`, `reciprocalTopK`, the
+    * sequential algorithms and `pgrCurve` follow θ. */
   def thetaGranularity(g: String): SpatialLink = copy(granularity = g)
 
-  /** Full holistic DE-9IM interlinking. The balanced and fine-grained
-    * paths are separate joins, so asking for both is rejected rather
-    * than silently running only one. */
-  def de9im(): DataFrame = {
-    require(!(useBalanced && useFineGrained),
-      "balanced() and fineGrained() cannot be combined in de9im()")
-    if (useBalanced) SkewBalancing.balancedDe9im(source, target,
-      granularity = granularity)
-    else if (useFineGrained) SpatialJoin.de9imFineGrained(source, target,
+  /** Full holistic DE-9IM interlinking; every candidate pair verifies
+    * where `SpatialJoin.candidatePairs` places it. */
+  def de9im(): DataFrame =
+    if (useFineGrained) SpatialJoin.de9imFineGrained(source, target,
       granularity = granularity)
     else SpatialJoin.de9im(source, target, granularity)
-  }
 
   /** Single-relation spatial join → (s_id, t_id). */
   def relate(relation: String): DataFrame =
@@ -94,7 +89,8 @@ case class SpatialLink(source: DataFrame, target: DataFrame,
 
   /** Progressive-recall curve for quality evaluation. */
   def pgrCurve(weight: String = "w_js", relation: String = "intersects"): DataFrame =
-    Progressive.pgrCurve(source, target, weight, relation)
+    Progressive.pgrCurve(source, target, weight, relation,
+      granularity = granularity)
 }
 
 object SpatialLink {

@@ -102,12 +102,12 @@ object GeoQueries {
   // entities across cores) was measured here and REVERTED — it fixed
   // the serialized DE-9IM verification (sp10 3.6 s -> 1.4 s) but made
   // every per-partition-machinery consumer of the same memos SLOWER
-  // (TypedGiant/Progressive/SkewBalancing build per-partition
-  // indexes/budgets: sp13 0.66 -> 1.09 s, pr11 1.39 -> 2.58 s, sp12
-  // 1.32 -> 2.67 s fresh-JVM A/B). The corpora keep their natural scan
-  // partitioning; SpatialJoin.candidatePairs spreads the NARROW pair
-  // frame before the blob joins whenever an input reads as fewer
-  // partitions than defaultParallelism, as these memos do at gate scale.
+  // (TypedGiant/Progressive build per-partition indexes/budgets: sp13
+  // 0.66 -> 1.09 s, pr11 1.39 -> 2.58 s fresh-JVM A/B). The corpora
+  // keep their natural scan partitioning; SpatialJoin.candidatePairs
+  // spreads the NARROW pair frame before the blob joins whenever an
+  // input reads as fewer partitions than defaultParallelism, as these
+  // memos do at gate scale.
 
   private[graft] def partBoxes(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "partBoxes") {
@@ -377,14 +377,12 @@ object GeoQueries {
         col("touches"), col("overlaps"))
       .orderBy(col("s_id"), col("t_id"))
 
-  /** Load-balanced DE-9IM (L1-L5) through the hash gate: zThreshold=0
-    * marks every above-average-cost target hot, so the z-score split,
-    * round-robin redistribution and redistributed-verify union all
-    * execute; results must be identical to the plain join, i.e. the
-    * same SAT oracle as sp10. */
+  /** DE-9IM of the triangle × box corpus with its relation booleans,
+    * the same SAT oracle as sp10. The gate name is part of the driver
+    * contract; the reference's z-score skew split (L1-L5) it once ran
+    * was measured slower than this join and deleted (COVERAGE §2.8). */
   def sp12BalancedIm(s: SparkSession, dir: String): DataFrame =
-    SkewBalancing.balancedDe9im(customerTriangles(s, dir), supplierBoxes(s, dir),
-      zThreshold = 0.0)
+    SpatialJoin.de9im(customerTriangles(s, dir), supplierBoxes(s, dir))
       .select(col("s_id"), col("t_id"), col("intersects"), col("contains"),
         col("within"), col("touches"), col("overlaps"))
       .orderBy(col("s_id"), col("t_id"))

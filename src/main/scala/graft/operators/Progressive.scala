@@ -276,9 +276,10 @@ object Progressive {
     * per budget query, the bench-noise hot spot). */
   def pgrCurve(source: DataFrame, target: DataFrame, weight: String,
                relation: String = "intersects",
-               budget: Int = Int.MaxValue): DataFrame = {
+               budget: Int = Int.MaxValue,
+               granularity: String = "avg"): DataFrame = {
     val spark = source.sparkSession
-    val theta = SpatialJoin.computeTheta(source)
+    val theta = SpatialJoin.computeTheta(source, granularity)
     val ordering = Seq(col(weight).desc, col("s_id").asc, col("t_id").asc)
     val narrow = withWeights(SpatialJoin.candidatePairsNarrow(source, target, theta), theta)
       .select(col("s_id"), col("t_id"), col(weight))

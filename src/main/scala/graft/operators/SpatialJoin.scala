@@ -249,7 +249,7 @@ object SpatialJoin {
 
   /** Ids plus the DE-9IM struct `im` (string + relation booleans)
     * flattened into columns. */
-  private[operators] def imRows(pairs: DataFrame, im: Column): DataFrame =
+  private def imRows(pairs: DataFrame, im: Column): DataFrame =
     pairs.withColumn("im", im).select(col("s_id"), col("t_id"), col("im.*"))
 
   /** Holistic DE-9IM: verify every candidate pair once; emit ids, the

@@ -43,4 +43,14 @@ class EvaluationSpec extends AnyFunSuite {
     assert(full.pgr > rand.pgr,
       s"JS weighting (pgr=${full.pgr}) should beat random (pgr=${rand.pgr})")
   }
+
+  test("SpatialLink.pgrCurve ranks under the link's thetaGranularity") {
+    val s = entitiesDf(source); val t = entitiesDf(target)
+    def curve(df: DataFrame) =
+      df.orderBy("rank").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val avg = curve(Progressive.pgrCurve(s, t, "w_js", granularity = "avg"))
+    val max = curve(Progressive.pgrCurve(s, t, "w_js", granularity = "max"))
+    assert(avg !== max, "w_js counts θ-tiles, so the corpus must separate the curves")
+    assert(curve(graft.api.SpatialLink(s, t).thetaGranularity("max").pgrCurve()) === max)
+  }
 }

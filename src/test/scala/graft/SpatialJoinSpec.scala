@@ -215,12 +215,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     }
   }
 
-  test("SpatialLink.de9im rejects balanced() combined with fineGrained()") {
-    val link = graft.api.SpatialLink(entitiesDf(source), entitiesDf(target))
-      .balanced().fineGrained()
-    intercept[IllegalArgumentException](link.de9im())
-  }
-
   test("replication produces no duplicate pairs (reference-point dedup)") {
     val pairs = SpatialJoin.de9im(entitiesDf(source), entitiesDf(target))
       .groupBy("s_id", "t_id").count().filter(col("count") > 1).count()
