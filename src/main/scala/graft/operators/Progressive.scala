@@ -16,10 +16,13 @@ import SpatialJoin.Theta
   * arithmetic so they stay inside whole-stage codegen; no JTS call and
   * no geometry deserialization happens until the budgeted verification.
   *
-  * Ranking/budgeting uses declarative windows + limit, which Catalyst
-  * executes as per-partition top-k (TakeOrdered) — the scalable
-  * equivalent of the reference's per-partition bounded priority queues
-  * (`model/structures/ComparisonPQ.scala`).
+  * Every linker builds its weighted candidates through [[weighted]]
+  * (the reference's single `WeightedPairFactory`). The global budget
+  * cut ranks through [[Ranks]]' range exchange + per-partition offsets
+  * (no single-partition window) — the scalable equivalent of the
+  * reference's per-partition bounded priority queues
+  * (`model/structures/ComparisonPQ.scala`); per-entity top-k ranks in
+  * windows partitioned by the entity id.
   */
 object Progressive {
 
@@ -41,7 +44,7 @@ object Progressive {
 
   /** Average WKB size of an entity frame — one tiny agg job over the
     * (usually session-cached) frame, memoized per plan so repeated
-    * progressive calls don't re-aggregate. Cap mirrors the θ-cache. */
+    * progressive calls don't re-aggregate; cleared past 64 plans. */
   private def avgGeomBytes(df: DataFrame): Long = {
     if (geomStatCache.size > 64) geomStatCache.clear()
     geomStatCache.getOrElseUpdate((df.sparkSession, df.semanticHash()), {
@@ -58,11 +61,6 @@ object Progressive {
         budget.toLong * avgGeomBytes(ents) <= GeomBroadcastBytes)
       broadcast(df)
     else df
-
-  /** Broadcast the budget-bounded narrow frame when the budget is
-    * broadcast-sized (see [[progressiveVerify]]). */
-  private def hinted(df: DataFrame, budget: Int): DataFrame =
-    if (budget <= BroadcastableBudget) broadcast(df) else df
 
   /** θ-tile counts of a candidate pair's MBRs: (common tiles CF, the
     * source's tiles, the target's tiles). */
@@ -100,10 +98,8 @@ object Progressive {
     * `WeightedPairFactory.scala:96-104`): the 2x2 contingency table of
     * tile co-occurrence vs `totalTiles` (the θ-grid size over the
     * global extent), in closed form — the 2x2 χ² statistic needs no
-    * stats library. ISP (inverse sum of points,
-    * `WeightedPairFactory.scala:112`) needs `s_npoints`/`t_npoints`
-    * columns (see [[withPointCounts]]). */
-  def withChi2Weight(pairs: DataFrame, theta: Theta, totalTiles: Double): DataFrame = {
+    * stats library. */
+  private def withChi2Weight(pairs: DataFrame, theta: Theta, totalTiles: Double): DataFrame = {
     val (cf, tilesS, tilesT) = tileCounts(theta)
     val n = lit(totalTiles)
     val o11 = cf
@@ -120,7 +116,7 @@ object Progressive {
 
   /** Total θ-grid tile count over the source's global extent
     * (reference `GridPartitioner.scala:85-93` computeTotalBlocks). */
-  def totalTiles(source: DataFrame, theta: Theta): Double = {
+  private def totalTiles(source: DataFrame, theta: Theta): Double = {
     // floor() yields LongType in Spark SQL
     val r = source.agg(
       min(floor(col("minx") / theta.x)), max(floor(col("maxx") / theta.x)),
@@ -128,9 +124,11 @@ object Progressive {
     ((r.getLong(1) - r.getLong(0) + 1) * (r.getLong(3) - r.getLong(2) + 1)).toDouble
   }
 
-  /** ISP weight: 1 / (numPoints(s) + numPoints(t)) — favours cheap
-    * verifications. Requires entities loaded with a npoints column. */
-  def ispWeight: Column =
+  /** ISP weight (inverse sum of points,
+    * `WeightedPairFactory.scala:112`): 1 / (numPoints(s) +
+    * numPoints(t)) — favours cheap verifications. Needs the
+    * `s_npoints`/`t_npoints` columns [[weighted]] provisions. */
+  private def ispWeight: Column =
     lit(1.0) / (col("s_npoints") + col("t_npoints"))
 
   /** Weighting schemes (reference `Constants.scala:172-185` +
@@ -148,28 +146,60 @@ object Progressive {
       case other => throw new IllegalArgumentException(s"unknown scheme: $other")
     }
 
-  /** Provision entity frames / candidate columns for any of the five
-    * reference weighting functions: CF/JS/MBRO come from the MBR tile
-    * closed forms, X2 additionally needs the global tile count, ISP
-    * needs per-entity point counts (added here from the geometry when
-    * requested — reference `WeightedPairFactory.scala:87-112`). */
-  private[operators] def provision(source: DataFrame, target: DataFrame,
-      weight: Set[String]): (DataFrame, DataFrame) =
-    if (weight.contains("w_isp"))
-      (source.withColumn("npoints",
-         graft.functions.GeomFunctions.st_numpoints(col("geom"))),
-       target.withColumn("npoints",
-         graft.functions.GeomFunctions.st_numpoints(col("geom"))))
-    else (source, target)
+  /** The one weighted-candidate factory of every progressive linker
+    * (reference `WeightedPairFactory.scala:87-112`): θ over the source,
+    * the narrow candidate pairs, and each requested weight column —
+    * CF/JS/MBRO from the MBR tile closed forms, X2 additionally from
+    * the global tile count, ISP from per-entity point counts (added to
+    * both entity frames, only when requested), RAND from the id hash.
+    * Returns the weighted candidates and the entity frames they were
+    * built from (the geometry join-backs read those). */
+  private[operators] def weighted(source: DataFrame, target: DataFrame,
+      weights: Set[String], granularity: String = "avg")
+      : (DataFrame, DataFrame, DataFrame) = {
+    def provisioned(ents: DataFrame) =
+      if (weights.contains("w_isp"))
+        ents.withColumn("npoints", graft.functions.GeomFunctions.st_numpoints(col("geom")))
+      else ents
+    val src = provisioned(source); val tgt = provisioned(target)
+    val theta = SpatialJoin.computeTheta(src, granularity)
+    val base = withWeights(SpatialJoin.candidatePairsNarrow(src, tgt, theta), theta)
+    val cands = weights.foldLeft(base) {
+      case (df, "w_x2") => withChi2Weight(df, theta, totalTiles(src, theta))
+      case (df, "w_isp") => df.withColumn("w_isp", ispWeight)
+      case (df, "w_rand") => df.withColumn("w_rand", randomWeight)
+      case (df, _) => df
+    }
+    (cands, src, tgt)
+  }
 
-  private[operators] def addWeights(cands: DataFrame, theta: Theta,
-      source: DataFrame, weights: Set[String]): DataFrame = {
-    var out = withWeights(cands, theta)
-    if (weights.contains("w_x2"))
-      out = withChi2Weight(out, theta, totalTiles(source, theta))
-    if (weights.contains("w_isp")) out = out.withColumn("w_isp", ispWeight)
-    if (weights.contains("w_rand")) out = out.withColumn("w_rand", randomWeight)
-    out
+  /** The global budget cut: exact 1-based `rank` in `ordering`
+    * ([[Ranks.withGlobalRank]]), keeping ranks 1..budget. Feed it
+    * NARROW rows (ids + weights) — the rank exchange moves every input
+    * column. */
+  private[operators] def topBudget(cands: DataFrame, ordering: Seq[Column],
+                                   budget: Int): DataFrame =
+    Ranks.withGlobalRank(cands, ordering).filter(col("rank") <= budget)
+
+  /** Join the geometries back onto budget-bounded (s_id, t_id, ...)
+    * rows and add the `qualifies` predicate column. The budget bounds
+    * `ranked` at `budget` rows, but Catalyst cannot see that through a
+    * rank filter — without a hint it may shuffle the ENTITY frames
+    * instead. Hint ONLY when the budget is genuinely broadcast-sized;
+    * the second frame additionally carries s_geom WKB blobs, so it gets
+    * the byte-estimate gate on top of the row gate (a huge budget —
+    * ConfigRunner defaults to 10M, the exhaustive tests use MaxValue —
+    * must take the plain shuffled-join plan instead of collecting
+    * geometry to the driver). */
+  private[operators] def verified(ranked: DataFrame, source: DataFrame,
+      target: DataFrame, relation: String, budget: Int): DataFrame = {
+    val withS = (if (budget <= BroadcastableBudget) broadcast(ranked) else ranked)
+      .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
+    geomHinted(withS, budget, source)
+      .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
+      .withColumn("qualifies",
+        graft.functions.GeomFunctions.st_predicate(col("s_geom"), col("t_geom"), relation))
+      .drop("s_geom", "t_geom")
   }
 
   /** ProgressiveGIAnt: global budget top-k by weight, then verify in
@@ -182,50 +212,29 @@ object Progressive {
     * JTS predicate runs only on the `rank <= budget` survivors, so
     * geometry work is budget-bounded exactly like the reference's
     * prorated per-partition PQs. */
-  def progressiveVerify(source0: DataFrame, target0: DataFrame, weight: String,
+  def progressiveVerify(source: DataFrame, target: DataFrame, weight: String,
                         budget: Int, relation: String = "intersects",
                         granularity: String = "avg"): DataFrame = {
-    val (source, target) = provision(source0, target0, Set(weight))
-    val theta = SpatialJoin.computeTheta(source, granularity)
-    val ordering = Seq(col(weight).desc, col("s_id").asc, col("t_id").asc)
+    val (cands, src, tgt) = weighted(source, target, Set(weight), granularity)
     // Rank NARROW rows (ids + weight, ~24 B) — the geometry blobs never
     // enter the rank exchange; they are joined back for the budget
     // survivors only, so shuffle volume is weight-columns * candidates
     // + geom * budget instead of geom * candidates. Requires UNIQUE
     // entity ids per side (the engine-wide entity contract, mirroring
     // the reference's originalID identification of output pairs).
-    val narrow = addWeights(SpatialJoin.candidatePairsNarrow(source, target, theta),
-        theta, source, Set(weight))
-      .select(col("s_id"), col("t_id"), col(weight))
-    val bounded = Ranks.withGlobalRank(narrow, ordering)
-      .filter(col("rank") <= budget)
-    // The rank filter bounds this side at `budget` rows, but Catalyst
-    // cannot see that through the filter — without a hint it may
-    // shuffle the ENTITY frames instead. Hint ONLY when the budget is
-    // genuinely broadcast-sized; the second frame additionally carries
-    // s_geom WKB blobs, so it gets the byte-estimate gate on top of
-    // the row gate (a huge budget — ConfigRunner defaults to 10M, the
-    // exhaustive tests use MaxValue — must take the plain shuffled-join
-    // plan instead of collecting geometry to the driver).
-    val withS = hinted(bounded, budget)
-      .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
-    geomHinted(withS, budget, source)
-      .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
-      .withColumn("qualifies",
-        graft.functions.GeomFunctions.st_predicate(col("s_geom"), col("t_geom"), relation))
+    val ranked = topBudget(cands.select(col("s_id"), col("t_id"), col(weight)),
+      schemeOrdering("SIMPLE", weight), budget)
+    verified(ranked, src, tgt, relation, budget)
       .select(col("rank"), col("s_id"), col("t_id"), col(weight), col("qualifies"))
   }
 
   /** TopKPairs: keep the k best candidates of every target entity
     * (reference `TopKPairs.scala:25-76`, window form). */
-  def topKPerTarget(source0: DataFrame, target0: DataFrame, weight: String,
+  def topKPerTarget(source: DataFrame, target: DataFrame, weight: String,
                     k: Int, granularity: String = "avg"): DataFrame = {
-    val (source, target) = provision(source0, target0, Set(weight))
-    val theta = SpatialJoin.computeTheta(source, granularity)
     val w = Window.partitionBy(col("t_id"))
       .orderBy(col(weight).desc, col("s_id").asc)
-    addWeights(SpatialJoin.candidatePairsNarrow(source, target, theta),
-        theta, source, Set(weight))
+    weighted(source, target, Set(weight), granularity)._1
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("t_id"), col("s_id"), col(weight), col("rk"))
@@ -234,16 +243,13 @@ object Progressive {
   /** ReciprocalTopK: a pair survives only if it is in the top-k of BOTH
     * its source and its target (reference `ReciprocalTopK.scala:26-69`):
     * two ranking windows, conjunctive filter. */
-  def reciprocalTopK(source0: DataFrame, target0: DataFrame, weight: String,
+  def reciprocalTopK(source: DataFrame, target: DataFrame, weight: String,
                      k: Int, granularity: String = "avg"): DataFrame = {
-    val (source, target) = provision(source0, target0, Set(weight))
-    val theta = SpatialJoin.computeTheta(source, granularity)
     val byTarget = Window.partitionBy(col("t_id"))
       .orderBy(col(weight).desc, col("s_id").asc)
     val bySource = Window.partitionBy(col("s_id"))
       .orderBy(col(weight).desc, col("t_id").asc)
-    addWeights(SpatialJoin.candidatePairsNarrow(source, target, theta),
-        theta, source, Set(weight))
+    weighted(source, target, Set(weight), granularity)._1
       .withColumn("rk_t", row_number().over(byTarget))
       .withColumn("rk_s", row_number().over(bySource))
       .filter(col("rk_t") <= k && col("rk_s") <= k)
@@ -253,7 +259,7 @@ object Progressive {
   /** Deterministic "random" scheduling (reference
     * `RandomScheduling.scala`): weight = md5 of the id pair, so the
     * baseline stays reproducible and oracle-checkable. */
-  def randomWeight: Column =
+  private def randomWeight: Column =
     conv(substring(md5(concat_ws(":", col("s_id"), col("t_id"))), 1, 15), 16, 10)
       .cast("long")
 
@@ -278,24 +284,13 @@ object Progressive {
                relation: String = "intersects",
                budget: Int = Int.MaxValue,
                granularity: String = "avg"): DataFrame = {
-    val spark = source.sparkSession
-    val theta = SpatialJoin.computeTheta(source, granularity)
-    val ordering = Seq(col(weight).desc, col("s_id").asc, col("t_id").asc)
-    val narrow = withWeights(SpatialJoin.candidatePairsNarrow(source, target, theta), theta)
-      .select(col("s_id"), col("t_id"), col(weight))
-    val rt0 = Ranks.withGlobalRankCounted(narrow, ordering)
-    val ranked = rt0.df.filter(col("rank") <= budget)
+    val (cands, src, tgt) = weighted(source, target, Set(weight), granularity)
+    val rt0 = Ranks.withGlobalRankCounted(
+      cands.select(col("s_id"), col("t_id"), col(weight)), schemeOrdering("SIMPLE", weight))
     val n = math.min(rt0.totals.head, budget.toLong)
-    // budget-bounded side broadcast for the geometry join-backs ONLY
-    // when the budget is broadcast-sized (see progressiveVerify — the
-    // default budget here is unbounded; the geometry-carrying second
-    // frame additionally passes the byte-estimate gate)
-    val bounded = geomHinted(hinted(ranked, budget)
-        .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id"),
-        budget, source)
-      .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
-      .withColumn("qualifies",
-        graft.functions.GeomFunctions.st_predicate(col("s_geom"), col("t_geom"), relation))
+    // the default budget here is unbounded: [[verified]] broadcasts
+    // only broadcast-sized budgets
+    val bounded = verified(rt0.df.filter(col("rank") <= budget), src, tgt, relation, budget)
       .select(col("rank"), col("qualifies"))
     val step = math.max(1L, (n + 9) / 10)
     // bucket b covers ranks ((b-1)*step, b*step]; cum at checkpoint
@@ -310,6 +305,6 @@ object Progressive {
       acc + bucketSums.getOrElse(b.toLong, 0L)).tail
     val rows = (1L to n / step).map(i => (i * step, cum(i.toInt - 1))) ++
       (if (n % step != 0 && n > 0) Seq((n, cum.last)) else Seq.empty)
-    spark.createDataFrame(rows).toDF("rank", "cum_qp").orderBy(col("rank"))
+    source.sparkSession.createDataFrame(rows).toDF("rank", "cum_qp").orderBy(col("rank"))
   }
 }

@@ -30,47 +30,37 @@ object ProgressiveQueries {
       budget = 150)
       .orderBy(col("rank"))
 
-  /** Pearson-χ² weighted budget (the reference papers' best-quality
-    * weighting), full closed form both sides. */
-  def pr5Chi2TopK(s: SparkSession, dir: String): DataFrame = {
-    val src = partBoxes(s, dir); val tgt = supplierBoxes(s, dir)
-    val theta = SpatialJoin.computeTheta(src)
-    val n = Progressive.totalTiles(src, theta)
-    val ordering = Seq(col("w_x2").desc, col("s_id").asc, col("t_id").asc)
-    Ranks.withGlobalRank(Progressive.withChi2Weight(
-        SpatialJoin.candidatePairsNarrow(src, tgt, theta), theta, n), ordering)
-      .filter(col("rank") <= 100)
-      .select(col("rank"), col("s_id"), col("t_id"), col("w_x2"))
+  /** The `budget` best candidates under one weighting scheme (see
+    * [[Progressive.schemeOrdering]]), ranked: rank, s_id, t_id and the
+    * scheme's weight columns. */
+  private def budgeted(src: DataFrame, tgt: DataFrame, budget: Int, scheme: String,
+                       main: String, secondary: String = ""): DataFrame = {
+    val weights = Seq(main, secondary).filter(_.nonEmpty)
+    val (cands, _, _) = Progressive.weighted(src, tgt, weights.toSet)
+    Progressive.topBudget(cands.select(col("s_id") +: col("t_id") +: weights.map(col): _*),
+      Progressive.schemeOrdering(scheme, main, secondary), budget)
   }
 
+  /** Pearson-χ² weighted budget (the reference papers' best-quality
+    * weighting), full closed form both sides. */
+  def pr5Chi2TopK(s: SparkSession, dir: String): DataFrame =
+    budgeted(partBoxes(s, dir), supplierBoxes(s, dir), 100, "SIMPLE", "w_x2")
+      .select(col("rank"), col("s_id"), col("t_id"), col("w_x2"))
+
   /** HYBRID weighting scheme: rank by the product of two weights. */
-  def pr6HybridScheme(s: SparkSession, dir: String): DataFrame = {
-    val src = partBoxes(s, dir); val tgt = supplierBoxes(s, dir)
-    val theta = SpatialJoin.computeTheta(src)
-    val ordering = Progressive.schemeOrdering("HYBRID", "w_js", "w_mbro")
-    Ranks.withGlobalRank(
-        Progressive.withWeights(SpatialJoin.candidatePairsNarrow(src, tgt, theta), theta)
-          .withColumn("w_hybrid", col("w_js") * col("w_mbro")), ordering)
-      .filter(col("rank") <= 150)
-      .select(col("s_id"), col("t_id"), col("w_hybrid"))
+  def pr6HybridScheme(s: SparkSession, dir: String): DataFrame =
+    budgeted(partBoxes(s, dir), supplierBoxes(s, dir), 150, "HYBRID", "w_js", "w_mbro")
+      .select(col("s_id"), col("t_id"), (col("w_js") * col("w_mbro")).as("w_hybrid"))
       .orderBy(col("s_id"), col("t_id"))
-  }
 
   /** COMPOSITE weighting scheme: secondary weight breaks main-weight
     * ties (reference CompositeWP ordering). w_cf is integer-valued, so
     * ties in the tile-Jaccard main weight are common and the secondary
     * genuinely decides order. */
-  def pr8CompositeScheme(s: SparkSession, dir: String): DataFrame = {
-    val src = partBoxes(s, dir); val tgt = supplierBoxes(s, dir)
-    val theta = SpatialJoin.computeTheta(src)
-    val ordering = Progressive.schemeOrdering("COMPOSITE", "w_js", "w_cf")
-    Ranks.withGlobalRank(
-        Progressive.withWeights(SpatialJoin.candidatePairsNarrow(src, tgt, theta), theta),
-        ordering)
-      .filter(col("rank") <= 150)
+  def pr8CompositeScheme(s: SparkSession, dir: String): DataFrame =
+    budgeted(partBoxes(s, dir), supplierBoxes(s, dir), 150, "COMPOSITE", "w_js", "w_cf")
       .select(col("s_id"), col("t_id"), col("w_js"), col("w_cf"))
       .orderBy(col("s_id"), col("t_id"))
-  }
 
   /** ISP (inverse sum of points) weighted budget over the MIXED-shape
     * corpus: boxes carry 5 ring points, triangles 4, targets 5 — so the
@@ -79,34 +69,16 @@ object ProgressiveQueries {
     * tie-break deciding inside each. Point counts come from the real
     * geometry (`st_numpoints` over the WKB), not the derivation — the
     * oracle knows them only because the shapes are deterministic. */
-  def pr9IspBudget(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GeomFunctions.st_numpoints
-    val src = GeoQueries.mixedCorpus(s, dir)
-      .withColumn("npoints", st_numpoints(col("geom")))
-    val tgt = GeoQueries.supplierBoxes(s, dir)
-      .withColumn("npoints", st_numpoints(col("geom")))
-    val theta = SpatialJoin.computeTheta(src)
-    Ranks.withGlobalRank(
-        SpatialJoin.candidatePairsNarrow(src, tgt, theta)
-          .withColumn("w_isp", Progressive.ispWeight),
-        Seq(col("w_isp").desc, col("s_id").asc, col("t_id").asc))
-      .filter(col("rank") <= 100)
+  def pr9IspBudget(s: SparkSession, dir: String): DataFrame =
+    budgeted(GeoQueries.mixedCorpus(s, dir), supplierBoxes(s, dir), 100, "SIMPLE", "w_isp")
       .select(col("s_id"), col("t_id"), col("w_isp"))
       .orderBy(col("s_id"), col("t_id"))
-  }
 
   /** RANDOM scheduling baseline with a deterministic hash weight. */
-  def pr7RandomBudget(s: SparkSession, dir: String): DataFrame = {
-    val src = partBoxes(s, dir); val tgt = supplierBoxes(s, dir)
-    val theta = SpatialJoin.computeTheta(src)
-    Ranks.withGlobalRank(
-        SpatialJoin.candidatePairsNarrow(src, tgt, theta)
-          .withColumn("w_rand", Progressive.randomWeight),
-        Seq(col("w_rand").desc, col("s_id").asc, col("t_id").asc))
-      .filter(col("rank") <= 150)
+  def pr7RandomBudget(s: SparkSession, dir: String): DataFrame =
+    budgeted(partBoxes(s, dir), supplierBoxes(s, dir), 150, "SIMPLE", "w_rand")
       .select(col("s_id"), col("t_id"), col("w_rand"))
       .orderBy(col("s_id"), col("t_id"))
-  }
 
   /** pr11: progressive QUALITY metrics — the reference's headline
     * evaluation next to pr4's PGR curve (`experiments/progressive/
@@ -131,18 +103,15 @@ object ProgressiveQueries {
     val giant = Progressive.progressiveVerify(src, tgt, "w_js",
       budget = 150, relation = "contains")
     // TOPK selection (the pr2 operator at the same weight), verified
-    // with the same predicate via the bounded geometry join-back
-    val topk = Progressive.topKPerTarget(src, tgt, "w_js", k = 3)
-      .select(col("s_id"), col("t_id"))
-      .join(src.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
-      .join(tgt.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
-      .withColumn("qualifies", graft.functions.GeomFunctions
-        .st_predicate(col("s_geom"), col("t_geom"), "contains"))
-    // the unbudgeted truth: qualifying pairs over ALL candidates
-    val tot = Progressive.progressiveVerify(src, tgt, "w_js",
-        budget = Int.MaxValue, relation = "contains")
-      .agg(sum(when(col("qualifies"), 1L).otherwise(0L))
-        .as("total_qualifying"))
+    // with the same predicate via the geometry join-back; k per target
+    // bounds no global row count, so no broadcast hint
+    val topk = Progressive.verified(
+      Progressive.topKPerTarget(src, tgt, "w_js", k = 3).select(col("s_id"), col("t_id")),
+      src, tgt, "contains", budget = Int.MaxValue)
+    // the unbudgeted truth: every qualifying pair, counted without a
+    // ranking (as Evaluation.evaluateProgressive counts it)
+    val tot = SpatialJoin.relate(src, tgt, "contains")
+      .agg(count(lit(1)).as("total_qualifying"))
     metrics(giant, "giant", 150L)
       .unionByName(metrics(topk, "topk", 3L))
       .crossJoin(broadcast(tot))

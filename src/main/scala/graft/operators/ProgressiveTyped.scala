@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import graft.functions.Jts
 import graft.model.Relation
@@ -69,6 +69,15 @@ object ProgressiveTyped {
     }
   }
 
+  /** The ids and up to three ordering weights of each candidate as
+    * [[NarrowCand]] rows, padding the weights a linker leaves unused
+    * with 0 (a non-default main weight leaves early stopping two). */
+  private def narrowCands(cands: DataFrame, weights: Seq[String]): Dataset[NarrowCand] = {
+    val ws = weights.map(c => col(c).cast("double")).padTo(3, lit(0.0))
+      .zip(Seq("w", "w2", "w3")).map { case (c, n) => c.as(n) }
+    cands.select(col("s_id") +: col("t_id") +: ws: _*).as(Encoders.product[NarrowCand])
+  }
+
   /** DynamicProgressiveGIAnt (reference
     * `DynamicProgressiveGIAnt.scala:25-88`): drain candidates best-first
     * under a per-partition budget; every time a verified pair
@@ -104,19 +113,11 @@ object ProgressiveTyped {
     require(schemeU == "SIMPLE" || secondary.nonEmpty,
       s"scheme $schemeU needs a secondary weight column")
     val weights = if (secondary.isEmpty) Seq(weight) else Seq(weight, secondary)
-    val wanted = weights.toSet
-    val (src, tgt) = Progressive.provision(source, target, wanted)
-    val theta = SpatialJoin.computeTheta(src, granularity)
+    val (cands, src, tgt) =
+      Progressive.weighted(source, target, weights.toSet, granularity)
     val spark = src.sparkSession
     import spark.implicits._
-    val ws = (weights.take(3) ++ Seq.fill(3 - math.min(3, weights.length))(""))
-      .zip(Seq("w", "w2", "w3"))
-      .map { case (c, n) =>
-        (if (c.isEmpty) lit(0.0) else col(c).cast("double")).as(n)
-      }
-    val narrow = Progressive.addWeights(
-        SpatialJoin.candidatePairsNarrow(src, tgt, theta), theta, src, wanted)
-      .select(Seq(col("s_id"), col("t_id")) ++ ws: _*).as[NarrowCand]
+    val narrow = narrowCands(cands, weights)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Job 1 (materializes the narrow cache): per-partition pair counts.
     val counts = narrow.rdd
@@ -242,26 +243,15 @@ object ProgressiveTyped {
                     precisionLevel: Double = 0.1,
                     maxViolations: Int = 3,
                     granularity: String = "avg"): Dataset[VerifiedPair] = {
-    val rest = Seq("w_cf", "w_mbro").filterNot(_ == weight)
-    val weights = weight +: rest
-    val wanted = weights.toSet
-    val (src, tgt) = Progressive.provision(source, target, wanted)
-    val theta = SpatialJoin.computeTheta(src, granularity)
+    val weights = weight +: Seq("w_cf", "w_mbro").filterNot(_ == weight)
+    val (cands, src, tgt) =
+      Progressive.weighted(source, target, weights.toSet, granularity)
     val spark = src.sparkSession
     import spark.implicits._
-    // pad to three weight columns — NarrowCand requires w/w2/w3, and a
-    // non-default main weight (w_cf / w_mbro) leaves only two in `rest`
-    val ws = (weights.take(3) ++ Seq.fill(3 - math.min(3, weights.length))(""))
-      .zip(Seq("w", "w2", "w3"))
-      .map { case (c, n) =>
-        (if (c.isEmpty) lit(0.0) else col(c).cast("double")).as(n)
-      }
     // Phase 1 — narrow rank assignment: sort ids+weights within each
     // candidate partition, tag with (pid, rank), pin with an eager
     // checkpoint (two DAG branches below must see the same ranks).
-    val ranked = Progressive.addWeights(
-        SpatialJoin.candidatePairsNarrow(src, tgt, theta), theta, src, wanted)
-      .select(Seq(col("s_id"), col("t_id")) ++ ws: _*).as[NarrowCand]
+    val ranked = narrowCands(cands, weights)
       .sortWithinPartitions(col("w").desc, col("w2").desc, col("w3").desc,
         col("s_id").asc, col("t_id").asc)
       .mapPartitions { it =>

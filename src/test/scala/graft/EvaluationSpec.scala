@@ -28,18 +28,9 @@ class EvaluationSpec extends AnyFunSuite {
     assert(full.qualifying === full.totalQualifying)
     assert(full.pgr > 0 && full.pgr <= 1.0)
 
-    // random baseline: deterministic hash weight, same budget
-    val theta = SpatialJoin.computeTheta(entitiesDf(source))
-    val randRanked = Progressive.withWeights(
-      SpatialJoin.candidatePairs(entitiesDf(source), entitiesDf(target), theta), theta)
-      .withColumn("w_rand", Progressive.randomWeight.cast("double"))
-      .orderBy(col("w_rand").desc, col("s_id"), col("t_id"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("w_rand").desc, col("s_id"), col("t_id"))))
-      .withColumn("qualifies", graft.functions.GeomFunctions.st_predicate(
-        col("s_geom"), col("t_geom"), "intersects"))
-    val rand = Evaluation.evaluate(randRanked, full.totalQualifying)
+    // random baseline: the engine's deterministic hash weight, same budget
+    val rand = Evaluation.evaluateProgressive(
+      entitiesDf(source), entitiesDf(target), "w_rand", budget = 1000000)
     assert(full.pgr > rand.pgr,
       s"JS weighting (pgr=${full.pgr}) should beat random (pgr=${rand.pgr})")
   }
