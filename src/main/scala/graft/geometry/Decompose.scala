@@ -4,15 +4,16 @@ import org.locationtech.jts.geom.{Envelope, Geometry, GeometryFactory}
 import graft.functions.Jts
 
 /** Geometry decomposition — the capability of DS-JedAI's decompose
-  * package (D1 `RecursiveDecomposer`, D3 `EnvelopeRefiner`),
-  * re-implemented on JTS set operations instead of the reference's
-  * hand-rolled blade/edge-walk math: a piece is the JTS intersection of
-  * the geometry with a clip rectangle. This trades a little CPU for far
-  * less code and inherits JTS's robustness fixes; invariants (area
-  * preservation, piece size, envelope tightening) are property-tested.
+  * package's D3 `EnvelopeRefiner`, re-implemented on JTS set
+  * operations instead of the reference's hand-rolled blade/edge-walk
+  * math: a piece is the JTS intersection of the geometry with a clip
+  * rectangle. This trades a little CPU for far less code and inherits
+  * JTS's robustness fixes; the envelope invariants are property-tested.
   * D2 `GridDecomposer` (per-θ-tile segments) is not kept: it served
   * only segment-wise verification, which exact whole-geometry relate
-  * replaced (clipping at grid lines lost point touches).
+  * replaced (clipping at grid lines lost point touches). D1
+  * `RecursiveDecomposer` and D5 collection flattening are not kept
+  * either: no engine path split or flattened a geometry.
   */
 object Decompose {
 
@@ -42,24 +43,6 @@ object Decompose {
     }
   }
 
-  /** D1: recursively bisect (midpoint of the longer θ-relative axis)
-    * until each piece's extent is at most `t` θ-cells. */
-  def recursive(g: Geometry, thetaX: Double, thetaY: Double, t: Double): Seq[Geometry] = {
-    val env = g.getEnvelopeInternal
-    val wCells = env.getWidth / thetaX
-    val hCells = env.getHeight / thetaY
-    if (wCells <= t && hCells <= t) Seq(g)
-    else if (wCells >= hCells) {
-      val mid = (env.getMinX + env.getMaxX) / 2
-      clip(g, env.getMinX, env.getMinY, mid, env.getMaxY).toSeq.flatMap(recursive(_, thetaX, thetaY, t)) ++
-      clip(g, mid, env.getMinY, env.getMaxX, env.getMaxY).toSeq.flatMap(recursive(_, thetaX, thetaY, t))
-    } else {
-      val mid = (env.getMinY + env.getMaxY) / 2
-      clip(g, env.getMinX, env.getMinY, env.getMaxX, mid).toSeq.flatMap(recursive(_, thetaX, thetaY, t)) ++
-      clip(g, env.getMinX, mid, env.getMaxX, env.getMaxY).toSeq.flatMap(recursive(_, thetaX, thetaY, t))
-    }
-  }
-
   /** D3: fine-grained envelopes — per vertical θ-slab envelope of the
     * clipped geometry (no geometry splitting survives; only tighter
     * boxes). `maxEnvs` caps the list; above it the plain MBR is used,
@@ -75,9 +58,4 @@ object Decompose {
         .map(_.getEnvelopeInternal)
     }
   }
-
-  /** D5: flatten GeometryCollections into members (reference
-    * `GeometryUtils.scala:26-37`). */
-  def flatten(g: Geometry): Seq[Geometry] =
-    (0 until g.getNumGeometries).map(g.getGeometryN)
 }

@@ -19,6 +19,11 @@ import graft.functions.StIm
   *      picks broadcast vs shuffled-hash vs sort-merge from sizes, and
   *      AQE handles byte-skew at runtime; no hand-built per-partition
   *      index needed (reference: `model/structures/SpatialIndex.scala`).
+  *      It sizes a side before its explode, so it may broadcast the
+  *      exploded target tiles (gia_boxes: 318,884 rows from 79,854
+  *      boxes); a `shuffle_hash` hint in its place was measured slower
+  *      on both linkbench workloads (gia_boxes 0.84 vs 0.80 s,
+  *      gia_giant 0.39 vs 0.33 s), so the choice stays Catalyst's.
   *   4. MBR intersection filter (`LinkerT.scala:52-55`).
   *   5. Reference-point dedup: keep the pair only in the tile containing
   *      the top-left corner of the MBR intersection — replicated pairs
@@ -30,15 +35,34 @@ import graft.functions.StIm
   *      JTS relate otherwise) or `st_predicate` (single relation). Every
   *      verifier relates whole geometries; none decomposes them.
   *
-  * Scale: both sides shuffle once on the tile id; everything after is
-  * pipelined map-side. Verification cost is proportional to surviving
-  * candidates, not input size. For a 100 TB run, tune θ (bigger tiles →
-  * fewer replicas, more candidates per tile) and rely on AQE skew-join
-  * splitting for dense tiles.
+  * Scale: each side's geometry moves at most once. The tile join
+  * moves the exploded rows once (a shuffle on the tile id, or a
+  * broadcast of the side Catalyst sizes as small); when
+  * [[Theta.ride]] holds and verification stays in place, the source
+  * geometry rides in that move and only the target geometry is
+  * joined back per pair (see [[candidatePairs]]). Verification cost
+  * is proportional to surviving candidates, not input size. For a
+  * 100 TB run, tune θ (bigger tiles → fewer replicas, more candidates
+  * per tile) and rely on AQE skew-join splitting for dense tiles.
   */
 object SpatialJoin {
 
-  case class Theta(x: Double, y: Double)
+  /** The θ tile size per axis. `ride` says the source geometry may
+    * ride the tile explode: [[computeTheta]] bounds the source bytes
+    * after the explode at no more than [[RideBound]] × the bytes
+    * before it. The default keeps the join-back, so a `Theta(x, y)`
+    * built anywhere but [[computeTheta]] never rides. */
+  case class Theta(x: Double, y: Double, ride: Boolean = false)
+
+  /** How many times its own bytes the source geometry may occupy
+    * after the tile explode and still ride it. Under the `avg` θ an
+    * entity of the mean extent bounds at (1 + 2)² = 9 times its bytes,
+    * so ordinary corpora ride; a source whose bytes sit in entities
+    * tens of θ across does not, because each of its replicas would
+    * carry the whole blob through the tile join, where one join-back
+    * per surviving pair carries it once. A bound, not a setting: it
+    * only picks which of two exact plans moves fewer bytes. */
+  private val RideBound = 16.0
 
   /** Standard geometry-relation schema: id, geom (WKB), minx..maxy.
     * The parse is wrapped in an optimizer barrier so it is evaluated
@@ -72,9 +96,14 @@ object SpatialJoin {
   /** θ = SOURCE envelope extent statistic per axis (zero-extent
     * inputs — points / axis-parallel lines — fall back to 1.0,
     * mirroring the reference's guard for degenerate extents,
-    * `model/TileGranularities.scala:24-27`). One Spark job, tiny
-    * result collected to the driver and baked into the plan as
-    * literals.
+    * `model/TileGranularities.scala:24-27`). One Spark job: each
+    * partition returns its [[Moments]], the driver merges them in
+    * partition order (not completion order, so θ is the same to the
+    * last bit on every call: θ-tile counts feed the progressive
+    * weights) and bakes θ into the plan as literals. The same pass
+    * sets [[Theta.ride]]: an entity of extent e covers fewer than
+    * e/θ + 2 tiles per axis, so Σb·(ex/θx + 2)(ey/θy + 2) over the
+    * geometry bytes b bounds the source bytes after the explode.
     *
     * `granularity` selects the reference's tile-granularity statistic
     * (`model/TileGranularities.scala:22-45`,
@@ -91,27 +120,60 @@ object SpatialJoin {
     * so granularity is a performance dial, never a semantics dial —
     * ConfigRunnerSpec asserts result equality across all five. */
   def computeTheta(source: DataFrame, granularity: String = "avg"): Theta = {
-    val ex = col("maxx") - col("minx")
-    val ey = col("maxy") - col("miny")
-    val (ax, ay) = granularity.toLowerCase match {
-      case "avg" | "avg2" =>
-        (avg(when(ex > 0, ex)), avg(when(ey > 0, ey)))
-      case "min" =>
-        (min(when(ex > 0, ex)), min(when(ey > 0, ey)))
-      // max must keep the same zero-extent guard as the others: over a
-      // point-only axis max(ex) is 0.0 (not NULL), and an unguarded
-      // 0.0 would clamp to the 1e-9 floor — exploding every MBR into
-      // ~extent/1e-9 tiles instead of falling back to θ = 1.0
-      case "max" => (max(when(ex > 0, ex)), max(when(ey > 0, ey)))
+    val stat: (Moments, Int) => Double = granularity.toLowerCase match {
+      case "avg" => (m, a) => m.sum(a) / m.n(a)
+      case "avg2" => (m, a) => 0.5 * (m.sum(a) / m.n(a))
+      case "min" => (m, a) => m.lo(a)
+      case "max" => (m, a) => m.hi(a)
       case "none" => return Theta(1.0, 1.0)
       case other => throw new IllegalArgumentException(
         s"unknown thetaGranularity '$other' (avg | avg2 | min | max | none)")
     }
-    val row = source.agg(ax.as("tx"), ay.as("ty")).head()
-    val half = if (granularity.equalsIgnoreCase("avg2")) 0.5 else 1.0
-    val tx = if (row.isNullAt(0)) 1.0 else math.max(half * row.getDouble(0), 1e-9)
-    val ty = if (row.isNullAt(1)) 1.0 else math.max(half * row.getDouble(1), 1e-9)
-    Theta(tx, ty)
+    val m = source.select(col("minx"), col("miny"), col("maxx"), col("maxy"),
+        octet_length(col("geom"))).queryExecution.toRdd
+      .mapPartitions(rows => Iterator(rows.foldLeft(new Moments)((acc, r) =>
+        acc.add(r.getDouble(2) - r.getDouble(0), r.getDouble(3) - r.getDouble(1),
+          if (r.isNullAt(4)) 0 else r.getInt(4)))))
+      .collect().foldLeft(new Moments)(_ merge _) // in partition order
+    // only positive extents count, for every statistic: over a
+    // point-only axis the max extent is 0.0, and an unguarded 0.0
+    // would clamp to the 1e-9 floor — exploding every MBR into
+    // ~extent/1e-9 tiles instead of falling back to θ = 1.0
+    def axis(a: Int): Double = if (m.n(a) == 0) 1.0 else math.max(stat(m, a), 1e-9)
+    val (tx, ty) = (axis(0), axis(1))
+    val exploded = m.bxy / (tx * ty) + 2 * m.bx / tx + 2 * m.by / ty + 4 * m.b
+    Theta(tx, ty, ride = exploded <= RideBound * m.b)
+  }
+
+  /** One partition's θ statistics, merged on the driver: per axis the
+    * count, sum, min and max of the positive extents; and over the
+    * geometry bytes b, Σb, Σb·ex, Σb·ey and Σb·ex·ey, the terms of the
+    * ride bound. */
+  private final class Moments extends Serializable {
+    val n = new Array[Long](2)
+    val sum = new Array[Double](2)
+    val lo = Array.fill(2)(Double.PositiveInfinity)
+    val hi = Array.fill(2)(Double.NegativeInfinity)
+    var b, bx, by, bxy = 0.0
+
+    def add(ex: Double, ey: Double, bytes: Int): Moments = {
+      extent(0, ex); extent(1, ey)
+      b += bytes; bx += bytes * ex; by += bytes * ey; bxy += bytes * ex * ey
+      this
+    }
+
+    private def extent(a: Int, e: Double): Unit = if (e > 0) {
+      n(a) += 1; sum(a) += e; lo(a) = math.min(lo(a), e); hi(a) = math.max(hi(a), e)
+    }
+
+    def merge(o: Moments): Moments = {
+      for (a <- 0 to 1) {
+        n(a) += o.n(a); sum(a) += o.sum(a)
+        lo(a) = math.min(lo(a), o.lo(a)); hi(a) = math.max(hi(a), o.hi(a))
+      }
+      b += o.b; bx += o.bx; by += o.by; bxy += o.bxy
+      this
+    }
   }
 
   private def prefixed(df: DataFrame, p: String): DataFrame =
@@ -128,16 +190,19 @@ object SpatialJoin {
     * after the generate. Narrow rows (~50 B) keep the replication
     * harmless; [[candidatePairs]] joins the blobs back per surviving
     * pair, which is one hash join per side against the entity frames
-    * (persist them when parsing is expensive — the gate queries do). */
+    * (persist them when parsing is expensive — the gate queries do),
+    * except where [[Theta.ride]] bounds the source blob's replication
+    * and it rides the explode instead. This frame never carries a
+    * blob, whatever θ says. */
   def candidatePairsNarrow(source: DataFrame, target: DataFrame,
-                           theta: Theta): DataFrame = {
-    val s = tiled(source, "s_", theta)
-    val t = tiled(target, "t_", theta)
-    pairJoinTail(s, t, theta)
-  }
+                           theta: Theta): DataFrame =
+    pairJoinTail(tiled(source, "s_", theta), tiled(target, "t_", theta), theta)
 
-  private def tiled(side: DataFrame, p: String, theta: Theta): DataFrame =
-    prefixed(side.drop("geom"), p).withColumn("tile",
+  /** `side` exploded to one row per covered θ-tile, its columns
+    * prefixed with `p`; the geometry blob is dropped unless `geom`. */
+  private def tiled(side: DataFrame, p: String, theta: Theta,
+                    geom: Boolean = false): DataFrame =
+    prefixed(if (geom) side else side.drop("geom"), p).withColumn("tile",
       explode(tile_cover(col(p + "minx"), col(p + "miny"),
         col(p + "maxx"), col(p + "maxy"), theta.x, theta.y)))
 
@@ -224,23 +289,43 @@ object SpatialJoin {
     * linkbench gia_giant warm_s 1.34 → 1.85 s (verification already
     * ran on every core, the extra exchange only cost) and gia_boxes
     * within noise. The partition count separates every case that
-    * gained from every case that lost. */
+    * gained from every case that lost.
+    *
+    * Where verification stays in place and [[Theta.ride]] holds (the
+    * source bytes after the explode bound at Σb·(ex/θx + 2)(ey/θy + 2)
+    * ≤ 16·Σb, see [[computeTheta]]), the source geometry rides the
+    * tile join as `s_geom` and only `t_geom` is joined back: the s_id
+    * join-back would shuffle the whole source geometry column a second
+    * time (gia_boxes: 159,666 rows, 7.1 MB), only for AQE to broadcast
+    * the pairs instead. Measured with `linkbench/ab.py --pairs 10`
+    * (seeds 1000–1009, 4 vCPUs, together with θ's single job): warm_s
+    * gia_boxes 0.95 → 0.66 s and gia_giant 0.47 → 0.39 s, each 10/10;
+    * traced gia_boxes shuffle writes 7.8 → 0 MB. A spread placement
+    * keeps both join-backs: its exchange must stay narrow. */
   def candidatePairs(source: DataFrame, target: DataFrame,
                      theta: Theta): DataFrame = {
-    val narrow = candidatePairsNarrow(source, target, theta)
-    val placed =
-      if (Seq(source, target).forall(graft.spark.Spread.isSpread)) narrow
-      else narrow.repartition(
-        source.sparkSession.sparkContext.defaultParallelism, col("s_id"))
-    withGeoms(placed, source, target)
+    val inPlace = Seq(source, target).forall(graft.spark.Spread.isSpread)
+    if (inPlace && theta.ride)
+      withGeom(pairJoinTail(tiled(source, "s_", theta, geom = true),
+        tiled(target, "t_", theta), theta), target, "t_")
+    else {
+      val narrow = candidatePairsNarrow(source, target, theta)
+      val placed =
+        if (inPlace) narrow
+        else narrow.repartition(
+          source.sparkSession.sparkContext.defaultParallelism, col("s_id"))
+      withGeoms(placed, source, target)
+    }
   }
 
   /** Join the WKB blobs back onto narrow (s_id, t_id, ...) pairs. */
   private def withGeoms(pairs: DataFrame, source: DataFrame,
                         target: DataFrame): DataFrame =
-    pairs
-      .join(source.select(col("id").as("s_id"), col("geom").as("s_geom")), "s_id")
-      .join(target.select(col("id").as("t_id"), col("geom").as("t_geom")), "t_id")
+    withGeom(withGeom(pairs, source, "s_"), target, "t_")
+
+  /** Join one side's WKB blob back onto the pairs on its `p`-prefixed id. */
+  private def withGeom(pairs: DataFrame, side: DataFrame, p: String): DataFrame =
+    pairs.join(side.select(col("id").as(p + "id"), col("geom").as(p + "geom")), p + "id")
 
   /** (s_id, t_id) of the pairs whose geometries satisfy `relation`. */
   private def qualifying(pairs: DataFrame, relation: String): DataFrame =

@@ -26,17 +26,6 @@ class DecomposeSpec extends AnyFunSuite {
       10 + rnd.nextDouble() * 40, 3 + rnd.nextDouble() * 10))
   }
 
-  test("recursive decomposition preserves area and bounds piece size") {
-    polys.foreach { g =>
-      val pieces = Decompose.recursive(g, 2.0, 2.0, 2.0)
-      assert(math.abs(pieces.map(_.getArea).sum - g.getArea) < 1e-6)
-      pieces.foreach { p =>
-        val e = p.getEnvelopeInternal
-        assert(e.getWidth <= 2.0 * 2.0 + 1e-9 && e.getHeight <= 2.0 * 2.0 + 1e-9)
-      }
-    }
-  }
-
   test("refined envelopes are contained in the MBR and cover the geometry") {
     polys.foreach { g =>
       val envs = Decompose.refinedEnvelopes(g, 4.0, 64)
@@ -92,20 +81,5 @@ class DecomposeSpec extends AnyFunSuite {
     assert(stats.nonEmpty)
     assert(stats.values.forall(s => s.wallMillis > 0.0))
     assert(stats.values.filter(_.verifications > 0).forall(_.maxGeomBytes > 0))
-  }
-
-  test("flatten explodes collections into members and keeps atoms intact") {
-    val rdp = new WKTReader()
-    val mp = rdp.read(TestGeoms.multiPolygon(new scala.util.Random(7), 10, 10, 3))
-    val members = Decompose.flatten(mp)
-    assert(members.length === mp.getNumGeometries && members.length > 1)
-    assert(math.abs(members.map(_.getArea).sum - mp.getArea) < 1e-9)
-    members.foreach(m => assert(m.getGeometryType === "Polygon"))
-    val gc = rdp.read("GEOMETRYCOLLECTION(POINT(1 1), LINESTRING(0 0, 2 2), " +
-      "POLYGON((0 0, 3 0, 3 3, 0 3, 0 0)))")
-    assert(Decompose.flatten(gc).map(_.getGeometryType) ===
-      Seq("Point", "LineString", "Polygon"))
-    val atom = rdp.read("POINT(5 5)")
-    assert(Decompose.flatten(atom) === Seq(atom))
   }
 }

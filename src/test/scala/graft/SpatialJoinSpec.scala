@@ -107,10 +107,11 @@ class SpatialJoinSpec extends AnyFunSuite {
   private val target = TestGeoms.corpus(seed = 23, n = 70, world = 100)
 
   /** Brute-force oracle: all MBR-intersecting pairs with their DE-9IM. */
-  private def bruteForce(): Map[(String, String), String] = {
+  private def bruteForce(src: Seq[(String, String)] = source,
+                         tgt: Seq[(String, String)] = target): Map[(String, String), String] = {
     val rd = new WKTReader()
-    val ss = source.map { case (id, w) => (id, rd.read(w)) }
-    val tt = target.map { case (id, w) => (id, rd.read(w)) }
+    val ss = src.map { case (id, w) => (id, rd.read(w)) }
+    val tt = tgt.map { case (id, w) => (id, rd.read(w)) }
     (for {
       (sid, sg) <- ss
       (tid, tg) <- tt
@@ -182,6 +183,111 @@ class SpatialJoinSpec extends AnyFunSuite {
       "the spread must sit before the blob joins")
     assert(spread("spread").isEmpty)
     assert(spread("as built").isEmpty)
+  }
+
+  test("the source geometry rides the tile join where theta bounds its " +
+       "replication; a source entity 50 theta across keeps the s_id join-back") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.GeomFunctions.st_im
+    // a 33-vertex circle 5,000 units across in the 100-unit world: θ is
+    // the mean extent, so the circle alone spans over 50 θ on each axis
+    val circle = "giant" -> new GeometryFactory()
+      .createPoint(new Coordinate(50, 50)).buffer(2500).toText
+    // with broadcasts (Spark's default threshold) the exploded target
+    // tiles are broadcast and the riding source geometry never crosses
+    // an exchange; with them off (as a spec sharing this session may
+    // leave them) the shuffled joins move it, and only the s_id
+    // join-back is gone
+    def check(src: Seq[(String, String)], shape: DataFrame => DataFrame,
+              ride: Boolean, broadcast: Boolean): SpatialJoin.Theta = {
+      val s = shape(entitiesDf(src))
+      val theta = SpatialJoin.computeTheta(s)
+      val pairs = SpatialJoin.candidatePairs(s, shape(entitiesDf(target)), theta)
+        .withColumn("im", st_im(col("s_geom"), col("t_geom")))
+        .select(col("s_id"), col("t_id"), col("im.de9im"))
+      val got = pairs.collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+      assert(got === bruteForce(src, target))
+      val nodes = walk(pairs.queryExecution.executedPlan)
+      val sIdJoins = nodes.collect {
+        case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+          .exists(_.references.exists(_.name == "s_id")) => j
+      }
+      val sGeomMoves = nodes.collect {
+        case e: Exchange if e.output.exists(_.name == "s_geom") => e
+      }
+      assert(theta.ride === ride)
+      if (ride) {
+        assert(sIdJoins.isEmpty, "the riding source geometry was joined back on s_id")
+        if (broadcast)
+          assert(sGeomMoves.isEmpty, "an exchange moves the riding source geometry")
+      } else assert(sIdJoins.nonEmpty, "the source geometry must be joined back on s_id")
+      theta
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    try {
+      for ((threshold, broadcast) <- Seq("10MB" -> true, "-1" -> false)) {
+        spark.conf.set(key, threshold)
+        check(source, identity, ride = true, broadcast)
+        check(source, _.repartition(spark.sparkContext.defaultParallelism), ride = true,
+          broadcast)
+        val theta = check(source :+ circle, identity, ride = false, broadcast)
+        assert(5000 / theta.x >= 50 && 5000 / theta.y >= 50, theta)
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("computeTheta is one Spark job, equals the DataFrame aggregate of " +
+       "the positive extents, and returns the same bits on every call") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "theta-one-job"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    val s = entitiesDf(source)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "theta")
+      SpatialJoin.computeTheta(s)
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      assert(jobs.asScala.toList.filterNot(_ == "sentinel").size === 1)
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    def close(a: Double, e: Double): Boolean = math.abs(a - e) <= 1e-12 * math.abs(e)
+    for (corpus <- Seq(source, target)) {
+      val df = entitiesDf(corpus)
+      val ex = col("maxx") - col("minx")
+      val ey = col("maxy") - col("miny")
+      val r = df.agg(avg(when(ex > 0, ex)), avg(when(ey > 0, ey)),
+        min(when(ex > 0, ex)), min(when(ey > 0, ey)),
+        max(when(ex > 0, ex)), max(when(ey > 0, ey))).head()
+      val expected = Map(
+        "avg" -> (r.getDouble(0), r.getDouble(1)),
+        "avg2" -> (0.5 * r.getDouble(0), 0.5 * r.getDouble(1)),
+        "min" -> (r.getDouble(2), r.getDouble(3)),
+        "max" -> (r.getDouble(4), r.getDouble(5)),
+        "none" -> (1.0, 1.0))
+      expected.foreach { case (g, (ex0, ey0)) =>
+        val calls = Seq.fill(3)(SpatialJoin.computeTheta(df, g))
+        val t = calls.head
+        assert(close(t.x, ex0) && close(t.y, ey0), s"$g: $t vs ($ex0, $ey0)")
+        assert(calls.map(c => (java.lang.Double.doubleToRawLongBits(c.x),
+          java.lang.Double.doubleToRawLongBits(c.y), c.ride)).distinct.size === 1,
+          s"$g: $calls")
+      }
+    }
   }
 
   test("Spread runs no Spark job on a frame whose plan has a shuffle") {
