@@ -109,49 +109,35 @@ object ConfigRunner {
     *
     * Template-key contract (ConfigRunnerSpec walks the reference's own
     * `config/configurationTemplate.yaml:1-27` key for key): every key
-    * is either HONORED (paths/fields/patterns, relation, partitions →
-    * input repartition + region count, thetaGranularity — all five
-    * reference statistics (avg / avg2 / min / max / none,
-    * `Constants.scala:39-48`) as θ options on the tile paths,
-    * gridType=KDBTREE → the sample-KD region join,
-    * all five weighting functions, all progressive algorithms incl.
-    * RANDOM, budget, exportPath — and gridType KDBTREE/QUADTREE →
-    * the corresponding sample-region join) or REJECTED with an
-    * explicit message (gridType with DE9IM / progressive jobs, where
-    * the region path would change the output contract silently). For
-    * GIANT jobs the θ statistic is a tiling-performance dial only —
-    * the verified pair set is θ-invariant (ConfigRunnerSpec proves
-    * result equality across all five) — and the gridType region path
-    * does not tile by θ at all, so granularity is a no-op there. The
-    * weighted algorithms are not θ-invariant: `CF`, `JS` and `PEARSONS_X2`
-    * count θ-tiles (`Progressive.tileCounts`), so progressive, early
-    * stopping and top-k rankings follow the chosen statistic. */
+    * is either HONORED — paths/fields/patterns, relation, partitions
+    * (input repartition), thetaGranularity (all five reference
+    * statistics, avg / avg2 / min / max / none, `Constants.scala:39-48`,
+    * as θ options on the tile paths), all five weighting functions,
+    * all progressive algorithms incl. RANDOM, budget, exportPath — or
+    * REJECTED with an explicit message: gridType, whatever its value,
+    * because the θ-tile join does the spatial placement that the
+    * reference's Sedona grid partitioner does. For GIANT jobs the θ
+    * statistic is a tiling-performance dial only — the verified pair
+    * set is θ-invariant (ConfigRunnerSpec proves result equality across
+    * all five). The weighted algorithms are not θ-invariant: `CF`,
+    * `JS` and `PEARSONS_X2` count θ-tiles (`Progressive.tileCounts`),
+    * so progressive, early stopping and top-k rankings follow the
+    * chosen statistic. */
   def run(spark: SparkSession, conf: JobConf): DataFrame = {
     require(Set("avg", "avg2", "min", "max", "none")(
         conf.thetaGranularity.toLowerCase),
       s"unknown thetaGranularity '${conf.thetaGranularity}' " +
         "(avg | avg2 | min | max | none)")
     val temporal = conf.source.dateField.isDefined && conf.target.dateField.isDefined
-    conf.gridType.foreach { g =>
-      require(g.equalsIgnoreCase("KDBTREE") || g.equalsIgnoreCase("QUADTREE"),
-        s"gridType '$g' is not implemented; KDBTREE (sample-KD regions) " +
-          "and QUADTREE (sample quadtree regions) are")
-      require(conf.algorithm.equalsIgnoreCase("GIANT") &&
-          !conf.relation.equalsIgnoreCase("DE9IM") && !temporal,
-        "gridType routing is implemented for single-relation non-temporal " +
-          "GIANT jobs; DE9IM/temporal/progressive jobs use the θ-tile path")
-    }
+    require(conf.gridType.isEmpty,
+      s"gridType '${conf.gridType.get}' is not supported: the θ-tile join " +
+        "does the spatial placement, so drop the gridType key")
     def part(df: DataFrame): DataFrame =
       conf.partitions.fold(df)(df.repartition)
     val link = SpatialLink(part(load(spark, conf.source)),
       part(load(spark, conf.target)))
       .thetaGranularity(conf.thetaGranularity.toLowerCase)
     val result = (conf.algorithm.toUpperCase, conf.relation.toUpperCase) match {
-      case ("GIANT", rel) if conf.gridType.isDefined =>
-        graft.partition.SpatialPartitioner.joinByRegions(
-          link.source, link.target, rel.toLowerCase,
-          n = conf.partitions.getOrElse(16),
-          gridType = conf.gridType.get)
       case ("GIANT", "DE9IM")    => link.de9im()
       case ("GIANT", rel) if temporal => link.relateTemporal(rel.toLowerCase)
       case ("GIANT", rel)        => link.relate(rel.toLowerCase)

@@ -101,13 +101,12 @@ object GeoQueries {
   // NOTE (round 15): corpus-level spreading (repartition the parsed
   // entities across cores) was measured here and REVERTED — it fixed
   // the serialized DE-9IM verification (sp10 3.6 s -> 1.4 s) but made
-  // every per-partition-machinery consumer of the same memos SLOWER
-  // (TypedGiant/Progressive build per-partition indexes/budgets: sp13
-  // 0.66 -> 1.09 s, pr11 1.39 -> 2.58 s fresh-JVM A/B). The corpora
-  // keep their natural scan partitioning; SpatialJoin.candidatePairs
-  // spreads the NARROW pair frame before the blob joins whenever an
-  // input reads as fewer partitions than defaultParallelism, as these
-  // memos do at gate scale.
+  // the per-partition consumers of the same memos SLOWER (Progressive
+  // builds per-partition budgets: pr11 1.39 -> 2.58 s fresh-JVM A/B).
+  // The corpora keep their natural scan partitioning;
+  // SpatialJoin.candidatePairs spreads the NARROW pair frame before the
+  // blob joins whenever an input reads as fewer partitions than
+  // defaultParallelism, as these memos do at gate scale.
 
   private[graft] def partBoxes(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "partBoxes") {
@@ -387,18 +386,14 @@ object GeoQueries {
         col("within"), col("touches"), col("overlaps"))
       .orderBy(col("s_id"), col("t_id"))
 
-  /** Typed cogroup+per-partition-index path (the reference's exact
-    * execution shape) through the hash gate: pairs + the intersects
-    * bit decoded from the DE-9IM string (disjoint <=> II, IB, BI, BB
-    * all 'F'). */
-  def sp13TypedGiant(s: SparkSession, dir: String): DataFrame = {
-    def cell(i: Int) = substring(col("de9im"), i, 1)
-    TypedGiant.de9im(customerTriangles(s, dir), supplierBoxes(s, dir))
-      .select(col("s_id"), col("t_id"),
-        (cell(1) =!= "F" || cell(2) =!= "F" || cell(4) =!= "F" || cell(5) =!= "F")
-          .as("intersects"))
+  /** The intersects bit of every MBR-intersecting triangle × box pair,
+    * over sp12's join. The gate keeps its name, which keys its oracle;
+    * there is no typed cogroup path behind it, because the engine has
+    * one tile pipeline ([[SpatialJoin]]). */
+  def sp13Intersects(s: SparkSession, dir: String): DataFrame =
+    SpatialJoin.de9im(customerTriangles(s, dir), supplierBoxes(s, dir))
+      .select(col("s_id"), col("t_id"), col("intersects"))
       .orderBy(col("s_id"), col("t_id"))
-  }
 
   /** sp14: Z-order layout pruning — parts whose box min-corner falls
     * in the 64×64-aligned query tile at (512, 256), retrieved purely
@@ -523,7 +518,7 @@ object GeoQueries {
     "sp10_segmented_im"  -> (sp10SegmentedIm _),
     "sp11_finegrained_im" -> (sp11FineGrainedIm _),
     "sp12_balanced_im" -> (sp12BalancedIm _),
-    "sp13_typed_giant" -> (sp13TypedGiant _),
+    "sp13_typed_giant" -> (sp13Intersects _),
     "sp18_theta_max" -> (sp18ThetaMax _),
     "sp19_overlay_area" -> (sp19OverlayArea _)
   )

@@ -129,9 +129,9 @@ object ProgressiveQueries {
     * precisionLevel 0 disables the stop rule, so the verified set is
     * exactly the candidate set and the (s_id, t_id, qualifies)
     * projection is deterministic even though batch boundaries and
-    * verify order are partition-dependent. Like sp13 for the typed
-    * GIAnt, this checks the execution shape (narrow sort + sorted
-    * cogroup + per-partition entity lookup), not just the algebra. */
+    * verify order are partition-dependent. This checks the execution
+    * shape (narrow sort + sorted cogroup + per-partition entity
+    * lookup), not just the algebra. */
   def pr10EarlyStopping(s: SparkSession, dir: String): DataFrame =
     ProgressiveTyped.earlyStopping(partBoxes(s, dir), supplierBoxes(s, dir),
       "w_js", relation = "contains", batchSize = 100,

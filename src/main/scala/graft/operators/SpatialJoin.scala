@@ -202,23 +202,38 @@ object SpatialJoin {
     * prefixed with `p`; the geometry blob is dropped unless `geom`. */
   private def tiled(side: DataFrame, p: String, theta: Theta,
                     geom: Boolean = false): DataFrame =
-    prefixed(if (geom) side else side.drop("geom"), p).withColumn("tile",
-      explode(tile_cover(col(p + "minx"), col(p + "miny"),
-        col(p + "maxx"), col(p + "maxy"), theta.x, theta.y)))
+    explodeTiles(prefixed(if (geom) side else side.drop("geom"), p),
+      n => col(p + n), theta, "tile")
 
-  private def pairJoinTail(s: DataFrame, t: DataFrame, theta: Theta): DataFrame = {
+  private def pairJoinTail(s: DataFrame, t: DataFrame, theta: Theta): DataFrame =
+    tileJoin(s, n => col("s_" + n), t, n => col("t_" + n), theta, "tile")
+
+  /** Tile cover: `side` with one row per θ-tile its envelope covers,
+    * the tile id in column `tile`. `env` maps `minx`, `miny`, `maxx`
+    * and `maxy` to the side's envelope columns. */
+  private[graft] def explodeTiles(side: DataFrame, env: String => Column,
+                                  theta: Theta, tile: String): DataFrame =
+    side.withColumn(tile, explode(tile_cover(env("minx"), env("miny"),
+      env("maxx"), env("maxy"), theta.x, theta.y)))
+
+  /** Candidate pairs of two [[explodeTiles]] outputs: the equi-join on
+    * `tile`, the MBR filter and the reference-point dedup; `sEnv` and
+    * `tEnv` name each side's envelope columns, and `tile` is dropped. */
+  private[graft] def tileJoin(s: DataFrame, sEnv: String => Column,
+                              t: DataFrame, tEnv: String => Column,
+                              theta: Theta, tile: String): DataFrame = {
     val mbrIntersects =
-      col("s_minx") <= col("t_maxx") && col("s_maxx") >= col("t_minx") &&
-      col("s_miny") <= col("t_maxy") && col("s_maxy") >= col("t_miny")
+      sEnv("minx") <= tEnv("maxx") && sEnv("maxx") >= tEnv("minx") &&
+      sEnv("miny") <= tEnv("maxy") && sEnv("maxy") >= tEnv("miny")
     // Reference point = top-left corner of the MBR intersection; its
     // tile is computed with the same floor(c/θ) as tile_cover, so the
     // pair passes in exactly one of its common tiles.
-    val refTx = floor(greatest(col("s_minx"), col("t_minx")) / theta.x).cast("long")
-    val refTy = floor(greatest(col("s_miny"), col("t_miny")) / theta.y).cast("long")
+    val refTx = floor(greatest(sEnv("minx"), tEnv("minx")) / theta.x).cast("long")
+    val refTy = floor(greatest(sEnv("miny"), tEnv("miny")) / theta.y).cast("long")
     val refTile = shiftleft(refTx, 32).bitwiseOR(refTy.bitwiseAND(lit(0xFFFFFFFFL)))
-    s.join(t, "tile")
-      .filter(mbrIntersects && col("tile") === refTile)
-      .drop("tile")
+    s.join(t, tile)
+      .filter(mbrIntersects && col(tile) === refTile)
+      .drop(tile)
   }
 
   /** [[candidatePairsNarrow]] with a tile-key runtime filter — q20's

@@ -1,198 +1,113 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.GraftColumnBridge.{column, dataFrame}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.LongType
-import graft.functions.{StPredicate, TileCover}
+import graft.functions.StPredicate
+import graft.operators.SpatialJoin
 
 /** Catalyst rewrite: a logically-declared spatial theta join
   *
-  *   source.join(target, st_predicate(s_geom, t_geom, rel))
+  *   source.join(target, st_predicate(s_geom, t_geom, rel) [&& others])
   *
   * would plan as a cartesian product (no equi-keys). This optimizer
-  * rule rewrites it into the engine's filter-refine plan — tile-cover
-  * explode on both sides, equi-join on the tile id, MBR + reference
-  * -point filters, with the exact predicate kept as a post-filter —
-  * whenever both join children expose the standard entity columns
-  * (minx/miny/maxx/maxy). This is the declarative public surface of
-  * the reference's GIA.nt (SedonaExp's `WHERE ST_Predicate(...)` form,
+  * rule rewrites it into [[SpatialJoin]]'s filter-refine plan — the
+  * tile explode of both sides, the equi-join on the tile id and the
+  * MBR + reference-point filters ([[SpatialJoin.explodeTiles]],
+  * [[SpatialJoin.tileJoin]]), with the join condition kept as the
+  * verifying post-filter — whenever both join children expose the
+  * entity envelope columns `<p>minx`..`<p>maxy` next to their
+  * `<p>geom`. This is the declarative public surface of the
+  * reference's GIA.nt (SedonaExp's `WHERE ST_Predicate(...)` form,
   * `experiments/SedonaExp.scala:92-102`) as a native plan rule.
   *
-  * θ resolution order:
-  *  1. explicit session conf (`graft.theta.x` / `graft.theta.y`) —
-  *     callers who already know their θ pin it and no job runs;
-  *  2. DATA-DERIVED: the reference's AVG dynamic tiling
-  *     (`model/TileGranularities.scala:33-36`) computed over the LEFT
-  *     (source) child by executing a two-value aggregate at rewrite
-  *     time, memoized by the child's canonicalized plan so repeated
-  *     optimizer passes and repeated queries over the same frame pay
-  *     one job. The aggregate plan contains no spatial join, so the
-  *     rule cannot re-enter itself through it;
-  *  3. 1.0 fallback if the statistics job fails or yields no rows.
+  * θ is [[SpatialJoin.computeTheta]] over the LEFT (source) child:
+  * one Spark job each time the optimizer rewrites the join, never
+  * memoized, and a failure of that job fails the query.
+  *
+  * SQL-join children are arbitrary rows with no unique-id contract,
+  * so whole rows ride the tile explode; there is no geometry
+  * join-back as in [[SpatialJoin.candidatePairs]].
   *
   * Register with:
   * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
   */
-case class SpatialJoinRewrite(session: org.apache.spark.sql.SparkSession)
-    extends Rule[LogicalPlan] {
+case class SpatialJoinRewrite(session: SparkSession)
+    extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val thetaCache =
-    new java.util.concurrent.ConcurrentHashMap[LogicalPlan, (Double, Double)]()
-  // A long-lived session optimizing many distinct spatial joins would
-  // otherwise grow the canonicalized-plan key set without bound; a miss
-  // after eviction only re-runs the two-value θ aggregate.
-  private val MaxThetaEntries = 64
+  /** The tile column; a child that already outputs it is a side of
+    * a rewritten join (the tile equi-join needs it from both), so the
+    * rule never re-fires on its own output. */
+  private val Tile = "__tile"
 
-  /** θ for this join: conf pin → derived-from-source → 1.0. */
-  private def thetaFor(left: LogicalPlan, m: Map[String, Attribute]): (Double, Double) = {
-    val confX = session.conf.getOption("graft.theta.x")
-    val confY = session.conf.getOption("graft.theta.y")
-    if (confX.isDefined && confY.isDefined)
-      return (confX.get.toDouble, confY.get.toDouble)
-    if (thetaCache.size >= MaxThetaEntries) thetaCache.clear()
-    thetaCache.computeIfAbsent(left.canonicalized, _ => derive(left, m))
-  }
-
-  private def derive(left: LogicalPlan, m: Map[String, Attribute]): (Double, Double) =
-    try {
-      import org.apache.spark.sql.catalyst.expressions.aggregate.Average
-      import org.apache.spark.sql.types.DoubleType
-      // avg extent per axis, zero-extent inputs excluded (the
-      // reference's degenerate-extent guard)
-      def avgExtent(lo: Attribute, hi: Attribute, name: String) =
-        Alias(Average(If(GreaterThan(hi, lo), Subtract(hi, lo),
-          Literal(null, DoubleType))).toAggregateExpression(), name)()
-      val agg = Aggregate(Nil,
-        Seq(avgExtent(m("minx"), m("maxx"), "__tx"),
-            avgExtent(m("miny"), m("maxy"), "__ty")), left)
-      val rows = session.sessionState.executePlan(agg).executedPlan.executeTake(1)
-      if (rows.isEmpty) (1.0, 1.0)
-      else {
-        val r = rows.head
-        val tx = if (r.isNullAt(0)) 1.0 else math.max(r.getDouble(0), 1e-9)
-        val ty = if (r.isNullAt(1)) 1.0 else math.max(r.getDouble(1), 1e-9)
-        (tx, ty)
-      }
-    } catch { case scala.util.control.NonFatal(_) => (1.0, 1.0) }
-
-  private def side(plan: LogicalPlan, prefix: String): Option[Map[String, Attribute]] = {
-    val names = Seq("minx", "miny", "maxx", "maxy")
-    val found = names.flatMap { n =>
+  private def envelope(plan: LogicalPlan, prefix: String): Option[Map[String, Attribute]] = {
+    val found = Seq("minx", "miny", "maxx", "maxy").flatMap { n =>
       plan.output.find(_.name == prefix + n).map(n -> _)
     }.toMap
-    if (found.size == names.size) Some(found) else None
+    if (found.size == 4) Some(found) else None
   }
 
-  /** Split a conjunction into (the one spatial predicate, the rest). */
-  private def extractSpatial(cond: Expression): Option[(StPredicate, Seq[Expression])] = {
-    val conjuncts = {
-      def split(e: Expression): Seq[Expression] = e match {
-        case And(a, b) => split(a) ++ split(b)
-        case other => Seq(other)
-      }
-      split(cond)
-    }
-    conjuncts.collect { case p: StPredicate => p } match {
-      case Seq(p) => Some((p, conjuncts.filterNot(_ eq p)))
+  /** The one st_predicate conjunct relating a left geometry to a right one. */
+  private def spatial(cond: Expression, left: LogicalPlan,
+                      right: LogicalPlan): Option[(Attribute, Attribute)] =
+    splitConjunctivePredicates(cond).collect { case p: StPredicate => p } match {
+      case Seq(StPredicate(l: Attribute, r: Attribute, _))
+          if left.outputSet.contains(l) && right.outputSet.contains(r) => Some((l, r))
       case _ => None
     }
-  }
-
-  /** Guard against re-matching our own output: once rewritten, the
-    * join children are (possibly Filter/Project-wrapped) Generates
-    * emitting the __ltile/__rtile attributes, and later optimizer
-    * passes push the kept predicate back into the join condition —
-    * without this check the rule re-fires every iteration and stacks
-    * Generates until the iteration limit. */
-  private def alreadyRewritten(p: LogicalPlan): Boolean = {
-    @annotation.tailrec
-    def through(q: LogicalPlan): LogicalPlan = q match {
-      case f: Filter  => through(f.child)
-      case pr: Project => through(pr.child)
-      case other => other
-    }
-    through(p) match {
-      case g: Generate =>
-        g.generatorOutput.exists(a => a.name == "__ltile" || a.name == "__rtile")
-      case _ => false
-    }
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, Inner, Some(cond), hint)
-        if !alreadyRewritten(left) && !alreadyRewritten(right) &&
-        extractSpatial(cond).exists { case (p, _) =>
-          p.left.isInstanceOf[Attribute] && p.right.isInstanceOf[Attribute] &&
-          left.outputSet.contains(p.left.asInstanceOf[Attribute]) &&
-          right.outputSet.contains(p.right.asInstanceOf[Attribute])
-        } =>
-      val (pred, others) = extractSpatial(cond).get
-      val lg = pred.left.asInstanceOf[Attribute]
-      val rg = pred.right.asInstanceOf[Attribute]
-      val j2 = (side(left, lg.name.stripSuffix("geom")), side(right, rg.name.stripSuffix("geom"))) match {
-        case (Some(l), Some(r)) =>
-          val (thetaX, thetaY) = thetaFor(left, l)
-          val lTile = AttributeReference("__ltile", LongType, nullable = false)()
-          val rTile = AttributeReference("__rtile", LongType, nullable = false)()
-          def gen(child: LogicalPlan, m: Map[String, Attribute], out: Attribute) =
-            Generate(
-              ExplodeBase(TileCover(Seq(m("minx"), m("miny"), m("maxx"), m("maxy"),
-                Literal(thetaX), Literal(thetaY)))),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(out), child = child)
-          val lGen = gen(left, l, lTile)
-          val rGen = gen(right, r, rTile)
-          val mbr =
-            LessThanOrEqual(l("minx"), r("maxx")) :: GreaterThanOrEqual(l("maxx"), r("minx")) ::
-            LessThanOrEqual(l("miny"), r("maxy")) :: GreaterThanOrEqual(l("maxy"), r("miny")) :: Nil
-          // reference point tile (same floor arithmetic as TileCover)
-          def flr(c: Expression, t: Double) =
-            Cast(Floor(Divide(c, Literal(t))), LongType)
-          val refTx = flr(Greatest(Seq(l("minx"), r("minx"))), thetaX)
-          val refTy = flr(Greatest(Seq(l("miny"), r("miny"))), thetaY)
-          val refTile = BitwiseOr(ShiftLeft(refTx, Literal(32)),
-            BitwiseAnd(refTy, Literal(0xFFFFFFFFL)))
-          val filters = (mbr ++ Seq(EqualTo(lTile, refTile), pred) ++ others).reduce(And)
-          val joined = Join(lGen, rGen, Inner, Some(EqualTo(lTile, rTile)), hint)
-          Project(j.output, Filter(filters, joined))
-        case _ => j
+        if !(left.output ++ right.output).exists(_.name == Tile) =>
+      val sides = for {
+        (lg, rg) <- spatial(cond, left, right)
+        l <- envelope(left, lg.name.stripSuffix("geom"))
+        r <- envelope(right, rg.name.stripSuffix("geom"))
+      } yield (lg, l, r)
+      sides.fold(j: LogicalPlan) { case (lg, l, r) =>
+        val (s, t) = (dataFrame(session, left), dataFrame(session, right))
+        val theta = SpatialJoin.computeTheta(s.select(
+          l.toSeq.map { case (n, a) => column(a).as(n) } :+ column(lg).as("geom"): _*))
+        val sEnv = (n: String) => column(l(n))
+        val tEnv = (n: String) => column(r(n))
+        val sTiles = SpatialJoin.explodeTiles(s, sEnv, theta, Tile)
+        val tile = sTiles.queryExecution.analyzed.output.last
+        val pairs = SpatialJoin.tileJoin(sTiles, sEnv,
+          SpatialJoin.explodeTiles(t, tEnv, theta, Tile), tEnv, theta, Tile)
+        // the tile equi-join takes the spatial join's hint
+        Project(j.output, Filter(cond, pairs.queryExecution.analyzed.transform {
+          case tj: Join if tj.left.outputSet.contains(tile) => tj.copy(hint = hint)
+        }))
       }
-      j2
   }
-}
-
-/** Helper to construct Explode across minor Catalyst API differences. */
-object ExplodeBase {
-  def apply(child: Expression): Explode = Explode(child)
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   import graft.functions._
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(session => SpatialJoinRewrite(session))
     // SQL surface: the geometry vocabulary callable from spark.sql(...)
-    def info(name: String) = new ExpressionInfo(classOf[StGeomFromWkt].getName, name)
-    e.injectFunction((FunctionIdentifier("st_geomfromwkt"), info("st_geomfromwkt"),
-      (exprs: Seq[Expression]) => StGeomFromWkt(exprs.head)))
-    e.injectFunction((FunctionIdentifier("st_envelope"), info("st_envelope"),
-      (exprs: Seq[Expression]) => StEnvelope(exprs.head)))
-    e.injectFunction((FunctionIdentifier("st_numpoints"), info("st_numpoints"),
-      (exprs: Seq[Expression]) => StNumPoints(exprs.head)))
-    e.injectFunction((FunctionIdentifier("st_area"), info("st_area"),
-      (exprs: Seq[Expression]) => StArea(exprs.head)))
-    e.injectFunction((FunctionIdentifier("st_relate"), info("st_relate"),
-      (exprs: Seq[Expression]) => StIm(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("st_predicate"), info("st_predicate"),
-      (exprs: Seq[Expression]) => exprs(2) match {
-        case Literal(rel, _) => StPredicate(exprs(0), exprs(1), rel.toString)
-        case other => throw new IllegalArgumentException(
-          s"st_predicate relation must be a literal, got $other")
-      }))
+    def fn(name: String, arity: Int)(build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[StGeomFromWkt].getName, name),
+        (args: Seq[Expression]) =>
+          if (args.size == arity) build(args)
+          else throw new IllegalArgumentException(
+            s"$name takes $arity argument(s), got ${args.size}")))
+    fn("st_geomfromwkt", 1)(a => StGeomFromWkt(a(0)))
+    fn("st_envelope", 1)(a => StEnvelope(a(0)))
+    fn("st_numpoints", 1)(a => StNumPoints(a(0)))
+    fn("st_area", 1)(a => StArea(a(0)))
+    fn("st_relate", 2)(a => StIm(a(0), a(1)))
+    fn("st_predicate", 3)(a => a(2) match {
+      case Literal(rel, _) => StPredicate(a(0), a(1), rel.toString)
+      case other => throw new IllegalArgumentException(
+        s"st_predicate relation must be a literal, got $other")
+    })
   }
 }

@@ -169,7 +169,10 @@ class ConfigRunnerSpec extends AnyFunSuite {
       "configurations.budget", "configurations.exportPath")
     val missing = expectedKeys.filterNot(parsed.contains)
     assert(missing.isEmpty, s"template keys the parser dropped: $missing")
+  }
 
+  test("every configuration key is honored end to end or explicitly " +
+       "rejected") {
     // 2. a real config exercising every HONORED key end to end
     val dir = Files.createTempDirectory("cfgparity")
     val srcCsv = dir.resolve("src.csv")
@@ -197,29 +200,20 @@ class ConfigRunnerSpec extends AnyFunSuite {
     val batch = ConfigRunner.run(spark,
       yamlConf("  progressiveAlgorithm: GIANT")).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    // partitions + thetaGranularity=avg + gridType=KDBTREE + exportPath:
-    // the sample-KD region join must produce the identical pair set and
-    // the export must land on disk
+    // partitions + thetaGranularity=avg + exportPath: the repartitioned
+    // inputs must produce the identical pair set and the export must
+    // land on disk
     val export = dir.resolve("out").toString
-    val regionConf = yamlConf(
+    val partConf = yamlConf(
       s"""  partitions: 6
          |  thetaGranularity: "avg"
-         |  gridType: "KDBTREE"
          |  exportPath: $export""".stripMargin)
-    assert(regionConf.partitions.contains(6) &&
-      regionConf.gridType.contains("KDBTREE"))
-    val regionPairs = ConfigRunner.run(spark, regionConf).collect()
+    assert(partConf.partitions.contains(6))
+    val partPairs = ConfigRunner.run(spark, partConf).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(regionPairs === batch,
-      "KDBTREE region join must equal the θ-tile pair set")
+    assert(partPairs === batch,
+      "repartitioned inputs must equal the θ-tile pair set")
     assert(new java.io.File(export).exists, "exportPath not honored")
-    // QUADTREE (the reference's other grid type): same equality contract
-    val quadPairs = ConfigRunner.run(spark, yamlConf(
-      """  partitions: 6
-        |  gridType: "QUADTREE"""".stripMargin)).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(quadPairs === batch,
-      "QUADTREE region join must equal the θ-tile pair set")
     // datePattern with the template's own example value
     // (yyyy-MM-dd'T'HH:mm:ss) parses through the temporal path
     val srcT = dir.resolve("srcT.csv")
@@ -320,8 +314,10 @@ class ConfigRunnerSpec extends AnyFunSuite {
         s"rejection message '${e.getMessage}' lacks '$needle'")
     }
     rejects("  thetaGranularity: \"median\"", "intersects", "thetaGranularity")
-    rejects("  gridType: \"RTREE\"", "intersects", "KDBTREE")
-    rejects("  gridType: \"KDBTREE\"", "DE9IM", "tile path")
+    // gridType: the θ-tile join does the placement, so every grid
+    // type is rejected, whatever the relation
+    for (g <- Seq("KDBTREE", "QUADTREE", "RTREE"); rel <- Seq("intersects", "DE9IM"))
+      rejects(s"  gridType: \"$g\"", rel, "drop the gridType key")
     rejects("  progressiveAlgorithm: NO_SUCH_ALG", "intersects",
       "unknown algorithm")
   }

@@ -386,18 +386,9 @@ class SpatialJoinSpec extends AnyFunSuite {
         "— no exchange cut")
   }
 
-  test("typed cogroup+index path equals the declarative tile join") {
-    val declarative = SpatialJoin.de9im(entitiesDf(source), entitiesDf(target))
-      .select("s_id", "t_id", "de9im").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    val typed = graft.operators.TypedGiant.de9im(entitiesDf(source), entitiesDf(target))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    assert(typed === declarative)
-  }
-
   test("negative-coordinate world: declarative, typed and brute force " +
        "all agree") {
-    // centered at the origin: tile indices and coarse keys are negative
+    // centered at the origin: tile indices are negative
     // — floor vs truncation bugs live here
     val gf2 = new GeometryFactory()
     val rnd = new scala.util.Random(123)
@@ -419,10 +410,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val decl = SpatialJoin.de9im(entitiesDf(src), entitiesDf(tgt))
       .select("s_id", "t_id", "de9im").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    val typed = graft.operators.TypedGiant.de9im(entitiesDf(src), entitiesDf(tgt))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     assert(decl === expected)
-    assert(typed === expected)
   }
 
   test("entities drops invalid WKT, empty and GeometryCollection rows") {

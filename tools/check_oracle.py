@@ -5,7 +5,8 @@ Usage: check_oracle.py <verifyOutDir> <sfDir>
 For each <name> subdir (Spark parquet result) with an entry in
 oracle_sql.json: run the SQL in DuckDB against the sf parquet tables,
 sort both results by all columns (columns ordered by name), and
-compare values.
+compare values. Every gate named in Verify's _errors.json (it threw,
+so it may have no output directory) counts as a failure.
 """
 import sys, os, json, glob
 import duckdb
@@ -76,10 +77,15 @@ def main(outdir, sfdir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    errors_path = f"{outdir}/_errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
     n_pass = n_fail = 0
+    for name in sorted(errors):
+        print(f"  [FAIL-run ] {name}: {errors[name]}")
+        n_fail += 1
     for name in sorted(os.listdir(outdir)):
         d = os.path.join(outdir, name)
-        if not os.path.isdir(d):
+        if not os.path.isdir(d) or name in errors:
             continue
         files = glob.glob(f"{d}/*.parquet")
         got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
