@@ -364,11 +364,15 @@ object TileCover {
     * factor is the bottleneck, not a tractable plan. */
   val MaxTiles: Long = 4L * 1000 * 1000
 
-  /** Shared loop for interpreted and generated code. */
-  def compute(minx: Double, miny: Double, maxx: Double, maxy: Double,
-              tx: Double, ty: Double): GenericArrayData = {
-    val x0 = math.floor(minx / tx).toLong; val x1 = math.floor(maxx / tx).toLong
-    val y0 = math.floor(miny / ty).toLong; val y1 = math.floor(maxy / ty).toLong
+  /** The θ-tile index of coordinate `c`: floor(c/θ). */
+  @inline def index(c: Double, theta: Double): Long = math.floor(c / theta).toLong
+
+  /** The tile count of the cover x0..x1 × y0..y1 of the MBR
+    * [minx, miny, maxx, maxy]; throws past [[MaxTiles]]. Every tile
+    * cover goes through here: the explode below and the broadcast tile
+    * index of `SpatialJoin.candidatePairs`. */
+  def count(minx: Double, miny: Double, maxx: Double, maxy: Double,
+            x0: Long, y0: Long, x1: Long, y1: Long): Int = {
     // Guard the Long product BEFORE the Int cast: a geometry spanning a
     // huge number of θ-tiles (tiny θ, bad coordinates, or one
     // continent-sized MBR) would otherwise overflow into a negative
@@ -379,7 +383,15 @@ object TileCover {
         s"tile_cover: MBR [$minx,$miny,$maxx,$maxy] spans $nL θ-tiles " +
         s"(cap $MaxTiles). Use a coarser θ (AVG tiling over a " +
         "source with comparable extents) or pre-split the geometry.")
-    val n = nL.toInt
+    nL.toInt
+  }
+
+  /** Shared loop for interpreted and generated code. */
+  def compute(minx: Double, miny: Double, maxx: Double, maxy: Double,
+              tx: Double, ty: Double): GenericArrayData = {
+    val x0 = index(minx, tx); val x1 = index(maxx, tx)
+    val y0 = index(miny, ty); val y1 = index(maxy, ty)
+    val n = count(minx, miny, maxx, maxy, x0, y0, x1, y1)
     val out = new Array[Long](n)
     var i = 0; var x = x0
     while (x <= x1) { var y = y0; while (y <= y1) { out(i) = Jts.encodeTile(x, y); i += 1; y += 1 }; x += 1 }

@@ -104,9 +104,11 @@ object GeoQueries {
   // the per-partition consumers of the same memos SLOWER (Progressive
   // builds per-partition budgets: pr11 1.39 -> 2.58 s fresh-JVM A/B).
   // The corpora keep their natural scan partitioning;
-  // SpatialJoin.candidatePairs spreads the NARROW pair frame before the
-  // blob joins whenever an input reads as fewer partitions than
-  // defaultParallelism, as these memos do at gate scale.
+  // SpatialJoin.candidatePairs spreads the SOURCE before it probes the
+  // target's tile index (or, on the tile-join path for targets too large
+  // to broadcast, the NARROW pair frame before the blob joins) whenever
+  // it reads as fewer partitions than defaultParallelism, as these memos
+  // do at gate scale.
 
   private[graft] def partBoxes(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "partBoxes") {
@@ -327,8 +329,9 @@ object GeoQueries {
   def sp8LineBoxDe9im(s: SparkSession, dir: String): DataFrame =
     // the segment corpus is orders-sized, so the pair volume times
     // per-pair interval IM is the gate's cost center; the single-
-    // partition corpora make candidatePairs spread it (4 cores, sf0.1:
-    // 1.1 s spread vs 1.7 s in place)
+    // partition source makes candidatePairs spread it before the probe
+    // (measured as a narrow-pair spread, 4 cores, sf0.1: 1.1 s spread
+    // vs 1.7 s in place)
     SpatialJoin.de9im(orderSegments(s, dir), supplierBoxes(s, dir))
       .select(col("s_id"), col("t_id"), col("intersects"), col("crosses"),
         col("touches"), col("within"), col("coveredby"))
@@ -352,8 +355,8 @@ object GeoQueries {
     * oracle. The gate name is part of the driver contract; no θ-grid
     * segments are involved. */
   def sp10SegmentedIm(s: SparkSession, dir: String): DataFrame =
-    // the single-partition corpora make candidatePairs spread the
-    // narrow pair frame across cores before the blob joins
+    // the single-partition source makes candidatePairs spread it
+    // across cores before it probes the boxes' tile index
     SpatialJoin.de9im(customerTriangles(s, dir), supplierBoxes(s, dir),
       minPoints = 4)
       .select(col("s_id"), col("t_id"), col("intersects"), col("contains"),
@@ -368,8 +371,8 @@ object GeoQueries {
     * clipping in SQL. */
   def sp11FineGrainedIm(s: SparkSession, dir: String): DataFrame =
     // per-pair cost = the sub-envelope exists() filter plus JTS st_im
-    // on survivors; spread by candidatePairs like sp10 (4 cores, sf0.1:
-    // 1.3 s spread vs 2.3 s in place)
+    // on survivors; spread by candidatePairs like sp10 (measured as a
+    // narrow-pair spread, 4 cores, sf0.1: 1.3 s spread vs 2.3 s in place)
     SpatialJoin.de9imFineGrained(customerTriangles(s, dir), supplierBoxes(s, dir))
       .filter(col("intersects"))
       .select(col("s_id"), col("t_id"), col("contains"), col("within"),
@@ -477,7 +480,8 @@ object GeoQueries {
 
   /** sp20: θ-TILE DENSITY — the spatial exchange's replication
     * primitive ([[graft.functions.TileCover]], the expression under
-    * every candidatePairs explode) driver-gated DIRECTLY: explode each
+    * every tile-join explode, whose floor arithmetic the tile index
+    * shares) gated DIRECTLY: explode each
     * part box's tile cover at a fixed θ=(10,10) and count geometries
     * per tile — the occupancy histogram a partitioner reads to choose
     * grids, and the first skew diagnostic run on a new corpus. The

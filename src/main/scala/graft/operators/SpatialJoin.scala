@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.GeomFunctions._
 import graft.functions.StIm
 
@@ -12,18 +13,23 @@ import graft.functions.StIm
   *
   *   1. θ ("dynamic tiling") — one aggregate over the SOURCE envelopes
   *      (reference: `model/TileGranularities.scala:33-36`, AVG policy).
-  *   2. Tile cover — each geometry's MBR exploded to the θ-grid tiles it
-  *      overlaps (`explode(tile_cover(...))`); the tile id is a single
-  *      long, so the shuffle key is cheap and dense.
-  *   3. Candidate generation — plain equi-join on the tile id. Catalyst
-  *      picks broadcast vs shuffled-hash vs sort-merge from sizes, and
-  *      AQE handles byte-skew at runtime; no hand-built per-partition
-  *      index needed (reference: `model/structures/SpatialIndex.scala`).
-  *      It sizes a side before its explode, so it may broadcast the
-  *      exploded target tiles (gia_boxes: 318,884 rows from 79,854
-  *      boxes); a `shuffle_hash` hint in its place was measured slower
-  *      on both linkbench workloads (gia_boxes 0.84 vs 0.80 s,
-  *      gia_giant 0.39 vs 0.33 s), so the choice stays Catalyst's.
+  *   2. Tile cover — the θ-grid tiles each geometry's MBR overlaps,
+  *      each a single long id ([[graft.functions.TileCover]]): looked
+  *      up one by one on the index path, exploded to rows
+  *      (`explode(tile_cover(...))`) for the tile join, where the long
+  *      is a cheap, dense shuffle key.
+  *   3. Candidate generation — when Catalyst sizes the target as
+  *      broadcastable, a θ-tile → target index built from one
+  *      broadcast of the target's rows and probed by one pass over the
+  *      source ([[TargetTiles]]; reference:
+  *      `model/structures/SpatialIndex.scala`). Larger targets take a
+  *      plain equi-join on the tile id: Catalyst picks broadcast vs
+  *      shuffled-hash vs sort-merge from sizes, and AQE handles
+  *      byte-skew at runtime. It sizes a side before its explode, so it
+  *      may broadcast exploded tile rows; a `shuffle_hash` hint in its
+  *      place was measured slower on both linkbench workloads
+  *      (gia_boxes 0.84 vs 0.80 s, gia_giant 0.39 vs 0.33 s, before the
+  *      index path took them), so the choice stays Catalyst's.
   *   4. MBR intersection filter (`LinkerT.scala:52-55`).
   *   5. Reference-point dedup: keep the pair only in the tile containing
   *      the top-left corner of the MBR intersection — replicated pairs
@@ -35,33 +41,39 @@ import graft.functions.StIm
   *      JTS relate otherwise) or `st_predicate` (single relation). Every
   *      verifier relates whole geometries; none decomposes them.
   *
-  * Scale: each side's geometry moves at most once. The tile join
-  * moves the exploded rows once (a shuffle on the tile id, or a
-  * broadcast of the side Catalyst sizes as small); when
-  * [[Theta.ride]] holds and verification stays in place, the source
-  * geometry rides in that move and only the target geometry is
-  * joined back per pair (see [[candidatePairs]]). Verification cost
-  * is proportional to surviving candidates, not input size. For a
-  * 100 TB run, tune θ (bigger tiles → fewer replicas, more candidates
-  * per tile) and rely on AQE skew-join splitting for dense tiles.
+  * Scale: each side's geometry moves at most once. On the index path
+  * the target's rows move once, as one broadcast blob, and the source
+  * stays where it is read (spread once if it reads as fewer than
+  * defaultParallelism partitions); no tile rows move and nothing is
+  * joined back. On the tile-join path the exploded rows move once (a
+  * shuffle on the tile id, or a broadcast of the side Catalyst sizes
+  * as small); when [[Theta.ride]] holds and verification stays in
+  * place, the source geometry rides in that move and only the target
+  * geometry is joined back per pair (see [[tileJoinPairs]]).
+  * Verification cost is proportional to surviving candidates, not
+  * input size. For a 100 TB run, tune θ (bigger tiles → fewer
+  * replicas, more candidates per tile) and rely on AQE skew-join
+  * splitting for dense tiles.
   */
 object SpatialJoin {
 
   /** The θ tile size per axis. `ride` says the source geometry may
-    * ride the tile explode: [[computeTheta]] bounds the source bytes
-    * after the explode at no more than [[RideBound]] × the bytes
-    * before it. The default keeps the join-back, so a `Theta(x, y)`
-    * built anywhere but [[computeTheta]] never rides. */
+    * ride the tile explode of [[tileJoinPairs]] (the index path
+    * explodes nothing and ignores it): [[computeTheta]] bounds the
+    * source bytes after the explode at no more than [[RideBound]] ×
+    * the bytes before it. The default keeps the join-back, so a
+    * `Theta(x, y)` built anywhere but [[computeTheta]] never rides. */
   case class Theta(x: Double, y: Double, ride: Boolean = false)
 
   /** How many times its own bytes the source geometry may occupy
-    * after the tile explode and still ride it. Under the `avg` θ an
-    * entity of the mean extent bounds at (1 + 2)² = 9 times its bytes,
-    * so ordinary corpora ride; a source whose bytes sit in entities
-    * tens of θ across does not, because each of its replicas would
-    * carry the whole blob through the tile join, where one join-back
-    * per surviving pair carries it once. A bound, not a setting: it
-    * only picks which of two exact plans moves fewer bytes. */
+    * after the tile explode of [[tileJoinPairs]] and still ride it.
+    * Under the `avg` θ an entity of the mean extent bounds at
+    * (1 + 2)² = 9 times its bytes, so ordinary corpora ride; a source
+    * whose bytes sit in entities tens of θ across does not, because
+    * each of its replicas would carry the whole blob through the tile
+    * join, where one join-back per surviving pair carries it once. A
+    * bound, not a setting: it only picks which of two exact plans
+    * moves fewer bytes. */
   private val RideBound = 16.0
 
   /** Standard geometry-relation schema: id, geom (WKB), minx..maxy.
@@ -188,7 +200,7 @@ object SpatialJoin {
     * tile count (ruinous for large geometries) and lets Catalyst
     * broadcast a deceptively "small" pre-explode side that is huge
     * after the generate. Narrow rows (~50 B) keep the replication
-    * harmless; [[candidatePairs]] joins the blobs back per surviving
+    * harmless; [[tileJoinPairs]] joins the blobs back per surviving
     * pair, which is one hash join per side against the entity frames
     * (persist them when parsing is expensive — the gate queries do),
     * except where [[Theta.ride]] bounds the source blob's replication
@@ -279,10 +291,52 @@ object SpatialJoin {
       source, target), relation)
   }
 
-  /** Candidate pairs after tile join + MBR filter + reference-point
-    * dedup. Output: s_* and t_* columns, one row per qualifying pair.
-    * Entity ids must be unique per side (the engine-wide contract,
-    * like the reference's originalID).
+  /** Candidate pairs after the tile cover, MBR filter and
+    * reference-point dedup. Output: s_* and t_* columns, one row per
+    * qualifying pair, both geometries included. Entity ids must be
+    * unique per side (the engine-wide contract, like the reference's
+    * originalID).
+    *
+    * When Catalyst sizes the target at no more than
+    * [[Progressive.GeomBroadcastBytes]], the target is probed as an
+    * index: one job collects its rows into one blob, which goes out
+    * as a broadcast, and each executor builds a θ-tile → target table
+    * over it once ([[TargetTiles]], the reference's `SpatialIndex`).
+    * One pass over the source then looks up each row's covered tiles
+    * and emits the pairs that pass [[tileJoin]]'s MBR and
+    * reference-point tests, with `s_geom` and `t_geom` already in the
+    * row: no tile rows move and nothing is joined back. A source that
+    * reads as fewer than defaultParallelism partitions is spread
+    * first ([[graft.spark.Spread]]), so verification runs on every
+    * core. Spark's own broadcast threshold is not the gate: the
+    * linkbench gia_boxes target sizes at 11.09 MB, past its 10 MB
+    * default. Measured against the tile join it replaces
+    * (`linkbench/ab.py --pairs 10`, seeds 5000–5009, 4 vCPUs): warm_s
+    * gia_boxes 0.689 → 0.442 s and gia_giant 0.414 → 0.270 s, each
+    * 10/10; traced, 4 → 3 Spark jobs per repetition.
+    *
+    * Larger targets take [[tileJoinPairs]]. */
+  def candidatePairs(source: DataFrame, target: DataFrame,
+                     theta: Theta): DataFrame =
+    if (target.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        BigInt(Progressive.GeomBroadcastBytes)) probedPairs(source, target, theta)
+    else tileJoinPairs(source, target, theta)
+
+  /** The index path of [[candidatePairs]]: the source, spread if it
+    * reads narrow and prefixed `s_`, probing the broadcast target. */
+  private def probedPairs(source: DataFrame, target: DataFrame,
+                          theta: Theta): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    val s = prefixed(graft.spark.Spread(source), "s_")
+    val probe = TileProbe(Seq("minx", "miny", "maxx", "maxy").map(c => expression(col("s_" + c))),
+      TargetTiles.broadcast(target, theta),
+      StructType(target.schema.map(f => f.copy(name = "t_" + f.name))))
+    s.select(col("*"), column(probe))
+  }
+
+  /** The tile-join path of [[candidatePairs]], for targets too large to
+    * broadcast as an index: the tile equi-join of both exploded sides,
+    * then the geometry join-backs.
     *
     * Verification placement follows one observable rule: when an input
     * reads as fewer than defaultParallelism partitions
@@ -298,13 +352,13 @@ object SpatialJoin {
     * sort-merge blob join REUSES the s_id hash partitioning.
     *
     * Measured with the spread forced on every call (4 cores, sf0.1
-    * gate corpora read as 1 partition, the linkbench inputs as 4):
-    * sp10 5.7 → 2.1 s, sp8 1.7 → 1.1 s, sp11 2.3 → 1.3 s; the cheap
-    * single-partition gates (sp1–sp7, sp12, sp18, sp19) within noise;
-    * linkbench gia_giant warm_s 1.34 → 1.85 s (verification already
-    * ran on every core, the extra exchange only cost) and gia_boxes
-    * within noise. The partition count separates every case that
-    * gained from every case that lost.
+    * gate corpora read as 1 partition, the linkbench inputs as 4),
+    * before the index path existed: sp10 5.7 → 2.1 s, sp8 1.7 → 1.1 s,
+    * sp11 2.3 → 1.3 s; the cheap single-partition gates (sp1–sp7,
+    * sp12, sp18, sp19) within noise; linkbench gia_giant warm_s
+    * 1.34 → 1.85 s (verification already ran on every core, the extra
+    * exchange only cost) and gia_boxes within noise. The partition
+    * count separates every case that gained from every case that lost.
     *
     * Where verification stays in place and [[Theta.ride]] holds (the
     * source bytes after the explode bound at Σb·(ex/θx + 2)(ey/θy + 2)
@@ -313,12 +367,13 @@ object SpatialJoin {
     * join-back would shuffle the whole source geometry column a second
     * time (gia_boxes: 159,666 rows, 7.1 MB), only for AQE to broadcast
     * the pairs instead. Measured with `linkbench/ab.py --pairs 10`
-    * (seeds 1000–1009, 4 vCPUs, together with θ's single job): warm_s
-    * gia_boxes 0.95 → 0.66 s and gia_giant 0.47 → 0.39 s, each 10/10;
-    * traced gia_boxes shuffle writes 7.8 → 0 MB. A spread placement
-    * keeps both join-backs: its exchange must stay narrow. */
-  def candidatePairs(source: DataFrame, target: DataFrame,
-                     theta: Theta): DataFrame = {
+    * (seeds 1000–1009, 4 vCPUs, together with θ's single job, before
+    * the index path took those workloads): warm_s gia_boxes
+    * 0.95 → 0.66 s and gia_giant 0.47 → 0.39 s, each 10/10; traced
+    * gia_boxes shuffle writes 7.8 → 0 MB. A spread placement keeps
+    * both join-backs: its exchange must stay narrow. */
+  private[graft] def tileJoinPairs(source: DataFrame, target: DataFrame,
+                                   theta: Theta): DataFrame = {
     val inPlace = Seq(source, target).forall(graft.spark.Spread.isSpread)
     if (inPlace && theta.ride)
       withGeom(pairJoinTail(tiled(source, "s_", theta, geom = true),

@@ -30,7 +30,7 @@ import graft.operators.SpatialJoin
   *
   * SQL-join children are arbitrary rows with no unique-id contract,
   * so whole rows ride the tile explode; there is no geometry
-  * join-back as in [[SpatialJoin.candidatePairs]].
+  * join-back as in [[SpatialJoin.tileJoinPairs]].
   *
   * Register with:
   * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}

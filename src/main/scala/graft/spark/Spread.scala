@@ -16,8 +16,9 @@ import org.apache.spark.sql.execution.exchange.Exchange
   *
   * Applied ONLY where the downstream per-row cost dominates that move
   * (measured, fresh-JVM A/B at sf0.1): the brute-force cosine arms
-  * (dd7 2.43 s → 0.71 s) and, through [[isSpread]], the spatial
-  * verification pair path (`SpatialJoin.candidatePairs`). A
+  * (dd7 2.43 s → 0.71 s), the source of the spatial tile-index probe
+  * (`SpatialJoin.candidatePairs`) and, through [[isSpread]], the
+  * narrow pairs of its tile-join path. A
   * blanket spread in Tables.table was measured and REVERTED: agg-first
   * scans get slower (q1 0.46 s → 1.02 s — the exchange costs more than
   * the serial partial agg it parallelizes), and cheap per-row maps

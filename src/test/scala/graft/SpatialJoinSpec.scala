@@ -131,6 +131,43 @@ class SpatialJoinSpec extends AnyFunSuite {
     p +: kids.flatMap(walk)
   }
 
+  /** Whether a physical plan (not yet executed) joins: the tile-join
+    * path does, the tile-index path does not. */
+  private def joins(df: DataFrame): Boolean =
+    walk(df.queryExecution.sparkPlan).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])
+
+  /** The descriptions of the Spark jobs `body` starts, in start order:
+    * each carries the description set when it started, `null` if none. */
+  private def jobsOf(body: => Unit): List[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "spatial-join-spec-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, null)
+      body
+      // listener events arrive in order: once this job is seen, so is
+      // every job `body` started
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      jobs.asScala.toList.filterNot(_ == "sentinel")
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Input layouts on both sides of candidatePairs' placement rule:
     * as built (a local scan over defaultParallelism slices: in place),
     * one partition (spread), and repartitioned to defaultParallelism
@@ -159,12 +196,14 @@ class SpatialJoinSpec extends AnyFunSuite {
 
   test("candidatePairs spreads the narrow pairs on s_id only when an input " +
        "reads as fewer than defaultParallelism partitions") {
+    // the placement rule of the tile-join path: the index path has no
+    // narrow pairs to spread (it spreads the source instead)
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     val p = spark.sparkContext.defaultParallelism
     def sIdSpreads(shape: DataFrame => DataFrame): Seq[ShuffleExchangeExec] = {
       val s = shape(entitiesDf(source))
-      val pairs = SpatialJoin.candidatePairs(s, shape(entitiesDf(target)),
+      val pairs = SpatialJoin.tileJoinPairs(s, shape(entitiesDf(target)),
         SpatialJoin.computeTheta(s))
       pairs.collect()
       walk(pairs.queryExecution.executedPlan).collect {
@@ -187,6 +226,7 @@ class SpatialJoinSpec extends AnyFunSuite {
 
   test("the source geometry rides the tile join where theta bounds its " +
        "replication; a source entity 50 theta across keeps the s_id join-back") {
+    // the tile-join path; the index path never joins a geometry back
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.functions.GeomFunctions.st_im
@@ -203,7 +243,7 @@ class SpatialJoinSpec extends AnyFunSuite {
               ride: Boolean, broadcast: Boolean): SpatialJoin.Theta = {
       val s = shape(entitiesDf(src))
       val theta = SpatialJoin.computeTheta(s)
-      val pairs = SpatialJoin.candidatePairs(s, shape(entitiesDf(target)), theta)
+      val pairs = SpatialJoin.tileJoinPairs(s, shape(entitiesDf(target)), theta)
         .withColumn("im", st_im(col("s_geom"), col("t_geom")))
         .select(col("s_id"), col("t_id"), col("im.de9im"))
       val got = pairs.collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
@@ -238,33 +278,126 @@ class SpatialJoinSpec extends AnyFunSuite {
     } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** Corpora for the two candidate paths: negative coordinates, MBR
+    * edges on multiples of θ, zero-extent and point-only sources, and a
+    * target far wider than θ. */
+  private lazy val edgeCorpora
+      : Seq[(String, Seq[(String, String)], Seq[(String, String)], (Double, Double))] = {
+    val rnd = new scala.util.Random(5)
+    def box(x0: Double, y0: Double, x1: Double, y1: Double) =
+      s"POLYGON(($x0 $y0, $x1 $y0, $x1 $y1, $x0 $y1, $x0 $y0))"
+    def at(k: Int) = (rnd.nextInt(2 * k) - k).toDouble
+    // every positive extent is 4, so θ = (4, 4) and each box edge on an
+    // even coordinate lies on a tile border half the time
+    val aligned = (0 until 80).map { i =>
+      val (x, y) = (2 * at(20), 2 * at(20))
+      s"s$i" -> (i % 4 match {
+        case 0 => s"POINT($x $y)"
+        case 1 => s"LINESTRING($x $y, ${x + 4} $y)"
+        case 2 => s"LINESTRING($x $y, $x ${y + 4})"
+        case _ => box(x, y, x + 4, y + 4)
+      })
+    }
+    val targets = (0 until 60).map { i =>
+      val (x, y) = (2 * at(20), 2 * at(20))
+      s"t$i" -> (i % 3 match {
+        case 0 => box(x, y, x + 2 * (1 + rnd.nextInt(4)), y + 2 * (1 + rnd.nextInt(4)))
+        case 1 => TestGeoms.starPolygon(rnd, x, y, 3)
+        case _ => s"LINESTRING($x $y, ${x + 6} ${y - 4})"
+      })
+    } :+ ("wide" -> box(-200, -12, 200, 12)) // 100 θ across
+    // θ = (1, 1): the points sit on tile borders and box edges
+    val points = (0 until 200).map(i => s"p$i" -> s"POINT(${at(15)} ${at(15)})")
+    val boxes = (0 until 40).map { i =>
+      val (x, y) = (at(15), at(15))
+      s"b$i" -> box(x, y, x + 1 + rnd.nextInt(5), y + 1 + rnd.nextInt(5))
+    } :+ ("wide" -> box(-31, -2, 31, 2)) // 62 θ across, past the points
+    Seq(("theta-aligned", aligned, targets, (4.0, 4.0)),
+      ("point-only source", points, boxes, (1.0, 1.0)))
+  }
+
+  test("the tile index and the tile join each equal brute-force JTS pair " +
+       "for pair under every source and target layout") {
+    import graft.functions.GeomFunctions.st_im
+    def ims(pairs: DataFrame): Seq[((String, String), String)] =
+      pairs.withColumn("im", st_im(col("s_geom"), col("t_geom")))
+        .select(col("s_id"), col("t_id"), col("im.de9im")).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toSeq
+    for ((corpus, src, tgt, aligned) <- edgeCorpora) {
+      val expected = bruteForce(src, tgt)
+      assert(expected.size > 20, corpus)
+      for ((sLayout, sShape) <- layouts; (tLayout, tShape) <- layouts) {
+        val s = sShape(entitiesDf(src))
+        val t = tShape(entitiesDf(tgt))
+        val theta = SpatialJoin.computeTheta(s)
+        assert((theta.x, theta.y) === aligned, corpus)
+        val index = SpatialJoin.candidatePairs(s, t, theta)
+        val tileJoin = SpatialJoin.tileJoinPairs(s, t, theta)
+        assert(!joins(index) && joins(tileJoin))
+        for ((path, pairs) <- Seq("index" -> index, "tile join" -> tileJoin)) {
+          val got = ims(pairs)
+          val at = s"$corpus, source $sLayout, target $tLayout, $path"
+          assert(got.size === got.toMap.size, s"$at: duplicate pairs")
+          assert(got.toMap.keySet === expected.keySet,
+            s"$at: missing=${(expected.keySet -- got.toMap.keySet).take(5)} " +
+            s"extra=${(got.toMap.keySet -- expected.keySet).take(5)}")
+          assert(got.toMap === expected, s"$at: DE-9IM differs")
+        }
+      }
+    }
+  }
+
+  test("on the index path de9im runs theta, the target collect and one " +
+       "probe job, with no exchange") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val s = entitiesDf(source)
+    val t = entitiesDf(target)
+    val p = spark.sparkContext.defaultParallelism
+    assert(Seq(s, t).forall(_.queryExecution.toRdd.getNumPartitions >= p))
+    var out: DataFrame = null
+    var rows = 0
+    assert(jobsOf { out = SpatialJoin.de9im(s, t); rows = out.collect().length }.size === 3)
+    assert(rows === bruteForce().size)
+    assert(!walk(out.queryExecution.executedPlan).exists(_.isInstanceOf[Exchange]))
+  }
+
+  test("both candidate paths reject an MBR past the tile cap with " +
+       "tile_cover's message, in the target and in the source") {
+    import graft.functions.TileCover
+    def box(x0: Double, y0: Double, x1: Double, y1: Double) =
+      s"POLYGON(($x0 $y0, $x1 $y0, $x1 $y1, $x0 $y1, $x0 $y0))"
+    val unit = (0 until 8).map(i => s"u$i" -> box(i, i, i + 1, i + 1))
+    // θ = (1, 1): 3000 × 3000 target tiles
+    val wideTarget = (unit, Seq("wide" -> box(0, 0, 2999.5, 2999.5)), "avg")
+    // θ = (0.001, 0.001) by the min statistic: 10⁴ × 10⁴ source tiles
+    val wideSource = (Seq("tiny" -> box(0, 0, 0.001, 0.001), "wide" -> box(0, 0, 10, 10)),
+      Seq("t" -> box(0, 0, 0.002, 0.002)), "min")
+    // a frame built from an RDD has no size estimate, so it is never
+    // sized small enough for the index
+    def unsized(df: DataFrame) = spark.createDataFrame(df.rdd, df.schema)
+    for ((src, tgt, granularity) <- Seq(wideTarget, wideSource);
+         (path, shape) <- Seq[(String, DataFrame => DataFrame)]("index" -> identity,
+           "tile join" -> unsized)) {
+      val s = entitiesDf(src)
+      val t = shape(entitiesDf(tgt))
+      val theta = SpatialJoin.computeTheta(s, granularity)
+      val wide = (src ++ tgt).collect { case ("wide", w) => new WKTReader().read(w) }
+        .head.getEnvelopeInternal
+      val message = intercept[IllegalArgumentException](TileCover.compute(wide.getMinX,
+        wide.getMinY, wide.getMaxX, wide.getMaxY, theta.x, theta.y)).getMessage
+      val de9im = SpatialJoin.de9im(s, t, granularity)
+      assert(joins(de9im) === (path == "tile join"))
+      val e = intercept[Exception](de9im.collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(c => String.valueOf(c.getMessage).contains(message)),
+        s"$path: $e")
+    }
+  }
+
   test("computeTheta is one Spark job, equals the DataFrame aggregate of " +
        "the positive extents, and returns the same bits on every call") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = "theta-one-job"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
     val s = entitiesDf(source)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "theta")
-      SpatialJoin.computeTheta(s)
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      assert(jobs.asScala.toList.filterNot(_ == "sentinel").size === 1)
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
+    assert(jobsOf(SpatialJoin.computeTheta(s)).size === 1)
     def close(a: Double, e: Double): Boolean = math.abs(a - e) <= 1e-12 * math.abs(e)
     for (corpus <- Seq(source, target)) {
       val df = entitiesDf(corpus)
@@ -291,34 +424,10 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("Spread runs no Spark job on a frame whose plan has a shuffle") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = "spread-no-job"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val shuffled = spark.range(0, 1000, 1, 2).groupBy((col("id") % 7).as("k")).count()
-      sc.setJobGroup(group, "spread")
-      val out = graft.spark.Spread(shuffled)
-      // listener events arrive in order: once this job is seen, so is
-      // every job the Spread call started
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      assert(jobs.asScala.toList === List("sentinel"))
-      assert(out eq shuffled)
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
+    val shuffled = spark.range(0, 1000, 1, 2).groupBy((col("id") % 7).as("k")).count()
+    var out: DataFrame = null
+    assert(jobsOf { out = graft.spark.Spread(shuffled) } === Nil)
+    assert(out eq shuffled)
   }
 
   test("replication produces no duplicate pairs (reference-point dedup)") {
