@@ -105,8 +105,8 @@ object GeoQueries {
   // builds per-partition budgets: pr11 1.39 -> 2.58 s fresh-JVM A/B).
   // The corpora keep their natural scan partitioning;
   // SpatialJoin.candidatePairs spreads the SOURCE before it probes the
-  // target's tile index (or, on the tile-join path for targets too large
-  // to broadcast, the NARROW pair frame before the blob joins) whenever
+  // target's tile index (or, on the tile-join path for targets whose
+  // index exceeds its bound, the NARROW pair frame before the blob joins) whenever
   // it reads as fewer partitions than defaultParallelism, as these memos
   // do at gate scale.
 

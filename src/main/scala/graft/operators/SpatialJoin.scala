@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import graft.functions.GeomFunctions._
 import graft.functions.StIm
 
@@ -18,12 +19,12 @@ import graft.functions.StIm
   *      up one by one on the index path, exploded to rows
   *      (`explode(tile_cover(...))`) for the tile join, where the long
   *      is a cheap, dense shuffle key.
-  *   3. Candidate generation — when Catalyst sizes the target as
-  *      broadcastable, a θ-tile → target index built from one
+  *   3. Candidate generation — a θ-tile → target index built from one
   *      broadcast of the target's rows and probed by one pass over the
   *      source ([[TargetTiles]]; reference:
-  *      `model/structures/SpatialIndex.scala`). Larger targets take a
-  *      plain equi-join on the tile id: Catalyst picks broadcast vs
+  *      `model/structures/SpatialIndex.scala`). A target whose index
+  *      measures past its bound when the query runs takes a plain
+  *      equi-join on the tile id instead: Catalyst picks broadcast vs
   *      shuffled-hash vs sort-merge from sizes, and AQE handles
   *      byte-skew at runtime. It sizes a side before its explode, so it
   *      may broadcast exploded tile rows; a `shuffle_hash` hint in its
@@ -42,14 +43,19 @@ import graft.functions.StIm
   *      verifier relates whole geometries; none decomposes them.
   *
   * Scale: each side's geometry moves at most once. On the index path
-  * the target's rows move once, as one broadcast blob, and the source
-  * stays where it is read (spread once if it reads as fewer than
+  * the target's rows move once, collected when the query runs and
+  * broadcast as one blob per target partition, and the source stays
+  * where it is read (spread once if it reads as fewer than
   * defaultParallelism partitions); no tile rows move and nothing is
-  * joined back. On the tile-join path the exploded rows move once (a
-  * shuffle on the tile id, or a broadcast of the side Catalyst sizes
-  * as small); when [[Theta.ride]] holds and verification stays in
-  * place, the source geometry rides in that move and only the target
-  * geometry is joined back per pair (see [[tileJoinPairs]]).
+  * joined back. The index is bounded by the bytes its collect
+  * measures (256 MB, an unmeasured bound, see
+  * [[TargetTiles.maxBytes]]); past it, or past an even share of it in
+  * any one target partition, the same execution runs the tile join,
+  * whose exploded rows move once (a shuffle on the tile id, or a
+  * broadcast of the side Catalyst sizes as small); when [[Theta.ride]]
+  * holds and verification stays in place, the source geometry rides in
+  * that move and only the target geometry is joined back per pair (see
+  * [[tileJoinPairs]]).
   * Verification cost is proportional to surviving candidates, not
   * input size. For a 100 TB run, tune θ (bigger tiles → fewer
   * replicas, more candidates per tile) and rely on AQE skew-join
@@ -297,46 +303,50 @@ object SpatialJoin {
     * unique per side (the engine-wide contract, like the reference's
     * originalID).
     *
-    * When Catalyst sizes the target at no more than
-    * [[Progressive.GeomBroadcastBytes]], the target is probed as an
-    * index: one job collects its rows into one blob, which goes out
-    * as a broadcast, and each executor builds a θ-tile → target table
-    * over it once ([[TargetTiles]], the reference's `SpatialIndex`).
-    * One pass over the source then looks up each row's covered tiles
-    * and emits the pairs that pass [[tileJoin]]'s MBR and
-    * reference-point tests, with `s_geom` and `t_geom` already in the
-    * row: no tile rows move and nothing is joined back. A source that
-    * reads as fewer than defaultParallelism partitions is spread
-    * first ([[graft.spark.Spread]]), so verification runs on every
-    * core. Spark's own broadcast threshold is not the gate: the
-    * linkbench gia_boxes target sizes at 11.09 MB, past its 10 MB
-    * default. Measured against the tile join it replaces
-    * (`linkbench/ab.py --pairs 10`, seeds 5000–5009, 4 vCPUs): warm_s
-    * gia_boxes 0.689 → 0.442 s and gia_giant 0.414 → 0.270 s, each
-    * 10/10; traced, 4 → 3 Spark jobs per repetition.
-    *
-    * Larger targets take [[tileJoinPairs]]. */
+    * The target is probed as an index ([[TileProbe]]). Building the
+    * frame runs no job over the target; executing it does: one job
+    * collects the target's rows, measuring their bytes and θ-tile
+    * entries as it goes, and if the index fits in
+    * [[TargetTiles.maxBytes]] (256 MB, less under a small
+    * `spark.driver.maxResultSize`) the rows go out as one broadcast and
+    * each executor builds a θ-tile → target table over them once
+    * ([[TargetTiles]], the reference's `SpatialIndex`). One pass over
+    * the source then looks up each row's covered tiles and emits the
+    * pairs that pass [[tileJoin]]'s MBR and reference-point tests, with
+    * `s_geom` and `t_geom` already in the row: no tile rows move and
+    * nothing is joined back. A source that reads as fewer than
+    * defaultParallelism partitions is spread first
+    * ([[graft.spark.Spread]]), so verification runs on every core. A
+    * target whose index does not fit runs [[tileJoinPairs]] instead,
+    * decided per execution from the measured bytes, never from
+    * Catalyst's estimate (a WKB column is costed at 100 B a row).
+    * Measured against the tile join (`linkbench/ab.py --pairs 10`,
+    * seeds 11000–11009, 4 vCPUs): warm_s gia_boxes 0.594 → 0.371 s and
+    * gia_giant 0.381 → 0.264 s, each 10/10; traced, 4 → 3 Spark jobs
+    * per repetition. */
   def candidatePairs(source: DataFrame, target: DataFrame,
                      theta: Theta): DataFrame =
-    if (target.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(Progressive.GeomBroadcastBytes)) probedPairs(source, target, theta)
-    else tileJoinPairs(source, target, theta)
+    candidatePairs(source, target, theta,
+      TargetTiles.maxBytes(source.sparkSession.sparkContext))
 
-  /** The index path of [[candidatePairs]]: the source, spread if it
-    * reads narrow and prefixed `s_`, probing the broadcast target. */
-  private def probedPairs(source: DataFrame, target: DataFrame,
-                          theta: Theta): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val s = prefixed(graft.spark.Spread(source), "s_")
-    val probe = TileProbe(Seq("minx", "miny", "maxx", "maxy").map(c => expression(col("s_" + c))),
-      TargetTiles.broadcast(target, theta),
-      StructType(target.schema.map(f => f.copy(name = "t_" + f.name))))
-    s.select(col("*"), column(probe))
+  /** [[candidatePairs]] with the index bound `maxBytes`. */
+  private[graft] def candidatePairs(source: DataFrame, target: DataFrame,
+                                    theta: Theta, maxBytes: Long): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.dataFrame
+    TileProbeStrategy.register(source.sparkSession)
+    val s = prefixed(graft.spark.Spread(source), "s_").queryExecution.analyzed
+    val t = prefixed(target, "t_").queryExecution.analyzed
+    def env(side: LogicalPlan, p: String): Seq[Attribute] =
+      Seq("minx", "miny", "maxx", "maxy").map(n => side.output.find(_.name == p + n).get)
+    dataFrame(source.sparkSession, TileProbe(s, t, env(s, "s_"), env(t, "t_"), theta, maxBytes,
+      () => tileJoinPairs(source, target, theta)))
   }
 
-  /** The tile-join path of [[candidatePairs]], for targets too large to
-    * broadcast as an index: the tile equi-join of both exploded sides,
-    * then the geometry join-backs.
+  /** The tile-join path of [[candidatePairs]], which [[TileProbeExec]]
+    * runs when the target's index does not fit its bound: the tile
+    * equi-join of both exploded sides, then the geometry join-backs.
+    * Placement, ride and the measurements below predate the index
+    * path; no workload reaches this path today.
     *
     * Verification placement follows one observable rule: when an input
     * reads as fewer than defaultParallelism partitions

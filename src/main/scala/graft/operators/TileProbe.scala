@@ -1,27 +1,33 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.Platform
 import graft.functions.{Jts, TileCover}
 import SpatialJoin.Theta
 
-/** The target side of [[SpatialJoin.candidatePairs]]' index path: every
-  * target row's UnsafeRow bytes in one blob (row i ends at `ends(i)`),
-  * shipped once per query as a broadcast. The θ-tile → target table
-  * over it is built lazily, once in each JVM that reads the broadcast
-  * (the reference's per-partition `SpatialIndex`,
-  * `model/structures/SpatialIndex.scala`, kept per executor). `env`
-  * holds the ordinals of minx, miny, maxx and maxy in the rows. */
-private[operators] final class TargetTiles(blob: Array[Byte], ends: Array[Int],
+/** The target side of [[TileProbeExec]]: every target row's UnsafeRow
+  * bytes, one blob per partition of the target (row i of blob p ends at
+  * `ends(p)(i)`), shipped once per execution as a broadcast. The
+  * θ-tile → target table over it is built lazily, once in each JVM
+  * that reads the broadcast (the reference's per-partition
+  * `SpatialIndex`, `model/structures/SpatialIndex.scala`, kept per
+  * executor). `env` holds the ordinals of minx, miny, maxx and maxy in
+  * the rows. */
+private[operators] final class TargetTiles(blobs: Array[Array[Byte]], ends: Array[Array[Int]],
                                            numFields: Int, env: Array[Int],
                                            theta: Theta) extends Serializable {
 
-  @transient private lazy val table = new TargetTiles.Table(blob, ends, numFields, env, theta)
+  def size: Int = ends.map(_.length).sum
+
+  @transient private lazy val table = new TargetTiles.Table(blobs, ends, numFields, env, theta)
 
   /** The target rows paired with a source MBR: those whose MBR
     * intersects it, each in the one common tile that holds the
@@ -33,75 +39,106 @@ private[operators] final class TargetTiles(blob: Array[Byte], ends: Array[Int],
 
 private[operators] object TargetTiles {
 
-  /** Collect `target` in one job, one blob per partition concatenated
-    * in partition order, and broadcast it. */
-  def broadcast(target: DataFrame, theta: Theta): Broadcast[TargetTiles] = {
-    val schema = target.schema
-    val parts = target.queryExecution.toRdd.mapPartitions { rows =>
-      lazy val unsafe = UnsafeProjection.create(schema)
+  /** The largest index [[collect]] builds, in the bytes [[footprint]]
+    * counts: 256 MB, and at most half of `spark.driver.maxResultSize`
+    * (when set), which the collected rows count against. The 256 MB is
+    * not measured: the largest index any workload builds is the
+    * linkbench gia_boxes target's, 37 MB by [[footprint]] (80k rows,
+    * 12.8 MB of them row bytes), and no workload lies between it and
+    * the bound, so nothing shows where the index stops beating the tile
+    * join or where the driver starts to struggle. */
+  def maxBytes(sc: SparkContext): Long = {
+    val result = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (result > 0) math.min(256L << 20, result / 2) else 256L << 20
+  }
+
+  /** The heap bytes of an index over `rows` rows taking `bytes` bytes
+    * with `entries` θ-tile entries: the row bytes; per row its end
+    * offset, envelope, tile range and UnsafeRow header (100 B); per
+    * entry one int value and, at the table's load of ¼ to ½, up to
+    * four slots of a long key and an int start (52 B). */
+  private def footprint(bytes: Long, rows: Long, entries: Long): Long =
+    bytes + 100 * rows + 52 * entries
+
+  /** The θ-tile range of an MBR and its tile count, which throws with
+    * tile_cover's message past [[TileCover.MaxTiles]]. */
+  private final class Cover(theta: Theta, minx: Double, miny: Double, maxx: Double, maxy: Double) {
+    val x0 = TileCover.index(minx, theta.x); val x1 = TileCover.index(maxx, theta.x)
+    val y0 = TileCover.index(miny, theta.y); val y1 = TileCover.index(maxy, theta.y)
+    val count: Int = TileCover.count(minx, miny, maxx, maxy, x0, y0, x1, y1)
+  }
+
+  /** Collect `rows` in one job, one blob per partition, if the index
+    * over them fits in `maxBytes`; `None` otherwise. Each task measures
+    * its rows' bytes and θ-tile entries as it writes them and gives up
+    * once past its even share of `maxBytes`, so the driver never
+    * receives more than `maxBytes` and a large target costs a short
+    * partial read, not a collect. A skewed target whose largest
+    * partition exceeds its share gets `None` even when the whole would
+    * fit. Every row written has its tile count checked, so an MBR past
+    * the tile cap fails here, before anything is broadcast. */
+  def collect(rows: RDD[InternalRow], types: Array[DataType], env: Array[Int],
+              theta: Theta, maxBytes: Long): Option[TargetTiles] = {
+    val share = maxBytes / math.max(1, rows.getNumPartitions)
+    val parts = rows.mapPartitions { it =>
+      lazy val unsafe = UnsafeProjection.create(types)
       val out = new java.io.ByteArrayOutputStream(1 << 16)
       val buf = new Array[Byte](4096)
       val ends = Array.newBuilder[Int]
-      rows.foreach { r =>
-        (r match { case u: UnsafeRow => u; case o => unsafe(o) }).writeToStream(out, buf)
-        ends += out.size
+      var n, entries = 0L
+      while (it.hasNext && footprint(out.size, n, entries) < share) {
+        val r = it.next() match { case u: UnsafeRow => u; case o => unsafe(o) }
+        if (!env.exists(r.isNullAt)) entries += new Cover(theta, r.getDouble(env(0)),
+          r.getDouble(env(1)), r.getDouble(env(2)), r.getDouble(env(3))).count
+        r.writeToStream(out, buf)
+        ends += out.size; n += 1
       }
-      Iterator((out.toByteArray, ends.result()))
+      Iterator(if (it.hasNext || footprint(out.size, n, entries) > share) None
+               else Some((out.toByteArray, ends.result())))
     }.collect()
-    val total = parts.map(_._1.length.toLong).sum
-    require(total <= Int.MaxValue - 16,
-      s"broadcast tile index: the target's rows take $total bytes")
-    val blob = new Array[Byte](total.toInt)
-    val ends = new Array[Int](parts.map(_._2.length).sum)
-    var at = 0; var n = 0
-    parts.foreach { case (bytes, e) =>
-      System.arraycopy(bytes, 0, blob, at, bytes.length)
-      e.foreach { end => ends(n) = at + end; n += 1 }
-      at += bytes.length
-    }
-    val env = Array("minx", "miny", "maxx", "maxy").map(schema.fieldIndex)
-    target.sparkSession.sparkContext.broadcast(
-      new TargetTiles(blob, ends, schema.length, env, theta))
+    if (parts.exists(_.isEmpty)) None
+    else Some(new TargetTiles(parts.map(_.get._1), parts.map(_.get._2), types.length, env, theta))
   }
 
   /** Open-addressed tile key → slot table over CSR offsets and
     * values, built in two passes: count each tile's targets, then
     * place them. Slot s holds targets `values(starts(s) until
     * starts(s + 1))`, in target order; an empty slot has an empty range. */
-  private final class Table(blob: Array[Byte], ends: Array[Int], numFields: Int,
+  private final class Table(blobs: Array[Array[Byte]], ends: Array[Array[Int]], numFields: Int,
                             env: Array[Int], theta: Theta) {
-    private val n = ends.length
-    private val rows = new Array[UnsafeRow](n)
+    private val rows: Array[UnsafeRow] =
+      for ((blob, e) <- blobs.zip(ends); i <- e.indices.toArray) yield {
+        val start = if (i == 0) 0 else e(i - 1)
+        val r = new UnsafeRow(numFields)
+        r.pointTo(blob, Platform.BYTE_ARRAY_OFFSET + start, e(i) - start)
+        r
+      }
+    private val n = rows.length
     private val minx, miny, maxx, maxy = new Array[Double](n)
     // per target its tile range; x0 > x1 marks a null envelope
     private val x0, y0 = new Array[Long](n)
     private val x1, y1 = Array.fill(n)(-1L)
 
-    private val total: Long = {
-      var sum = 0L
-      for (i <- 0 until n) {
-        val start = if (i == 0) 0 else ends(i - 1)
-        val r = new UnsafeRow(numFields)
-        r.pointTo(blob, Platform.BYTE_ARRAY_OFFSET + start, ends(i) - start)
-        rows(i) = r
-        if (!env.exists(r.isNullAt)) {
-          minx(i) = r.getDouble(env(0)); miny(i) = r.getDouble(env(1))
-          maxx(i) = r.getDouble(env(2)); maxy(i) = r.getDouble(env(3))
-          x0(i) = TileCover.index(minx(i), theta.x); x1(i) = TileCover.index(maxx(i), theta.x)
-          y0(i) = TileCover.index(miny(i), theta.y); y1(i) = TileCover.index(maxy(i), theta.y)
-          sum += TileCover.count(minx(i), miny(i), maxx(i), maxy(i), x0(i), y0(i), x1(i), y1(i))
-        }
+    // [[collect]] checked every count against the tile cap and their
+    // sum against its bound
+    private val total: Int = {
+      var sum = 0
+      for (i <- 0 until n if !env.exists(rows(i).isNullAt)) {
+        val r = rows(i)
+        minx(i) = r.getDouble(env(0)); miny(i) = r.getDouble(env(1))
+        maxx(i) = r.getDouble(env(2)); maxy(i) = r.getDouble(env(3))
+        val c = new Cover(theta, minx(i), miny(i), maxx(i), maxy(i))
+        x0(i) = c.x0; x1(i) = c.x1; y0(i) = c.y0; y1(i) = c.y1
+        sum += c.count
       }
       sum
     }
-    // keeps the slot count below 2^31
-    require(total <= (1L << 28), s"broadcast tile index: $total θ-tile entries")
     // at least twice as many slots as (distinct) keys
-    private val bits = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(2 * total))
+    private val bits = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(2L * total))
     private val mask = (1 << bits) - 1
     private val keys = new Array[Long](1 << bits)
     private val starts = new Array[Int]((1 << bits) + 1)
-    private val values = new Array[Int](total.toInt)
+    private val values = new Array[Int](total)
 
     private def home(key: Long): Int = ((key * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
 
@@ -123,7 +160,7 @@ private[operators] object TargetTiles {
     }
     // running sums make starts(s) the end of slot s's range ...
     for (s <- 1 to mask) starts(s) += starts(s - 1)
-    starts(mask + 1) = total.toInt
+    starts(mask + 1) = total
     // ... and pass 2, placing from the back, walks it to the start. Every
     // key is present, and no empty slot sits between a key's home and
     // its slot, so the search needs no emptiness test.
@@ -134,14 +171,12 @@ private[operators] object TargetTiles {
     }
 
     def probe(sMinx: Double, sMiny: Double, sMaxx: Double, sMaxy: Double): Iterator[InternalRow] = {
-      val sx0 = TileCover.index(sMinx, theta.x); val sx1 = TileCover.index(sMaxx, theta.x)
-      val sy0 = TileCover.index(sMiny, theta.y); val sy1 = TileCover.index(sMaxy, theta.y)
-      TileCover.count(sMinx, sMiny, sMaxx, sMaxy, sx0, sy0, sx1, sy1)
+      val c = new Cover(theta, sMinx, sMiny, sMaxx, sMaxy)
       val out = new scala.collection.mutable.ArrayBuffer[InternalRow](4)
-      var x = sx0
-      while (x <= sx1) {
-        var y = sy0
-        while (y <= sy1) {
+      var x = c.x0
+      while (x <= c.x1) {
+        var y = c.y0
+        while (y <= c.y1) {
           val key = Jts.encodeTile(x, y)
           var s = home(key)
           while (starts(s) != starts(s + 1) && keys(s) != key) s = (s + 1) & mask
@@ -163,23 +198,95 @@ private[operators] object TargetTiles {
   }
 }
 
-/** Generator over a source row's MBR (`children`: minx, miny, maxx,
-  * maxy): the [[TargetTiles]] rows it pairs with, as the columns of
-  * `elementSchema`. */
-private[operators] case class TileProbe(children: Seq[Expression],
-                                        tiles: Broadcast[TargetTiles],
-                                        elementSchema: StructType)
-    extends Generator with CodegenFallback {
+/** The index path of `SpatialJoin.candidatePairs` as a plan node: each
+  * `left` (source) row paired with the `right` (target) rows its
+  * envelope `sourceEnv` meets under `SpatialJoin.tileJoin`'s MBR and
+  * reference-point tests, output as `left.output ++ right.output`.
+  * `fallback` builds the tile-join path over the same inputs, with
+  * columns of the same names; [[TileProbeExec]] builds and runs it only
+  * when the target's index does not fit in `maxBytes`. The env
+  * attributes are the node's expressions, so column pruning keeps them
+  * in the children. */
+private[graft] case class TileProbe(left: LogicalPlan, right: LogicalPlan,
+                                    sourceEnv: Seq[Attribute], targetEnv: Seq[Attribute],
+                                    theta: Theta, maxBytes: Long, fallback: () => DataFrame)
+    extends BinaryNode {
+  override def output: Seq[Attribute] = left.output ++ right.output
+  override protected def stringArgs: Iterator[Any] = Iterator(theta)
+  override protected def withNewChildrenInternal(l: LogicalPlan, r: LogicalPlan): TileProbe =
+    copy(left = l, right = r)
+}
 
-  @transient private lazy val target = tiles.value
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val env = children.map(_.eval(input))
-    if (env.contains(null)) Iterator.empty
-    else target.probe(env(0).asInstanceOf[Double], env(1).asInstanceOf[Double],
-      env(2).asInstanceOf[Double], env(3).asInstanceOf[Double])
+/** Plans [[TileProbe]]. [[register]] adds it to a session's planner
+  * (once; a session built without it cannot plan the node). */
+private[graft] object TileProbeStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case p: TileProbe => TileProbeExec(planLater(p.left), planLater(p.right), p.sourceEnv,
+      p.targetEnv, p.theta, p.maxBytes, p.fallback) :: Nil
+    case _ => Nil
   }
 
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(children = cs)
+  def register(session: SparkSession): Unit = {
+    val experimental = session.asInstanceOf[classic.SparkSession].experimental
+    if (!experimental.extraStrategies.contains(this))
+      experimental.extraStrategies = experimental.extraStrategies :+ this
+  }
+}
+
+/** [[TileProbe]] at execution: [[TargetTiles.collect]] reads the
+  * target, and when its index fits it is broadcast and the source is
+  * probed in place, one pass with no exchange; otherwise the fallback
+  * plan runs. The collect runs when the plan first executes, not when
+  * its frame is built. Spark keeps an executed plan's RDD, so a re-run
+  * of the same frame reuses that index, as it reuses a broadcast
+  * join's relation; a new frame over the same inputs collects anew.
+  * The broadcast lives as long as that RDD (the ContextCleaner removes
+  * it then), like the relation of Spark's own broadcast joins. */
+private[graft] case class TileProbeExec(left: SparkPlan, right: SparkPlan,
+                                        sourceEnv: Seq[Attribute], targetEnv: Seq[Attribute],
+                                        theta: Theta, maxBytes: Long,
+                                        // called on the driver only; a code-generated
+                                        // parent ships this node to executors
+                                        @transient fallback: () => DataFrame)
+    extends BinaryExecNode {
+
+  override def output: Seq[Attribute] = left.output ++ right.output
+  override protected def stringArgs: Iterator[Any] = Iterator(theta)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "indexRows" -> SQLMetrics.createMetric(sparkContext, "target rows indexed"))
+
+  private def ordinals(env: Seq[Attribute], of: SparkPlan): Array[Int] =
+    env.map(a => of.output.indexWhere(_.exprId == a.exprId)).toArray
+
+  override protected def doExecute(): RDD[InternalRow] =
+    TargetTiles.collect(right.execute(), right.output.map(_.dataType).toArray,
+        ordinals(targetEnv, right), theta, maxBytes) match {
+      case Some(tiles) =>
+        val indexed = longMetric("indexRows")
+        indexed += tiles.size
+        SQLMetrics.postDriverMetricUpdates(sparkContext,
+          sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(indexed))
+        val index = sparkContext.broadcast(tiles)
+        val env = ordinals(sourceEnv, left)
+        val out = output
+        left.execute().mapPartitions { rows =>
+          val target = index.value
+          val joined = new JoinedRow
+          val project = UnsafeProjection.create(out, out)
+          rows.flatMap { s =>
+            if (env.exists(s.isNullAt)) Iterator.empty
+            else target.probe(s.getDouble(env(0)), s.getDouble(env(1)),
+              s.getDouble(env(2)), s.getDouble(env(3))).map(t => project(joined(s, t)))
+          }
+        }
+      case None =>
+        val pairs = fallback()
+        val named = pairs.queryExecution.analyzed.output.map(a => a.name -> a).toMap
+        pairs.select(output.map(a => GraftColumnBridge.column(named(a.name))): _*)
+          .queryExecution.toRdd
+    }
+
+  override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): TileProbeExec =
+    copy(left = l, right = r)
 }

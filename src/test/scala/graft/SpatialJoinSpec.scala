@@ -334,7 +334,10 @@ class SpatialJoinSpec extends AnyFunSuite {
         val index = SpatialJoin.candidatePairs(s, t, theta)
         val tileJoin = SpatialJoin.tileJoinPairs(s, t, theta)
         assert(!joins(index) && joins(tileJoin))
-        for ((path, pairs) <- Seq("index" -> index, "tile join" -> tileJoin)) {
+        // a bound no target fits: the index path runs its fallback
+        val fallback = SpatialJoin.candidatePairs(s, t, theta, maxBytes = 0)
+        for ((path, pairs) <- Seq("index" -> index, "tile join" -> tileJoin,
+                                  "index fallback" -> fallback)) {
           val got = ims(pairs)
           val at = s"$corpus, source $sLayout, target $tLayout, $path"
           assert(got.size === got.toMap.size, s"$at: duplicate pairs")
@@ -346,6 +349,14 @@ class SpatialJoinSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** The rows the index path's [[graft.operators.TileProbeExec]]
+    * indexed in the execution of `df` that has run: 0 when it ran its
+    * fallback. */
+  private def indexedRows(df: DataFrame): Long =
+    walk(df.queryExecution.executedPlan).collect {
+      case p: graft.operators.TileProbeExec => p.metrics("indexRows").value
+    }.sum
 
   test("on the index path de9im runs theta, the target collect and one " +
        "probe job, with no exchange") {
@@ -359,11 +370,60 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(jobsOf { out = SpatialJoin.de9im(s, t); rows = out.collect().length }.size === 3)
     assert(rows === bruteForce().size)
     assert(!walk(out.queryExecution.executedPlan).exists(_.isInstanceOf[Exchange]))
+    assert(indexedRows(out) === target.size)
+  }
+
+  test("building the index path's frame runs no job; its first run " +
+       "collects the target, a re-run reuses the index, a new frame collects anew") {
+    val s = entitiesDf(source)
+    val t = entitiesDf(target)
+    val theta = SpatialJoin.computeTheta(s)
+    var pairs: DataFrame = null
+    assert(jobsOf { pairs = SpatialJoin.candidatePairs(s, t, theta) } === Nil)
+    assert(jobsOf(pairs.collect()).size === 2)
+    // Spark keeps an executed plan's RDD, as it keeps a broadcast join's relation
+    assert(jobsOf(pairs.collect()).size === 1)
+    assert(jobsOf(pairs.select(col("*")).collect()).size === 2)
+  }
+
+  test("a target that Catalyst sizes under the index bound but whose " +
+       "measured index exceeds it takes the tile join, with the same pairs") {
+    import graft.functions.GeomFunctions.st_im
+    // star-shaped 400-vertex polygons: Catalyst costs each WKB at
+    // 100 B, the rows take ~6.5 kB
+    val rnd = new scala.util.Random(9)
+    val heavy = (0 until 40).map { i =>
+      val (cx, cy) = (rnd.nextDouble() * 100, rnd.nextDouble() * 100)
+      val ring = (0 to 400).map(_ % 400).map { k =>
+        val a = 2 * math.Pi * k / 400
+        val r = 3 + (k % 24) * 0.1
+        f"${cx + r * math.cos(a)}%.6f ${cy + r * math.sin(a)}%.6f"
+      }
+      s"h$i" -> ring.mkString("POLYGON((", ", ", "))")
+    }
+    val s = entitiesDf(source)
+    val t = entitiesDf(heavy)
+    val theta = SpatialJoin.computeTheta(s)
+    val bound = 64L << 10
+    val estimate = t.queryExecution.optimizedPlan.stats.sizeInBytes
+    val measured = t.select(sum(octet_length(col("geom")))).first().getLong(0)
+    assert(estimate <= bound && measured > 3 * bound, s"estimate $estimate, measured $measured")
+    val expected = bruteForce(source, heavy)
+    assert(expected.size > 20)
+    for ((maxBytes, indexed) <- Seq(bound -> 0L, (64L << 20) -> heavy.size.toLong)) {
+      val pairs = SpatialJoin.candidatePairs(s, t, theta, maxBytes)
+        .withColumn("im", st_im(col("s_geom"), col("t_geom")))
+        .select(col("s_id"), col("t_id"), col("im.de9im"))
+      val got = pairs.collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2))
+      assert(got.length === expected.size && got.toMap === expected, s"bound $maxBytes")
+      assert(indexedRows(pairs) === indexed, s"bound $maxBytes")
+    }
   }
 
   test("both candidate paths reject an MBR past the tile cap with " +
        "tile_cover's message, in the target and in the source") {
     import graft.functions.TileCover
+    import graft.functions.GeomFunctions.st_im
     def box(x0: Double, y0: Double, x1: Double, y1: Double) =
       s"POLYGON(($x0 $y0, $x1 $y0, $x1 $y1, $x0 $y1, $x0 $y0))"
     val unit = (0 until 8).map(i => s"u$i" -> box(i, i, i + 1, i + 1))
@@ -372,21 +432,20 @@ class SpatialJoinSpec extends AnyFunSuite {
     // θ = (0.001, 0.001) by the min statistic: 10⁴ × 10⁴ source tiles
     val wideSource = (Seq("tiny" -> box(0, 0, 0.001, 0.001), "wide" -> box(0, 0, 10, 10)),
       Seq("t" -> box(0, 0, 0.002, 0.002)), "min")
-    // a frame built from an RDD has no size estimate, so it is never
-    // sized small enough for the index
-    def unsized(df: DataFrame) = spark.createDataFrame(df.rdd, df.schema)
-    for ((src, tgt, granularity) <- Seq(wideTarget, wideSource);
-         (path, shape) <- Seq[(String, DataFrame => DataFrame)]("index" -> identity,
-           "tile join" -> unsized)) {
+    for ((src, tgt, granularity) <- Seq(wideTarget, wideSource); path <- Seq("index", "fallback")) {
       val s = entitiesDf(src)
-      val t = shape(entitiesDf(tgt))
+      val t = entitiesDf(tgt)
       val theta = SpatialJoin.computeTheta(s, granularity)
       val wide = (src ++ tgt).collect { case ("wide", w) => new WKTReader().read(w) }
         .head.getEnvelopeInternal
       val message = intercept[IllegalArgumentException](TileCover.compute(wide.getMinX,
         wide.getMinY, wide.getMaxX, wide.getMaxY, theta.x, theta.y)).getMessage
-      val de9im = SpatialJoin.de9im(s, t, granularity)
-      assert(joins(de9im) === (path == "tile join"))
+      // de9im on the index path; on the fallback, the same verification
+      // over a bound no target fits
+      val de9im =
+        if (path == "index") SpatialJoin.de9im(s, t, granularity)
+        else SpatialJoin.candidatePairs(s, t, theta, maxBytes = 0)
+          .withColumn("im", st_im(col("s_geom"), col("t_geom")))
       val e = intercept[Exception](de9im.collect())
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       assert(chain.exists(c => String.valueOf(c.getMessage).contains(message)),
