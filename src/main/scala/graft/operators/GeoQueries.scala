@@ -465,17 +465,13 @@ object GeoQueries {
       .orderBy(col("src_id"), col("tgt_id"))
   }
 
-  /** sp17: the spatial runtime filter — supplier boxes (the SMALL
-    * source) joined to part boxes through the tile-bloom-pruned
-    * candidate path ([[SpatialJoin.relateBloomPruned]]): the source's
-    * occupied θ-tile keys become a bloom that prunes the big side's
-    * exploded tile rows BEFORE their exchange. Pair set identical to
-    * the plain path (false positives die in the tile equi-join), so
-    * the oracle is the plain rectangle-intersects SQL; the exchange
-    * cut is asserted from SQL metrics in SpatialJoinSpec. */
+  /** sp17: supplier boxes (the SMALL source) intersecting part boxes,
+    * through the tile index like every spatial join. The name is kept
+    * from a bloom over exploded tile rows; the index explodes nothing
+    * for a bloom to prune. The oracle is the plain rectangle-intersects
+    * SQL. */
   def sp17BloomPrunedJoin(s: SparkSession, dir: String): DataFrame =
-    SpatialJoin.relateBloomPruned(supplierBoxes(s, dir), partBoxes(s, dir),
-      "intersects")
+    SpatialJoin.relate(supplierBoxes(s, dir), partBoxes(s, dir), "intersects")
       .orderBy(col("s_id"), col("t_id"))
 
   /** sp20: θ-TILE DENSITY — the spatial exchange's replication

@@ -16,13 +16,16 @@ import graft.functions.StIm
   *      (reference: `model/TileGranularities.scala:33-36`, AVG policy).
   *   2. Tile cover — the θ-grid tiles each geometry's MBR overlaps,
   *      each a single long id ([[graft.functions.TileCover]]): looked
-  *      up one by one on the index path, exploded to rows
-  *      (`explode(tile_cover(...))`) for the tile join, where the long
-  *      is a cheap, dense shuffle key.
-  *   3. Candidate generation — a θ-tile → target index built from one
+  *      up one by one in the tile index, exploded to rows
+  *      (`explode(tile_cover(...))`) only for the tile join that
+  *      replaces an index past its bound, where the long is a cheap,
+  *      dense shuffle key.
+  *   3. Candidate generation — one θ-tile → target index built from one
   *      broadcast of the target's rows and probed by one pass over the
-  *      source ([[TargetTiles]]; reference:
-  *      `model/structures/SpatialIndex.scala`). A target whose index
+  *      source ([[tileProbe]]; reference: `linkers/LinkerT.scala`,
+  *      `model/structures/SpatialIndex.scala`), for [[candidatePairs]],
+  *      [[candidatePairsNarrow]] (every progressive linker) and the
+  *      `st_predicate` rewrite alike. A target whose index
   *      measures past its bound when the query runs takes a plain
   *      equi-join on the tile id instead: Catalyst picks broadcast vs
   *      shuffled-hash vs sort-merge from sizes, and AQE handles
@@ -197,23 +200,32 @@ object SpatialJoin {
   private def prefixed(df: DataFrame, p: String): DataFrame =
     df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, p + c))
 
-  /** Narrow candidate pairs: tile join + MBR filter + reference-point
-    * dedup over every entity column EXCEPT the geometry blob. Output:
-    * s_* and t_* columns (no s_geom/t_geom), one row per pair.
+  /** Narrow candidate pairs: the pairs of [[candidatePairs]] over every
+    * entity column EXCEPT the geometry blob. Output: s_* and t_* columns
+    * (no s_geom/t_geom), one row per pair, in the source's partitions.
     *
-    * The tile explode replicates each row once per covered θ-tile —
-    * replicating the WKB blob there multiplies shuffle volume by the
-    * tile count (ruinous for large geometries) and lets Catalyst
-    * broadcast a deceptively "small" pre-explode side that is huge
-    * after the generate. Narrow rows (~50 B) keep the replication
-    * harmless; [[tileJoinPairs]] joins the blobs back per surviving
-    * pair, which is one hash join per side against the entity frames
-    * (persist them when parsing is expensive — the gate queries do),
-    * except where [[Theta.ride]] bounds the source blob's replication
-    * and it rides the explode instead. This frame never carries a
-    * blob, whatever θ says. */
+    * The same tile index as [[candidatePairs]], built over the
+    * geometry-free sides, so the target rows it collects and broadcasts
+    * carry no WKB. The source is not spread: no geometry is verified in
+    * this frame. A target whose index does not fit its bound takes the
+    * tile join of both sides' narrow rows ([[narrowTileJoin]]). This
+    * frame never carries a blob. */
   def candidatePairsNarrow(source: DataFrame, target: DataFrame,
                            theta: Theta): DataFrame =
+    candidatePairsNarrow(source, target, theta,
+      TargetTiles.maxBytes(source.sparkSession.sparkContext))
+
+  /** [[candidatePairsNarrow]] with the index bound `maxBytes`. */
+  private[graft] def candidatePairsNarrow(source: DataFrame, target: DataFrame,
+                                          theta: Theta, maxBytes: Long): DataFrame =
+    indexPairs(source.drop("geom"), target.drop("geom"), theta, maxBytes,
+      () => narrowTileJoin(source, target, theta))
+
+  /** The narrow pairs by the tile join. The explode replicates each
+    * row once per covered θ-tile, so it drops the WKB blobs: narrow rows
+    * (~50 B) keep the replication harmless. */
+  private def narrowTileJoin(source: DataFrame, target: DataFrame,
+                             theta: Theta): DataFrame =
     pairJoinTail(tiled(source, "s_", theta), tiled(target, "t_", theta), theta)
 
   /** `side` exploded to one row per covered θ-tile, its columns
@@ -236,7 +248,8 @@ object SpatialJoin {
 
   /** Candidate pairs of two [[explodeTiles]] outputs: the equi-join on
     * `tile`, the MBR filter and the reference-point dedup; `sEnv` and
-    * `tEnv` name each side's envelope columns, and `tile` is dropped. */
+    * `tEnv` name each side's envelope columns, and `tile` is dropped.
+    * The output is `s`'s columns, then `t`'s, each in its order. */
   private[graft] def tileJoin(s: DataFrame, sEnv: String => Column,
                               t: DataFrame, tEnv: String => Column,
                               theta: Theta, tile: String): DataFrame = {
@@ -254,47 +267,28 @@ object SpatialJoin {
       .drop(tile)
   }
 
-  /** [[candidatePairsNarrow]] with a tile-key runtime filter — q20's
-    * bloom composed into the spatial exchange (round-8 verdict item):
-    * when the SOURCE is much smaller than the target but too large (or
-    * too blob-heavy) to broadcast, build a
-    * [[graft.functions.BloomFunctions]] membership sketch over the
-    * source's OCCUPIED θ-tile keys (one small-side aggregation job,
-    * O(bits) result shipped as a plan constant) and prune the target's
-    * exploded tile rows BEFORE their exchange: a tile no source row
-    * covers cannot produce a candidate pair, so (1 − source tile
-    * occupancy) of the big side's post-explode shuffle volume never
-    * moves. False positives (fpp 1 %) only re-admit rows the tile
-    * equi-join drops anyway — the pair set is EXACTLY
-    * [[candidatePairsNarrow]]'s (spec-asserted pair-for-pair, and sp17
-    * hash-gates the composed join; the exchange cut is asserted from
-    * the executed plan's SQL metrics like q20's). */
-  def candidatePairsNarrowPruned(source: DataFrame, target: DataFrame,
-                                 theta: Theta): DataFrame = {
-    import graft.functions.BloomFunctions
-    val s = tiled(source, "s_", theta)
-    // expectedItems sizes the bloom: source rows × the 3×3-ish tile
-    // cover a θ-scaled envelope typically spans, from the CHEAP
-    // un-exploded count (column-pruned scan / metadata) — counting the
-    // exploded tiling would run the explode a third time for a number
-    // whose only job is bit-sizing, and overestimating merely widens
-    // the filter. The tiled source is still computed twice (the bloom
-    // build aggregation and the pair join) — both are necessary scans.
-    val bits = BloomFunctions.buildLongFilter(s.select(col("tile")), "tile",
-      source.count() * 9, 0.01)
-    val t = tiled(target, "t_", theta)
-      .filter(BloomFunctions.mightContainLong(col("tile"), bits))
-    pairJoinTail(s, t, theta)
+  /** The one builder of the tile index, as a frame ([[TileProbe]]):
+    * `sourceEnv` and `targetEnv` are each side's minx, miny, maxx and
+    * maxy, and `fallback` of the node must return its columns in order. */
+  private[graft] def tileProbe(session: SparkSession, source: LogicalPlan,
+                               sourceEnv: Seq[Attribute], target: LogicalPlan,
+                               targetEnv: Seq[Attribute], theta: Theta, maxBytes: Long,
+                               fallback: TileProbe => DataFrame): DataFrame = {
+    TileProbeStrategy.register(session)
+    org.apache.spark.sql.GraftColumnBridge.dataFrame(session,
+      TileProbe(source, target, sourceEnv, targetEnv, theta, maxBytes, fallback))
   }
 
-  /** [[relate]] over the tile-bloom-pruned candidate path — the
-    * asymmetric big×big spatial join shape (see
-    * [[candidatePairsNarrowPruned]]). */
-  def relateBloomPruned(source: DataFrame, target: DataFrame,
-                        relation: String): DataFrame = {
-    val theta = computeTheta(source)
-    qualifying(withGeoms(candidatePairsNarrowPruned(source, target, theta),
-      source, target), relation)
+  /** [[tileProbe]] over the sides with their columns prefixed `s_` and
+    * `t_`, which name the node's columns in `fallback`. */
+  private def indexPairs(source: DataFrame, target: DataFrame, theta: Theta,
+                         maxBytes: Long, fallback: () => DataFrame): DataFrame = {
+    val s = prefixed(source, "s_").queryExecution.analyzed
+    val t = prefixed(target, "t_").queryExecution.analyzed
+    def env(side: LogicalPlan, p: String): Seq[Attribute] =
+      Seq("minx", "miny", "maxx", "maxy").map(n => side.output.find(_.name == p + n).get)
+    tileProbe(source.sparkSession, s, env(s, "s_"), t, env(t, "t_"), theta, maxBytes,
+      node => fallback().select(node.output.map(a => col(a.name)): _*))
   }
 
   /** Candidate pairs after the tile cover, MBR filter and
@@ -331,16 +325,9 @@ object SpatialJoin {
 
   /** [[candidatePairs]] with the index bound `maxBytes`. */
   private[graft] def candidatePairs(source: DataFrame, target: DataFrame,
-                                    theta: Theta, maxBytes: Long): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.dataFrame
-    TileProbeStrategy.register(source.sparkSession)
-    val s = prefixed(graft.spark.Spread(source), "s_").queryExecution.analyzed
-    val t = prefixed(target, "t_").queryExecution.analyzed
-    def env(side: LogicalPlan, p: String): Seq[Attribute] =
-      Seq("minx", "miny", "maxx", "maxy").map(n => side.output.find(_.name == p + n).get)
-    dataFrame(source.sparkSession, TileProbe(s, t, env(s, "s_"), env(t, "t_"), theta, maxBytes,
-      () => tileJoinPairs(source, target, theta)))
-  }
+                                    theta: Theta, maxBytes: Long): DataFrame =
+    indexPairs(graft.spark.Spread(source), target, theta, maxBytes,
+      () => tileJoinPairs(source, target, theta))
 
   /** The tile-join path of [[candidatePairs]], which [[TileProbeExec]]
     * runs when the target's index does not fit its bound: the tile
@@ -389,7 +376,7 @@ object SpatialJoin {
       withGeom(pairJoinTail(tiled(source, "s_", theta, geom = true),
         tiled(target, "t_", theta), theta), target, "t_")
     else {
-      val narrow = candidatePairsNarrow(source, target, theta)
+      val narrow = narrowTileJoin(source, target, theta)
       val placed =
         if (inPlace) narrow
         else narrow.repartition(
@@ -498,8 +485,8 @@ object SpatialJoin {
   }
 
   /** Count candidate pairs without verifying (reference J9). A count
-    * needs no geometry, so this goes through the narrow pair frame —
-    * no WKB join-backs in the plan. */
+    * needs no geometry, so this goes through the narrow pair frame: the
+    * tile index over the geometry-free sides, with no WKB in the plan. */
   def countVerifications(source: DataFrame, target: DataFrame,
                          granularity: String = "avg"): Long = {
     val theta = computeTheta(source, granularity)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession, classic}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -37,7 +37,7 @@ private[operators] final class TargetTiles(blobs: Array[Array[Byte]], ends: Arra
     table.probe(minx, miny, maxx, maxy)
 }
 
-private[operators] object TargetTiles {
+private[graft] object TargetTiles {
 
   /** The largest index [[collect]] builds, in the bytes [[footprint]]
     * counts: 256 MB, and at most half of `spark.driver.maxResultSize`
@@ -198,18 +198,21 @@ private[operators] object TargetTiles {
   }
 }
 
-/** The index path of `SpatialJoin.candidatePairs` as a plan node: each
-  * `left` (source) row paired with the `right` (target) rows its
-  * envelope `sourceEnv` meets under `SpatialJoin.tileJoin`'s MBR and
-  * reference-point tests, output as `left.output ++ right.output`.
-  * `fallback` builds the tile-join path over the same inputs, with
-  * columns of the same names; [[TileProbeExec]] builds and runs it only
-  * when the target's index does not fit in `maxBytes`. The env
-  * attributes are the node's expressions, so column pruning keeps them
-  * in the children. */
+/** The tile index as a plan node, the one candidate generator of
+  * `SpatialJoin` and the `st_predicate` rewrite: each `left` (source)
+  * row paired with the `right` (target) rows its envelope `sourceEnv`
+  * meets under `SpatialJoin.tileJoin`'s MBR and reference-point tests,
+  * output as `left.output ++ right.output`. `fallback` builds the tile
+  * join from the node as planned (column pruning may have narrowed its
+  * children since it was built), with the node's columns in order;
+  * [[TileProbeExec]] builds and runs it only when the target's index
+  * does not fit in `maxBytes`, and takes its columns by position. The
+  * env attributes are the node's expressions, so column pruning keeps
+  * them in the children. */
 private[graft] case class TileProbe(left: LogicalPlan, right: LogicalPlan,
                                     sourceEnv: Seq[Attribute], targetEnv: Seq[Attribute],
-                                    theta: Theta, maxBytes: Long, fallback: () => DataFrame)
+                                    theta: Theta, maxBytes: Long,
+                                    fallback: TileProbe => DataFrame)
     extends BinaryNode {
   override def output: Seq[Attribute] = left.output ++ right.output
   override protected def stringArgs: Iterator[Any] = Iterator(theta)
@@ -222,7 +225,7 @@ private[graft] case class TileProbe(left: LogicalPlan, right: LogicalPlan,
 private[graft] object TileProbeStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: TileProbe => TileProbeExec(planLater(p.left), planLater(p.right), p.sourceEnv,
-      p.targetEnv, p.theta, p.maxBytes, p.fallback) :: Nil
+      p.targetEnv, p.theta, p.maxBytes, () => p.fallback(p)) :: Nil
     case _ => Nil
   }
 
@@ -280,11 +283,7 @@ private[graft] case class TileProbeExec(left: SparkPlan, right: SparkPlan,
               s.getDouble(env(2)), s.getDouble(env(3))).map(t => project(joined(s, t)))
           }
         }
-      case None =>
-        val pairs = fallback()
-        val named = pairs.queryExecution.analyzed.output.map(a => a.name -> a).toMap
-        pairs.select(output.map(a => GraftColumnBridge.column(named(a.name))): _*)
-          .queryExecution.toRdd
+      case None => fallback().queryExecution.toRdd
     }
 
   override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): TileProbeExec =

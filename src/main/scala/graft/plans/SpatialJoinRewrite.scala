@@ -1,36 +1,37 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftColumnBridge.{column, dataFrame}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions.StPredicate
-import graft.operators.SpatialJoin
+import graft.operators.{SpatialJoin, TargetTiles, TileProbe}
 
 /** Catalyst rewrite: a logically-declared spatial theta join
   *
   *   source.join(target, st_predicate(s_geom, t_geom, rel) [&& others])
   *
   * would plan as a cartesian product (no equi-keys). This optimizer
-  * rule rewrites it into [[SpatialJoin]]'s filter-refine plan — the
-  * tile explode of both sides, the equi-join on the tile id and the
-  * MBR + reference-point filters ([[SpatialJoin.explodeTiles]],
-  * [[SpatialJoin.tileJoin]]), with the join condition kept as the
-  * verifying post-filter — whenever both join children expose the
-  * entity envelope columns `<p>minx`..`<p>maxy` next to their
-  * `<p>geom`. This is the declarative public surface of the
-  * reference's GIA.nt (SedonaExp's `WHERE ST_Predicate(...)` form,
-  * `experiments/SedonaExp.scala:92-102`) as a native plan rule.
+  * rule rewrites it into the join condition as a verifying filter over
+  * [[SpatialJoin]]'s tile index ([[SpatialJoin.tileProbe]]), whenever
+  * both join children expose the entity envelope columns
+  * `<p>minx`..`<p>maxy` next to their `<p>geom`. This is the
+  * declarative public surface of the reference's GIA.nt (SedonaExp's
+  * `WHERE ST_Predicate(...)` form, `experiments/SedonaExp.scala:92-102`)
+  * as a native plan rule.
   *
   * θ is [[SpatialJoin.computeTheta]] over the LEFT (source) child:
   * one Spark job each time the optimizer rewrites the join, never
   * memoized, and a failure of that job fails the query.
   *
   * SQL-join children are arbitrary rows with no unique-id contract,
-  * so whole rows ride the tile explode; there is no geometry
-  * join-back as in [[SpatialJoin.tileJoinPairs]].
+  * so the index holds whole right rows and nothing is joined back. A
+  * right child whose index does not fit its bound takes the tile join
+  * of both children's whole rows instead ([[SpatialJoin.explodeTiles]],
+  * [[SpatialJoin.tileJoin]]), which takes the join's hint. The rule's
+  * output is no [[Join]], so the rule never fires on it again.
   *
   * Register with:
   * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
@@ -38,15 +39,11 @@ import graft.operators.SpatialJoin
 case class SpatialJoinRewrite(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** The tile column; a child that already outputs it is a side of
-    * a rewritten join (the tile equi-join needs it from both), so the
-    * rule never re-fires on its own output. */
-  private val Tile = "__tile"
+  private val Env = Seq("minx", "miny", "maxx", "maxy")
 
-  private def envelope(plan: LogicalPlan, prefix: String): Option[Map[String, Attribute]] = {
-    val found = Seq("minx", "miny", "maxx", "maxy").flatMap { n =>
-      plan.output.find(_.name == prefix + n).map(n -> _)
-    }.toMap
+  /** `plan`'s envelope columns `<prefix>minx`..`<prefix>maxy`, in [[Env]] order. */
+  private def envelope(plan: LogicalPlan, prefix: String): Option[Seq[Attribute]] = {
+    val found = Env.flatMap(n => plan.output.find(_.name == prefix + n))
     if (found.size == 4) Some(found) else None
   }
 
@@ -59,29 +56,36 @@ case class SpatialJoinRewrite(session: SparkSession)
       case _ => None
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(left, right, Inner, Some(cond), hint)
-        if !(left.output ++ right.output).exists(_.name == Tile) =>
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    apply(plan, TargetTiles.maxBytes(session.sparkContext))
+
+  /** [[apply]] with the index bound `maxBytes`. */
+  private[graft] def apply(plan: LogicalPlan, maxBytes: Long): LogicalPlan = plan.transform {
+    case j @ Join(left, right, Inner, Some(cond), hint) =>
       val sides = for {
         (lg, rg) <- spatial(cond, left, right)
         l <- envelope(left, lg.name.stripSuffix("geom"))
         r <- envelope(right, rg.name.stripSuffix("geom"))
       } yield (lg, l, r)
       sides.fold(j: LogicalPlan) { case (lg, l, r) =>
-        val (s, t) = (dataFrame(session, left), dataFrame(session, right))
-        val theta = SpatialJoin.computeTheta(s.select(
-          l.toSeq.map { case (n, a) => column(a).as(n) } :+ column(lg).as("geom"): _*))
-        val sEnv = (n: String) => column(l(n))
-        val tEnv = (n: String) => column(r(n))
-        val sTiles = SpatialJoin.explodeTiles(s, sEnv, theta, Tile)
-        val tile = sTiles.queryExecution.analyzed.output.last
-        val pairs = SpatialJoin.tileJoin(sTiles, sEnv,
-          SpatialJoin.explodeTiles(t, tEnv, theta, Tile), tEnv, theta, Tile)
-        // the tile equi-join takes the spatial join's hint
-        Project(j.output, Filter(cond, pairs.queryExecution.analyzed.transform {
-          case tj: Join if tj.left.outputSet.contains(tile) => tj.copy(hint = hint)
-        }))
+        val theta = SpatialJoin.computeTheta(dataFrame(session, left).select(
+          Env.zip(l).map { case (n, a) => column(a).as(n) } :+ column(lg).as("geom"): _*))
+        Filter(cond, SpatialJoin.tileProbe(session, left, l, right, r, theta, maxBytes,
+          tileJoin(hint)).queryExecution.analyzed)
       }
+  }
+
+  /** The fallback of a rewritten join: the tile join of the index
+    * node's children, each with its side of the join's `hint`, on a
+    * tile column named apart from every child column. */
+  private def tileJoin(hint: JoinHint)(p: TileProbe): DataFrame = {
+    val Seq(sEnv, tEnv) = Seq(p.sourceEnv, p.targetEnv).map(e => Env.zip(e.map(column)).toMap)
+    val taken = p.output.map(_.name.toLowerCase).toSet
+    val tile = Iterator.iterate("__tile")("_" + _).find(n => !taken(n)).get
+    def tiles(side: LogicalPlan, h: Option[HintInfo], env: String => Column) = SpatialJoin
+      .explodeTiles(dataFrame(session, h.fold(side)(ResolvedHint(side, _))), env, p.theta, tile)
+    SpatialJoin.tileJoin(tiles(p.left, hint.leftHint, sEnv), sEnv,
+      tiles(p.right, hint.rightHint, tEnv), tEnv, p.theta, tile)
   }
 }
 

@@ -5,17 +5,19 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.geom.util.AffineTransformation
 import org.locationtech.jts.io.WKTReader
-import graft.plans.GraftExtensions
-import graft.operators.SpatialJoin
+import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import graft.plans.{GraftExtensions, SpatialJoinRewrite}
+import graft.operators.{SpatialJoin, TileProbe, TileProbeExec}
 import graft.functions.GeomFunctions._
-import graft.functions.TileCover
 
 /** The declarative surface: a plain inner join whose condition is a
   * spatial predicate gets rewritten by the injected optimizer rule
-  * into the tile filter-refine plan (no cartesian product), with
-  * results identical to brute force.
+  * into the tile index with the predicate as its filter (no cartesian
+  * product), with results identical to brute force.
   */
-class SpatialJoinRewriteSpec extends AnyFunSuite {
+class SpatialJoinRewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = {
     // extensions apply only at session construction: replace any
     // session other suites may have created
@@ -73,6 +75,14 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
     val expected = bruteForce(srcRows, tgtRows)
     assert(expected.nonEmpty)
     assert(pairs(joined) === expected)
+    // the join with every column: under the bound the index serves it
+    // and nothing explodes
+    val whole = src.join(tgt, st_predicate(col("s_geom"), col("t_geom"), "intersects"))
+    assert(whole.collect().map(r => (r.getAs[String]("s_id"), r.getAs[String]("t_id"))).toSet
+      === expected)
+    val executed = collect(whole.queryExecution.executedPlan) { case p => p }
+    assert(executed.exists(_.isInstanceOf[TileProbeExec]), whole.queryExecution.executedPlan)
+    assert(!executed.exists(_.isInstanceOf[GenerateExec]), whole.queryExecution.executedPlan)
     assert(pairs(SpatialJoin.relate(unprefixed(src, "s_"), unprefixed(tgt, "t_"),
       "intersects")) === expected)
   }
@@ -141,6 +151,11 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
       bruteForce(srcRows, tgtRows).filter { case (a, b) => a != b })
   }
 
+  /** The rewritten join's tile-index node. */
+  private def probeOf(joined: DataFrame): TileProbe =
+    joined.queryExecution.optimizedPlan.collectFirst { case p: TileProbe => p }
+      .getOrElse(fail(s"no TileProbe in\n${joined.queryExecution.optimizedPlan}"))
+
   test("a join hint on the st_predicate join carries to the tile join") {
     spark.sparkContext.setLogLevel("WARN")
     val src = entitiesDf(TestGeoms.corpus(seed = 75, n = 40, world = 40), "s_")
@@ -148,9 +163,13 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      def plan(t: DataFrame) = src.join(t,
-        st_predicate(col("s_geom"), col("t_geom"), "intersects"))
-        .queryExecution.sparkPlan.toString
+      // the tile join of the index's fallback, the plan a target past
+      // the index bound runs
+      def plan(t: DataFrame) = {
+        val probe = probeOf(src.join(t,
+          st_predicate(col("s_geom"), col("t_geom"), "intersects")))
+        probe.fallback(probe).queryExecution.sparkPlan.toString
+      }
       assert(!plan(tgt).contains("BroadcastHashJoin"))
       assert(plan(broadcast(tgt)).contains("BroadcastHashJoin"),
         plan(broadcast(tgt)))
@@ -164,14 +183,43 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
     val joined = src.join(tgt,
       st_predicate(col("s_geom"), col("t_geom"), "intersects"))
     val theta = SpatialJoin.computeTheta(unprefixed(src, "s_"))
-    val covers = joined.queryExecution.optimizedPlan.flatMap(
-      _.expressions.flatMap(_.collect { case t: TileCover => t }))
-    assert(covers.size >= 2, s"expected a tile cover per side, got $covers")
-    assert(covers.map(_.children.drop(4).map(_.eval())).toSet ===
-      Set(Seq(theta.x, theta.y)), s"tile covers $covers do not use $theta")
+    assert(probeOf(joined).theta === theta)
     assert(theta.x != 1.0 && theta.y != 1.0)
     assert(pairs(joined.select("s_id", "t_id")) === pairs(SpatialJoin.relate(
       unprefixed(src, "s_"), unprefixed(tgt, "t_"), "intersects")))
+  }
+
+  test("the tile-join fallback of a rewritten join takes its columns by " +
+       "position, so same-named columns of the two sides stay apart, and " +
+       "a child's own __tile column survives it") {
+    spark.sparkContext.setLogLevel("WARN")
+    val srcRows = TestGeoms.corpus(seed = 95, n = 60, world = 40)
+    val tgtRows = TestGeoms.corpus(seed = 96, n = 50, world = 40)
+    // a non-key `tag` on both sides, of different types, and a target
+    // column named like the fallback's tile column
+    val src = entitiesDf(srcRows, "s_").withColumn("tag", concat(lit("s:"), col("s_id")))
+    val tgt = entitiesDf(tgtRows, "t_").withColumn("tag", length(col("t_id")))
+      .withColumn("__tile", lit(7L))
+    val joined = src.join(tgt, st_predicate(col("s_geom"), col("t_geom"), "intersects"))
+    val expected = bruteForce(srcRows, tgtRows).map { case (a, b) => (a, "s:" + a, b, b.length) }
+    val names = src.columns.map("l_" + _) ++ tgt.columns.map("r_" + _)
+    for (maxBytes <- Seq(0L, 64L << 20)) {
+      val rewritten = GraftColumnBridge.dataFrame(spark,
+        SpatialJoinRewrite(spark)(joined.queryExecution.analyzed, maxBytes)).toDF(names: _*)
+      // every column, and a selection the optimizer prunes the sides to
+      val all = rewritten.collect().map(r => (r.getAs[String]("l_s_id"), r.getAs[String]("l_tag"),
+        r.getAs[String]("r_t_id"), r.getAs[Int]("r_tag"))).toSet
+      assert(all === expected, s"bound $maxBytes")
+      val pruned = rewritten.select("l_tag", "r_tag", "r_t_id").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+      assert(pruned === expected.map { case (_, a, b, c) => (a, c, b) }, s"bound $maxBytes")
+      assert(rewritten.select("r___tile").distinct().collect().map(_.getLong(0)).toSeq ===
+        Seq(7L), s"bound $maxBytes")
+      val indexed = collect(rewritten.queryExecution.executedPlan) {
+        case p: TileProbeExec => p.metrics("indexRows").value
+      }
+      assert(indexed === Seq(if (maxBytes == 0) 0L else tgtRows.size.toLong), s"bound $maxBytes")
+    }
   }
 
   test("rewritten join equals relate and brute-force JTS far from unit " +

@@ -346,6 +346,17 @@ class SpatialJoinSpec extends AnyFunSuite {
             s"extra=${(got.toMap.keySet -- expected.keySet).take(5)}")
           assert(got.toMap === expected, s"$at: DE-9IM differs")
         }
+        // the narrow pairs, by the index and by its fallback
+        for ((path, pairs) <- Seq(
+               "narrow index" -> SpatialJoin.candidatePairsNarrow(s, t, theta),
+               "narrow fallback" -> SpatialJoin.candidatePairsNarrow(s, t, theta, maxBytes = 0))) {
+          val got = pairs.select("s_id", "t_id").collect().map(r => (r.getString(0), r.getString(1)))
+          val at = s"$corpus, source $sLayout, target $tLayout, $path"
+          assert(!pairs.columns.contains("s_geom") && !pairs.columns.contains("t_geom"), at)
+          assert(got.length === got.toSet.size, s"$at: duplicate pairs")
+          assert(got.toSet === expected.keySet, s"$at: " +
+            s"missing=${(expected.keySet -- got).take(5)} extra=${(got.toSet -- expected.keySet).take(5)}")
+        }
       }
     }
   }
@@ -507,53 +518,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("tile-bloom-pruned candidates equal the plain path pair-for-pair, " +
-       "and the bloom measurably cuts the target's exchange input") {
-    val s = entitiesDf(source)
-    val t = entitiesDf(target)
-    val theta = SpatialJoin.computeTheta(s)
-    val plain = SpatialJoin.candidatePairsNarrow(s, t, theta)
-      .select("s_id", "t_id").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val pruned = SpatialJoin.candidatePairsNarrowPruned(s, t, theta)
-    // collect() so metrics land on THIS dataset's queryExecution
-    val prunedPairs = pruned.select("s_id", "t_id").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(prunedPairs === plain,
-      "bloom pruning must not change the candidate pair set")
-    // the relate form over the pruned path agrees with plain relate
-    val gotRelate = SpatialJoin
-      .relateBloomPruned(s, t, "intersects")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val plainRelate = SpatialJoin.relate(s, t, "intersects")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(gotRelate === plainRelate)
-    // SQL-metric assertion (the q20 pattern): the FilterExec holding
-    // the bloom predicate must pass strictly fewer rows than the
-    // target side's exploded tile count — i.e. the exchange input was
-    // actually cut, not just wrapped
-    import org.apache.spark.sql.execution.FilterExec
-    val metricsDf = SpatialJoin.candidatePairsNarrowPruned(s, t, theta)
-    metricsDf.collect()
-    val bloomFilters = walk(metricsDf.queryExecution.executedPlan).collect {
-      case f: FilterExec if f.condition.toString.contains("bloom_might_contain") => f
-    }
-    assert(bloomFilters.nonEmpty, "no bloom FilterExec in the executed plan")
-    // InferFiltersFromConstraints may propagate the tile predicate to
-    // the SOURCE side through the equi-join key (harmless — prunes
-    // nothing there); the assertion targets the TARGET-side filter
-    val targetSide = bloomFilters.filter(_.output.exists(_.name == "t_id"))
-    assert(targetSide.nonEmpty, "no bloom FilterExec on the target side")
-    val survived = targetSide.map(_.metrics("numOutputRows").value).max
-    val tExplodedTiles = t.select(
-      explode(graft.functions.GeomFunctions.tile_cover(
-        col("minx"), col("miny"), col("maxx"), col("maxy"),
-        theta.x, theta.y))).count()
-    assert(survived < tExplodedTiles,
-      s"bloom passed $survived of $tExplodedTiles exploded target tiles " +
-        "— no exchange cut")
-  }
-
   test("negative-coordinate world: declarative, typed and brute force " +
        "all agree") {
     // centered at the origin: tile indices are negative
@@ -665,11 +629,16 @@ class SpatialJoinSpec extends AnyFunSuite {
       === expected)
     // the count path must stay narrow: no WKB blobs in the plan
     val theta = SpatialJoin.computeTheta(entitiesDf(source))
-    val plan = SpatialJoin
+    val narrow = SpatialJoin
       .candidatePairsNarrow(entitiesDf(source), entitiesDf(target), theta)
-      .queryExecution.optimizedPlan
+    val plan = narrow.queryExecution.optimizedPlan
     assert(!plan.output.map(_.name).contains("s_geom"))
     assert(!plan.toString.contains("s_geom"))
+    // and it probes the tile index: nothing explodes
+    assert(narrow.collect().length === expected)
+    val executed = walk(narrow.queryExecution.executedPlan)
+    assert(executed.exists(_.isInstanceOf[graft.operators.TileProbeExec]))
+    assert(!executed.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]))
   }
 
   test("sp20 tile density equals a driver-side floor-range recompute " +
