@@ -45,7 +45,7 @@ import graft.functions.StIm
   *      JTS relate otherwise) or `st_predicate` (single relation). Every
   *      verifier relates whole geometries; none decomposes them.
   *
-  * Scale: each side's geometry moves at most once. On the index path
+  * Scale: on the index path each side's geometry moves at most once:
   * the target's rows move once, collected when the query runs and
   * broadcast as one blob per target partition, and the source stays
   * where it is read (spread once if it reads as fewer than
@@ -53,12 +53,13 @@ import graft.functions.StIm
   * joined back. The index is bounded by the bytes its collect
   * measures (256 MB, an unmeasured bound, see
   * [[TargetTiles.maxBytes]]); past it, or past an even share of it in
-  * any one target partition, the same execution runs the tile join,
-  * whose exploded rows move once (a shuffle on the tile id, or a
-  * broadcast of the side Catalyst sizes as small); when [[Theta.ride]]
-  * holds and verification stays in place, the source geometry rides in
-  * that move and only the target geometry is joined back per pair (see
-  * [[tileJoinPairs]]).
+  * any one target partition, the same execution runs the tile join
+  * of both sides' narrow rows, whose exploded rows move once (a shuffle
+  * on the tile id, or a broadcast of the side Catalyst sizes as small)
+  * and carry no geometry, then joins each side's geometry back onto the
+  * surviving pairs on its id, so no geometry is replicated per tile. It
+  * takes the same spread source as the index, so a narrow source's
+  * geometry moves twice there if its join-back shuffles.
   * Verification cost is proportional to surviving candidates, not
   * input size. For a 100 TB run, tune θ (bigger tiles → fewer
   * replicas, more candidates per tile) and rely on AQE skew-join
@@ -66,24 +67,8 @@ import graft.functions.StIm
   */
 object SpatialJoin {
 
-  /** The θ tile size per axis. `ride` says the source geometry may
-    * ride the tile explode of [[tileJoinPairs]] (the index path
-    * explodes nothing and ignores it): [[computeTheta]] bounds the
-    * source bytes after the explode at no more than [[RideBound]] ×
-    * the bytes before it. The default keeps the join-back, so a
-    * `Theta(x, y)` built anywhere but [[computeTheta]] never rides. */
-  case class Theta(x: Double, y: Double, ride: Boolean = false)
-
-  /** How many times its own bytes the source geometry may occupy
-    * after the tile explode of [[tileJoinPairs]] and still ride it.
-    * Under the `avg` θ an entity of the mean extent bounds at
-    * (1 + 2)² = 9 times its bytes, so ordinary corpora ride; a source
-    * whose bytes sit in entities tens of θ across does not, because
-    * each of its replicas would carry the whole blob through the tile
-    * join, where one join-back per surviving pair carries it once. A
-    * bound, not a setting: it only picks which of two exact plans
-    * moves fewer bytes. */
-  private val RideBound = 16.0
+  /** The θ tile size per axis. */
+  case class Theta(x: Double, y: Double)
 
   /** Standard geometry-relation schema: id, geom (WKB), minx..maxy.
     * The parse is wrapped in an optimizer barrier so it is evaluated
@@ -121,10 +106,8 @@ object SpatialJoin {
     * partition returns its [[Moments]], the driver merges them in
     * partition order (not completion order, so θ is the same to the
     * last bit on every call: θ-tile counts feed the progressive
-    * weights) and bakes θ into the plan as literals. The same pass
-    * sets [[Theta.ride]]: an entity of extent e covers fewer than
-    * e/θ + 2 tiles per axis, so Σb·(ex/θx + 2)(ey/θy + 2) over the
-    * geometry bytes b bounds the source bytes after the explode.
+    * weights) and bakes θ into the plan as literals. It reads the
+    * envelope columns only: `source` needs no geometry column.
     *
     * `granularity` selects the reference's tile-granularity statistic
     * (`model/TileGranularities.scala:22-45`,
@@ -150,36 +133,29 @@ object SpatialJoin {
       case other => throw new IllegalArgumentException(
         s"unknown thetaGranularity '$other' (avg | avg2 | min | max | none)")
     }
-    val m = source.select(col("minx"), col("miny"), col("maxx"), col("maxy"),
-        octet_length(col("geom"))).queryExecution.toRdd
+    val m = source.select(col("minx"), col("miny"), col("maxx"), col("maxy"))
+      .queryExecution.toRdd
       .mapPartitions(rows => Iterator(rows.foldLeft(new Moments)((acc, r) =>
-        acc.add(r.getDouble(2) - r.getDouble(0), r.getDouble(3) - r.getDouble(1),
-          if (r.isNullAt(4)) 0 else r.getInt(4)))))
+        acc.add(r.getDouble(2) - r.getDouble(0), r.getDouble(3) - r.getDouble(1)))))
       .collect().foldLeft(new Moments)(_ merge _) // in partition order
     // only positive extents count, for every statistic: over a
     // point-only axis the max extent is 0.0, and an unguarded 0.0
     // would clamp to the 1e-9 floor — exploding every MBR into
     // ~extent/1e-9 tiles instead of falling back to θ = 1.0
     def axis(a: Int): Double = if (m.n(a) == 0) 1.0 else math.max(stat(m, a), 1e-9)
-    val (tx, ty) = (axis(0), axis(1))
-    val exploded = m.bxy / (tx * ty) + 2 * m.bx / tx + 2 * m.by / ty + 4 * m.b
-    Theta(tx, ty, ride = exploded <= RideBound * m.b)
+    Theta(axis(0), axis(1))
   }
 
   /** One partition's θ statistics, merged on the driver: per axis the
-    * count, sum, min and max of the positive extents; and over the
-    * geometry bytes b, Σb, Σb·ex, Σb·ey and Σb·ex·ey, the terms of the
-    * ride bound. */
+    * count, sum, min and max of the positive extents. */
   private final class Moments extends Serializable {
     val n = new Array[Long](2)
     val sum = new Array[Double](2)
     val lo = Array.fill(2)(Double.PositiveInfinity)
     val hi = Array.fill(2)(Double.NegativeInfinity)
-    var b, bx, by, bxy = 0.0
 
-    def add(ex: Double, ey: Double, bytes: Int): Moments = {
+    def add(ex: Double, ey: Double): Moments = {
       extent(0, ex); extent(1, ey)
-      b += bytes; bx += bytes * ex; by += bytes * ey; bxy += bytes * ex * ey
       this
     }
 
@@ -192,7 +168,6 @@ object SpatialJoin {
         n(a) += o.n(a); sum(a) += o.sum(a)
         lo(a) = math.min(lo(a), o.lo(a)); hi(a) = math.max(hi(a), o.hi(a))
       }
-      b += o.b; bx += o.bx; by += o.by; bxy += o.bxy
       this
     }
   }
@@ -226,17 +201,13 @@ object SpatialJoin {
     * (~50 B) keep the replication harmless. */
   private def narrowTileJoin(source: DataFrame, target: DataFrame,
                              theta: Theta): DataFrame =
-    pairJoinTail(tiled(source, "s_", theta), tiled(target, "t_", theta), theta)
+    tileJoin(tiled(source, "s_", theta), n => col("s_" + n),
+      tiled(target, "t_", theta), n => col("t_" + n), theta, "tile")
 
-  /** `side` exploded to one row per covered θ-tile, its columns
-    * prefixed with `p`; the geometry blob is dropped unless `geom`. */
-  private def tiled(side: DataFrame, p: String, theta: Theta,
-                    geom: Boolean = false): DataFrame =
-    explodeTiles(prefixed(if (geom) side else side.drop("geom"), p),
-      n => col(p + n), theta, "tile")
-
-  private def pairJoinTail(s: DataFrame, t: DataFrame, theta: Theta): DataFrame =
-    tileJoin(s, n => col("s_" + n), t, n => col("t_" + n), theta, "tile")
+  /** `side` without its geometry blob, exploded to one row per covered
+    * θ-tile, its columns prefixed with `p`. */
+  private def tiled(side: DataFrame, p: String, theta: Theta): DataFrame =
+    explodeTiles(prefixed(side.drop("geom"), p), n => col(p + n), theta, "tile")
 
   /** Tile cover: `side` with one row per θ-tile its envelope covers,
     * the tile id in column `tile`. `env` maps `minx`, `miny`, `maxx`
@@ -311,13 +282,19 @@ object SpatialJoin {
     * nothing is joined back. A source that reads as fewer than
     * defaultParallelism partitions is spread first
     * ([[graft.spark.Spread]]), so verification runs on every core. A
-    * target whose index does not fit runs [[tileJoinPairs]] instead,
+    * target whose index does not fit runs the tile join of both sides'
+    * narrow rows instead ([[narrowTileJoin]]), over the same spread
+    * source, and joins each side's geometry back onto its pairs once,
     * decided per execution from the measured bytes, never from
-    * Catalyst's estimate (a WKB column is costed at 100 B a row).
-    * Measured against the tile join (`linkbench/ab.py --pairs 10`,
-    * seeds 11000–11009, 4 vCPUs): warm_s gia_boxes 0.594 → 0.371 s and
-    * gia_giant 0.381 → 0.264 s, each 10/10; traced, 4 → 3 Spark jobs
-    * per repetition. */
+    * Catalyst's estimate (a WKB column is costed at 100 B a row);
+    * verification runs where the join-backs leave the pairs.
+    *
+    * The index path, measured against the tile join it replaced
+    * (`linkbench/ab.py --pairs 10`, seeds 11000–11009, 4 vCPUs): warm_s
+    * gia_boxes 0.594 → 0.371 s and gia_giant 0.381 → 0.264 s, each
+    * 10/10; traced, 4 → 3 Spark jobs per repetition. The fallback is
+    * unmeasured at scale: no benchmark workload's target outgrows the
+    * index. */
   def candidatePairs(source: DataFrame, target: DataFrame,
                      theta: Theta): DataFrame =
     candidatePairs(source, target, theta,
@@ -325,74 +302,18 @@ object SpatialJoin {
 
   /** [[candidatePairs]] with the index bound `maxBytes`. */
   private[graft] def candidatePairs(source: DataFrame, target: DataFrame,
-                                    theta: Theta, maxBytes: Long): DataFrame =
-    indexPairs(graft.spark.Spread(source), target, theta, maxBytes,
-      () => tileJoinPairs(source, target, theta))
-
-  /** The tile-join path of [[candidatePairs]], which [[TileProbeExec]]
-    * runs when the target's index does not fit its bound: the tile
-    * equi-join of both exploded sides, then the geometry join-backs.
-    * Placement, ride and the measurements below predate the index
-    * path; no workload reaches this path today.
-    *
-    * Verification placement follows one observable rule: when an input
-    * reads as fewer than defaultParallelism partitions
-    * ([[graft.spark.Spread.isSpread]], the test Spread applies to
-    * scans), the NARROW pair frame is hash-spread on s_id over an
-    * EXPLICIT defaultParallelism partition count before the blob
-    * joins; otherwise verification stays in place. Explicit because a
-    * count-less repartition is REPARTITION_BY_COL, which AQE coalesces
-    * by BYTES — ~50 B/pair kept the whole exchange under one 64 KiB
-    * floor partition and ran verification serially. A user-specified
-    * count is exempt from AQE coalescing, rows are narrow (billions of
-    * pairs over total-cores partitions stay ~100 MB-sized), and a
-    * sort-merge blob join REUSES the s_id hash partitioning.
-    *
-    * Measured with the spread forced on every call (4 cores, sf0.1
-    * gate corpora read as 1 partition, the linkbench inputs as 4),
-    * before the index path existed: sp10 5.7 → 2.1 s, sp8 1.7 → 1.1 s,
-    * sp11 2.3 → 1.3 s; the cheap single-partition gates (sp1–sp7,
-    * sp12, sp18, sp19) within noise; linkbench gia_giant warm_s
-    * 1.34 → 1.85 s (verification already ran on every core, the extra
-    * exchange only cost) and gia_boxes within noise. The partition
-    * count separates every case that gained from every case that lost.
-    *
-    * Where verification stays in place and [[Theta.ride]] holds (the
-    * source bytes after the explode bound at Σb·(ex/θx + 2)(ey/θy + 2)
-    * ≤ 16·Σb, see [[computeTheta]]), the source geometry rides the
-    * tile join as `s_geom` and only `t_geom` is joined back: the s_id
-    * join-back would shuffle the whole source geometry column a second
-    * time (gia_boxes: 159,666 rows, 7.1 MB), only for AQE to broadcast
-    * the pairs instead. Measured with `linkbench/ab.py --pairs 10`
-    * (seeds 1000–1009, 4 vCPUs, together with θ's single job, before
-    * the index path took those workloads): warm_s gia_boxes
-    * 0.95 → 0.66 s and gia_giant 0.47 → 0.39 s, each 10/10; traced
-    * gia_boxes shuffle writes 7.8 → 0 MB. A spread placement keeps
-    * both join-backs: its exchange must stay narrow. */
-  private[graft] def tileJoinPairs(source: DataFrame, target: DataFrame,
-                                   theta: Theta): DataFrame = {
-    val inPlace = Seq(source, target).forall(graft.spark.Spread.isSpread)
-    if (inPlace && theta.ride)
-      withGeom(pairJoinTail(tiled(source, "s_", theta, geom = true),
-        tiled(target, "t_", theta), theta), target, "t_")
-    else {
-      val narrow = narrowTileJoin(source, target, theta)
-      val placed =
-        if (inPlace) narrow
-        else narrow.repartition(
-          source.sparkSession.sparkContext.defaultParallelism, col("s_id"))
-      withGeoms(placed, source, target)
-    }
+                                    theta: Theta, maxBytes: Long): DataFrame = {
+    val s = graft.spark.Spread(source)
+    indexPairs(s, target, theta, maxBytes,
+      () => withGeoms(narrowTileJoin(s, target, theta), s, target))
   }
 
-  /** Join the WKB blobs back onto narrow (s_id, t_id, ...) pairs. */
+  /** Join each side's WKB blob back onto narrow (s_id, t_id, ...) pairs
+    * on its prefixed id. */
   private def withGeoms(pairs: DataFrame, source: DataFrame,
                         target: DataFrame): DataFrame =
-    withGeom(withGeom(pairs, source, "s_"), target, "t_")
-
-  /** Join one side's WKB blob back onto the pairs on its `p`-prefixed id. */
-  private def withGeom(pairs: DataFrame, side: DataFrame, p: String): DataFrame =
-    pairs.join(side.select(col("id").as(p + "id"), col("geom").as(p + "geom")), p + "id")
+    Seq(source -> "s_", target -> "t_").foldLeft(pairs) { case (d, (side, p)) =>
+      d.join(side.select(col("id").as(p + "id"), col("geom").as(p + "geom")), p + "id") }
 
   /** (s_id, t_id) of the pairs whose geometries satisfy `relation`. */
   private def qualifying(pairs: DataFrame, relation: String): DataFrame =

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.StPredicate
+import graft.functions.{StEnvelope, StPredicate}
+import graft.model.Relation
 import graft.operators.{SpatialJoin, TargetTiles, TileProbe}
 
 /** Catalyst rewrite: a logically-declared spatial theta join
@@ -15,12 +16,22 @@ import graft.operators.{SpatialJoin, TargetTiles, TileProbe}
   *
   * would plan as a cartesian product (no equi-keys). This optimizer
   * rule rewrites it into the join condition as a verifying filter over
-  * [[SpatialJoin]]'s tile index ([[SpatialJoin.tileProbe]]), whenever
-  * both join children expose the entity envelope columns
-  * `<p>minx`..`<p>maxy` next to their `<p>geom`. This is the
-  * declarative public surface of the reference's GIA.nt (SedonaExp's
-  * `WHERE ST_Predicate(...)` form, `experiments/SedonaExp.scala:92-102`)
-  * as a native plan rule.
+  * [[SpatialJoin]]'s tile index ([[SpatialJoin.tileProbe]]). Each
+  * side's envelope is its entity envelope columns `<p>minx`..`<p>maxy`
+  * next to its `<p>geom`; a child without them gets them as
+  * `st_envelope(<p>geom)`'s fields in a [[Project]] over it, and the
+  * rewritten join is projected back to the join's columns. The rule
+  * cannot tell a child whose envelope columns column pruning dropped
+  * (a join projected to its ids loses them before this rule runs) from
+  * one that never had any, so it rewrites every such join whose
+  * geometries are plain columns, and pays a WKB parse per row on each
+  * side that lacks them. This is the declarative public surface of the
+  * reference's GIA.nt (SedonaExp's `WHERE ST_Predicate(...)` form,
+  * `experiments/SedonaExp.scala:92-102`) as a native plan rule.
+  *
+  * The index emits only pairs whose MBRs intersect, so it would lose
+  * every pair of a `disjoint` join whose MBRs lie apart: such a join is
+  * left to Spark's nested loop.
   *
   * θ is [[SpatialJoin.computeTheta]] over the LEFT (source) child:
   * one Spark job each time the optimizer rewrites the join, never
@@ -41,18 +52,29 @@ case class SpatialJoinRewrite(session: SparkSession)
 
   private val Env = Seq("minx", "miny", "maxx", "maxy")
 
-  /** `plan`'s envelope columns `<prefix>minx`..`<prefix>maxy`, in [[Env]] order. */
-  private def envelope(plan: LogicalPlan, prefix: String): Option[Seq[Attribute]] = {
-    val found = Env.flatMap(n => plan.output.find(_.name == prefix + n))
-    if (found.size == 4) Some(found) else None
+  /** `side` and the envelope columns of its geometry `geom`, in [[Env]]
+    * order: its own `<p>minx`..`<p>maxy` next to `<p>geom`, or else
+    * `st_envelope(geom)`'s fields, computed once per row in a [[Project]]
+    * over `side`. */
+  private def envelope(side: LogicalPlan, geom: Attribute): (LogicalPlan, Seq[Attribute]) = {
+    val p = geom.name.stripSuffix("geom")
+    val found = Env.flatMap(n => side.output.find(_.name == p + n))
+    if (found.size == 4) (side, found)
+    else {
+      val env = Alias(StEnvelope(geom), p + "env")()
+      val fields = Env.indices.map(i => Alias(GetStructField(env.toAttribute, i), p + Env(i))())
+      (Project(side.output ++ fields, Project(side.output :+ env, side)), fields.map(_.toAttribute))
+    }
   }
 
-  /** The one st_predicate conjunct relating a left geometry to a right one. */
+  /** The one st_predicate conjunct relating a left geometry to a right
+    * one by a relation that only MBR-intersecting pairs satisfy. */
   private def spatial(cond: Expression, left: LogicalPlan,
                       right: LogicalPlan): Option[(Attribute, Attribute)] =
     splitConjunctivePredicates(cond).collect { case p: StPredicate => p } match {
-      case Seq(StPredicate(l: Attribute, r: Attribute, _))
-          if left.outputSet.contains(l) && right.outputSet.contains(r) => Some((l, r))
+      case Seq(StPredicate(l: Attribute, r: Attribute, rel))
+          if Relation.of(rel) != Relation.Disjoint &&
+            left.outputSet.contains(l) && right.outputSet.contains(r) => Some((l, r))
       case _ => None
     }
 
@@ -62,16 +84,14 @@ case class SpatialJoinRewrite(session: SparkSession)
   /** [[apply]] with the index bound `maxBytes`. */
   private[graft] def apply(plan: LogicalPlan, maxBytes: Long): LogicalPlan = plan.transform {
     case j @ Join(left, right, Inner, Some(cond), hint) =>
-      val sides = for {
-        (lg, rg) <- spatial(cond, left, right)
-        l <- envelope(left, lg.name.stripSuffix("geom"))
-        r <- envelope(right, rg.name.stripSuffix("geom"))
-      } yield (lg, l, r)
-      sides.fold(j: LogicalPlan) { case (lg, l, r) =>
-        val theta = SpatialJoin.computeTheta(dataFrame(session, left).select(
-          Env.zip(l).map { case (n, a) => column(a).as(n) } :+ column(lg).as("geom"): _*))
-        Filter(cond, SpatialJoin.tileProbe(session, left, l, right, r, theta, maxBytes,
-          tileJoin(hint)).queryExecution.analyzed)
+      spatial(cond, left, right).fold(j: LogicalPlan) { case (lg, rg) =>
+        val (l, lEnv) = envelope(left, lg)
+        val (r, rEnv) = envelope(right, rg)
+        val theta = SpatialJoin.computeTheta(dataFrame(session, l).select(
+          Env.zip(lEnv).map { case (n, a) => column(a).as(n) }: _*))
+        val rewritten = Filter(cond, SpatialJoin.tileProbe(session, l, lEnv, r, rEnv, theta,
+          maxBytes, tileJoin(hint)).queryExecution.analyzed)
+        if ((l eq left) && (r eq right)) rewritten else Project(j.output, rewritten)
       }
   }
 

@@ -16,10 +16,8 @@ import org.apache.spark.sql.execution.exchange.Exchange
   *
   * Applied ONLY where the downstream per-row cost dominates that move
   * (measured, fresh-JVM A/B at sf0.1): the brute-force cosine arms
-  * (dd7 2.43 s → 0.71 s), the source of the spatial tile-index probe
-  * (`SpatialJoin.candidatePairs`) and, through [[isSpread]], the
-  * narrow pairs of its tile-join path. A
-  * blanket spread in Tables.table was measured and REVERTED: agg-first
+  * (dd7 2.43 s → 0.71 s) and the source of the spatial tile-index
+  * probe (`SpatialJoin.candidatePairs`). A blanket spread in Tables.table was measured and REVERTED: agg-first
   * scans get slower (q1 0.46 s → 1.02 s — the exchange costs more than
   * the serial partial agg it parallelizes), and cheap per-row maps
   * break even at best (ta17 0.58 s → 0.76 s).
@@ -42,7 +40,7 @@ object Spread {
     * plans have their count read; building their RDD runs no job.
     * `toRdd` rather than `.rdd`, which would plan a row-deserializer
     * conversion on every call. */
-  def isSpread(df: DataFrame): Boolean =
+  private def isSpread(df: DataFrame): Boolean =
     hasExchange(df.queryExecution.executedPlan) ||
       df.queryExecution.toRdd.getNumPartitions >=
         df.sparkSession.sparkContext.defaultParallelism

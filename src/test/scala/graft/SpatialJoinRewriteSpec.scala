@@ -8,9 +8,11 @@ import org.locationtech.jts.io.WKTReader
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import graft.plans.{GraftExtensions, SpatialJoinRewrite}
 import graft.operators.{SpatialJoin, TileProbe, TileProbeExec}
 import graft.functions.GeomFunctions._
+import graft.model.Relation
 
 /** The declarative surface: a plain inner join whose condition is a
   * spatial predicate gets rewritten by the injected optimizer rule
@@ -43,16 +45,32 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def pairs(df: DataFrame): Set[(String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
-  /** Brute-force JTS: every pair whose geometries intersect. */
-  private def bruteForce(src: Seq[(String, String)],
-                         tgt: Seq[(String, String)]): Set[(String, String)] = {
+  /** Brute-force JTS: every pair whose geometries satisfy `relation`. */
+  private def bruteForce(src: Seq[(String, String)], tgt: Seq[(String, String)],
+                         relation: String = "intersects"): Set[(String, String)] = {
     val rd = new WKTReader()
+    val rel = Relation.of(relation)
     val tt = tgt.map { case (id, w) => (id, rd.read(w)) }
     src.flatMap { case (sid, sw) =>
       val sg = rd.read(sw)
-      tt.collect { case (tid, tg) if sg.intersects(tg) => (sid, tid) }
+      tt.collect { case (tid, tg) if rel.eval(sg, tg) => (sid, tid) }
     }.toSet
   }
+
+  /** Just `<prefix>id` and `<prefix>geom`: no envelope columns ever. */
+  private def bareDf(rows: Seq[(String, String)], prefix: String): DataFrame = {
+    import spark.implicits._
+    rows.toDF(prefix + "id", "wkt")
+      .select(col(prefix + "id"), st_geomfromwkt(col("wkt")).as(prefix + "geom"))
+  }
+
+  /** (s_id, t_id) of every row of `df`, by name. */
+  private def idPairs(df: DataFrame): Set[(String, String)] =
+    df.collect().map(r => (r.getAs[String]("s_id"), r.getAs[String]("t_id"))).toSet
+
+  /** Every node of `df`'s executed plan. */
+  private def executedNodes(df: DataFrame) =
+    collect(df.queryExecution.executedPlan) { case p => p }
 
   private def moved(rows: Seq[(String, String)], dx: Double,
                     dy: Double): Seq[(String, String)] = {
@@ -75,12 +93,17 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val expected = bruteForce(srcRows, tgtRows)
     assert(expected.nonEmpty)
     assert(pairs(joined) === expected)
+    // the projection prunes the envelope columns before the rule runs:
+    // it computes them from the geometries and still probes the index
+    val projected = executedNodes(joined)
+    assert(projected.exists(_.isInstanceOf[TileProbeExec]), joined.queryExecution.executedPlan)
+    assert(!projected.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      joined.queryExecution.executedPlan)
     // the join with every column: under the bound the index serves it
     // and nothing explodes
     val whole = src.join(tgt, st_predicate(col("s_geom"), col("t_geom"), "intersects"))
-    assert(whole.collect().map(r => (r.getAs[String]("s_id"), r.getAs[String]("t_id"))).toSet
-      === expected)
-    val executed = collect(whole.queryExecution.executedPlan) { case p => p }
+    assert(idPairs(whole) === expected)
+    val executed = executedNodes(whole)
     assert(executed.exists(_.isInstanceOf[TileProbeExec]), whole.queryExecution.executedPlan)
     assert(!executed.exists(_.isInstanceOf[GenerateExec]), whole.queryExecution.executedPlan)
     assert(pairs(SpatialJoin.relate(unprefixed(src, "s_"), unprefixed(tgt, "t_"),
@@ -149,6 +172,51 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"And(spatial, other) not rewritten:\n$mixedPhys")
     assert(pairs(mixed.select("s_id", "t_id")) ===
       bruteForce(srcRows, tgtRows).filter { case (a, b) => a != b })
+  }
+
+  test("st_predicate join over children that never had envelope columns " +
+       "is rewritten to the tile index and matches brute force") {
+    spark.sparkContext.setLogLevel("WARN")
+    val srcRows = TestGeoms.corpus(seed = 77, n = 60, world = 40)
+    val tgtRows = TestGeoms.corpus(seed = 78, n = 50, world = 40)
+    val whole = bareDf(srcRows, "s_").join(bareDf(tgtRows, "t_"),
+      st_predicate(col("s_geom"), col("t_geom"), "intersects"))
+    val expected = bruteForce(srcRows, tgtRows)
+    assert(expected.nonEmpty)
+    // the envelopes the rule computes stay out of the join's columns
+    assert(whole.columns.toSeq === Seq("s_id", "s_geom", "t_id", "t_geom"))
+    for (joined <- Seq(whole, whole.select("s_id", "t_id"))) {
+      assert(idPairs(joined) === expected)
+      val executed = executedNodes(joined)
+      assert(executed.exists(_.isInstanceOf[TileProbeExec]), joined.queryExecution.executedPlan)
+      assert(!executed.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+        joined.queryExecution.executedPlan)
+    }
+  }
+
+  test("a disjoint st_predicate join is not rewritten, projected or with " +
+       "every column, and matches brute force") {
+    spark.sparkContext.setLogLevel("WARN")
+    val srcRows = TestGeoms.corpus(seed = 79, n = 40, world = 40)
+    val tgtRows = TestGeoms.corpus(seed = 80, n = 30, world = 40)
+    val expected = bruteForce(srcRows, tgtRows, "disjoint")
+    // the index emits only pairs whose MBRs intersect, so a rewrite
+    // would lose the disjoint pairs whose MBRs lie apart
+    val rd = new WKTReader()
+    val mbrApart = expected.count { case (s, t) =>
+      !rd.read(srcRows.toMap.apply(s)).getEnvelopeInternal
+        .intersects(rd.read(tgtRows.toMap.apply(t)).getEnvelopeInternal)
+    }
+    assert(mbrApart > 0)
+    for ((src, tgt) <- Seq(entitiesDf(srcRows, "s_") -> entitiesDf(tgtRows, "t_"),
+                           bareDf(srcRows, "s_") -> bareDf(tgtRows, "t_"))) {
+      val whole = src.join(tgt, st_predicate(col("s_geom"), col("t_geom"), "disjoint"))
+      for (joined <- Seq(whole, whole.select("s_id", "t_id"))) {
+        assert(idPairs(joined) === expected)
+        assert(!executedNodes(joined).exists(_.isInstanceOf[TileProbeExec]),
+          joined.queryExecution.executedPlan)
+      }
+    }
   }
 
   /** The rewritten join's tile-index node. */

@@ -131,12 +131,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     p +: kids.flatMap(walk)
   }
 
-  /** Whether a physical plan (not yet executed) joins: the tile-join
-    * path does, the tile-index path does not. */
-  private def joins(df: DataFrame): Boolean =
-    walk(df.queryExecution.sparkPlan).exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])
-
   /** The descriptions of the Spark jobs `body` starts, in start order:
     * each carries the description set when it started, `null` if none. */
   private def jobsOf(body: => Unit): List[String] = {
@@ -194,90 +188,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(rows.distinct.size === 1, "de9im rows depend on the input layout")
   }
 
-  test("candidatePairs spreads the narrow pairs on s_id only when an input " +
-       "reads as fewer than defaultParallelism partitions") {
-    // the placement rule of the tile-join path: the index path has no
-    // narrow pairs to spread (it spreads the source instead)
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-    val p = spark.sparkContext.defaultParallelism
-    def sIdSpreads(shape: DataFrame => DataFrame): Seq[ShuffleExchangeExec] = {
-      val s = shape(entitiesDf(source))
-      val pairs = SpatialJoin.tileJoinPairs(s, shape(entitiesDf(target)),
-        SpatialJoin.computeTheta(s))
-      pairs.collect()
-      walk(pairs.queryExecution.executedPlan).collect {
-        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM &&
-            (e.outputPartitioning match {
-              case h: HashPartitioning => h.references.map(_.name).toSet == Set("s_id")
-              case _ => false
-            }) => e
-      }
-    }
-    val spread = layouts.map { case (layout, shape) => layout -> sIdSpreads(shape) }.toMap
-    assert(spread("one partition").size === 1)
-    val e = spread("one partition").head
-    assert(e.outputPartitioning.numPartitions === p)
-    assert(!e.output.exists(a => a.name == "s_geom" || a.name == "t_geom"),
-      "the spread must sit before the blob joins")
-    assert(spread("spread").isEmpty)
-    assert(spread("as built").isEmpty)
-  }
-
-  test("the source geometry rides the tile join where theta bounds its " +
-       "replication; a source entity 50 theta across keeps the s_id join-back") {
-    // the tile-join path; the index path never joins a geometry back
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import graft.functions.GeomFunctions.st_im
-    // a 33-vertex circle 5,000 units across in the 100-unit world: θ is
-    // the mean extent, so the circle alone spans over 50 θ on each axis
-    val circle = "giant" -> new GeometryFactory()
-      .createPoint(new Coordinate(50, 50)).buffer(2500).toText
-    // with broadcasts (Spark's default threshold) the exploded target
-    // tiles are broadcast and the riding source geometry never crosses
-    // an exchange; with them off (as a spec sharing this session may
-    // leave them) the shuffled joins move it, and only the s_id
-    // join-back is gone
-    def check(src: Seq[(String, String)], shape: DataFrame => DataFrame,
-              ride: Boolean, broadcast: Boolean): SpatialJoin.Theta = {
-      val s = shape(entitiesDf(src))
-      val theta = SpatialJoin.computeTheta(s)
-      val pairs = SpatialJoin.tileJoinPairs(s, shape(entitiesDf(target)), theta)
-        .withColumn("im", st_im(col("s_geom"), col("t_geom")))
-        .select(col("s_id"), col("t_id"), col("im.de9im"))
-      val got = pairs.collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-      assert(got === bruteForce(src, target))
-      val nodes = walk(pairs.queryExecution.executedPlan)
-      val sIdJoins = nodes.collect {
-        case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
-          .exists(_.references.exists(_.name == "s_id")) => j
-      }
-      val sGeomMoves = nodes.collect {
-        case e: Exchange if e.output.exists(_.name == "s_geom") => e
-      }
-      assert(theta.ride === ride)
-      if (ride) {
-        assert(sIdJoins.isEmpty, "the riding source geometry was joined back on s_id")
-        if (broadcast)
-          assert(sGeomMoves.isEmpty, "an exchange moves the riding source geometry")
-      } else assert(sIdJoins.nonEmpty, "the source geometry must be joined back on s_id")
-      theta
-    }
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val before = spark.conf.getOption(key)
-    try {
-      for ((threshold, broadcast) <- Seq("10MB" -> true, "-1" -> false)) {
-        spark.conf.set(key, threshold)
-        check(source, identity, ride = true, broadcast)
-        check(source, _.repartition(spark.sparkContext.defaultParallelism), ride = true,
-          broadcast)
-        val theta = check(source :+ circle, identity, ride = false, broadcast)
-        assert(5000 / theta.x >= 50 && 5000 / theta.y >= 50, theta)
-      }
-    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** Corpora for the two candidate paths: negative coordinates, MBR
     * edges on multiples of θ, zero-extent and point-only sources, and a
     * target far wider than θ. */
@@ -319,10 +229,13 @@ class SpatialJoinSpec extends AnyFunSuite {
   test("the tile index and the tile join each equal brute-force JTS pair " +
        "for pair under every source and target layout") {
     import graft.functions.GeomFunctions.st_im
-    def ims(pairs: DataFrame): Seq[((String, String), String)] =
-      pairs.withColumn("im", st_im(col("s_geom"), col("t_geom")))
-        .select(col("s_id"), col("t_id"), col("im.de9im")).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toSeq
+    // the pairs with their DE-9IM, and the target rows the run indexed
+    def ims(pairs: DataFrame): (Seq[((String, String), String)], Long) = {
+      val df = pairs.withColumn("im", st_im(col("s_geom"), col("t_geom")))
+        .select(col("s_id"), col("t_id"), col("im.de9im"))
+      (df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toSeq,
+        indexedRows(df))
+    }
     for ((corpus, src, tgt, aligned) <- edgeCorpora) {
       val expected = bruteForce(src, tgt)
       assert(expected.size > 20, corpus)
@@ -331,15 +244,14 @@ class SpatialJoinSpec extends AnyFunSuite {
         val t = tShape(entitiesDf(tgt))
         val theta = SpatialJoin.computeTheta(s)
         assert((theta.x, theta.y) === aligned, corpus)
-        val index = SpatialJoin.candidatePairs(s, t, theta)
-        val tileJoin = SpatialJoin.tileJoinPairs(s, t, theta)
-        assert(!joins(index) && joins(tileJoin))
-        // a bound no target fits: the index path runs its fallback
-        val fallback = SpatialJoin.candidatePairs(s, t, theta, maxBytes = 0)
-        for ((path, pairs) <- Seq("index" -> index, "tile join" -> tileJoin,
-                                  "index fallback" -> fallback)) {
-          val got = ims(pairs)
+        // a bound no target fits: the index path runs its fallback, the
+        // tile join of the narrow rows and both geometry join-backs
+        for ((path, pairs, indexed) <- Seq(
+               ("index", SpatialJoin.candidatePairs(s, t, theta), tgt.size.toLong),
+               ("index fallback", SpatialJoin.candidatePairs(s, t, theta, maxBytes = 0), 0L))) {
+          val (got, rows) = ims(pairs)
           val at = s"$corpus, source $sLayout, target $tLayout, $path"
+          assert(rows === indexed, s"$at: indexed rows")
           assert(got.size === got.toMap.size, s"$at: duplicate pairs")
           assert(got.toMap.keySet === expected.keySet,
             s"$at: missing=${(expected.keySet -- got.toMap.keySet).take(5)} " +
@@ -347,11 +259,14 @@ class SpatialJoinSpec extends AnyFunSuite {
           assert(got.toMap === expected, s"$at: DE-9IM differs")
         }
         // the narrow pairs, by the index and by its fallback
-        for ((path, pairs) <- Seq(
-               "narrow index" -> SpatialJoin.candidatePairsNarrow(s, t, theta),
-               "narrow fallback" -> SpatialJoin.candidatePairsNarrow(s, t, theta, maxBytes = 0))) {
-          val got = pairs.select("s_id", "t_id").collect().map(r => (r.getString(0), r.getString(1)))
+        for ((path, pairs, indexed) <- Seq(
+               ("narrow index", SpatialJoin.candidatePairsNarrow(s, t, theta), tgt.size.toLong),
+               ("narrow fallback", SpatialJoin.candidatePairsNarrow(s, t, theta, maxBytes = 0),
+                 0L))) {
+          val ids = pairs.select("s_id", "t_id")
+          val got = ids.collect().map(r => (r.getString(0), r.getString(1)))
           val at = s"$corpus, source $sLayout, target $tLayout, $path"
+          assert(indexedRows(ids) === indexed, s"$at: indexed rows")
           assert(!pairs.columns.contains("s_geom") && !pairs.columns.contains("t_geom"), at)
           assert(got.length === got.toSet.size, s"$at: duplicate pairs")
           assert(got.toSet === expected.keySet, s"$at: " +
@@ -466,6 +381,8 @@ class SpatialJoinSpec extends AnyFunSuite {
 
   test("computeTheta is one Spark job, equals the DataFrame aggregate of " +
        "the positive extents, and returns the same bits on every call") {
+    // θ reads the envelopes only: the frame without its geometry gives
+    // the same bits
     val s = entitiesDf(source)
     assert(jobsOf(SpatialJoin.computeTheta(s)).size === 1)
     def close(a: Double, e: Double): Boolean = math.abs(a - e) <= 1e-12 * math.abs(e)
@@ -483,12 +400,12 @@ class SpatialJoinSpec extends AnyFunSuite {
         "max" -> (r.getDouble(4), r.getDouble(5)),
         "none" -> (1.0, 1.0))
       expected.foreach { case (g, (ex0, ey0)) =>
-        val calls = Seq.fill(3)(SpatialJoin.computeTheta(df, g))
+        val calls = Seq.fill(3)(SpatialJoin.computeTheta(df, g)) :+
+          SpatialJoin.computeTheta(df.drop("geom"), g)
         val t = calls.head
         assert(close(t.x, ex0) && close(t.y, ey0), s"$g: $t vs ($ex0, $ey0)")
         assert(calls.map(c => (java.lang.Double.doubleToRawLongBits(c.x),
-          java.lang.Double.doubleToRawLongBits(c.y), c.ride)).distinct.size === 1,
-          s"$g: $calls")
+          java.lang.Double.doubleToRawLongBits(c.y))).distinct.size === 1, s"$g: $calls")
       }
     }
   }
